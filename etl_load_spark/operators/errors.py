@@ -8,10 +8,15 @@ job fails, the row is dropped+logged, or routed to an error file, with a
 global error budget.
 
 Spark-first reformulation (SURVEY.md §7.5.2): one plan computes an
-``_error_reason`` column; good/bad are two filters over a single cached
-intermediate (no double computation). The budget check happens at step
-boundary — a documented divergence from the reference's abort-mid-stream,
-which a declarative engine cannot reproduce without serializing execution.
+``_error_reason`` column; good/bad are two filters over it. Nothing is
+cached: each action re-runs the plan, so a failed job pins no memory.
+ROUTE_TO_FILE with an error path takes the bad-row count from its error-file
+write (``records_written``); every other strategy runs ``bad.count()``. The
+FAIL_JOB and ``maxErrorsAllowed`` checks run before the caller writes the
+destination, so a failed check leaves no destination output — a documented
+divergence from the reference's abort-mid-stream. The error file is
+overwritten on every ROUTE_TO_FILE run (header only on a clean run), in
+``sources.writers.write_csv``'s dialect: values untrimmed, NULL as empty.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from etl_load_spark.plans.builder import mapping_column
+from etl_load_spark.sources.writers import write_csv
 from etl_load_spark.spec import ErrorHandling, JobSpec
 
 log = logging.getLogger(__name__)
@@ -39,9 +45,6 @@ class ErrorSplit:
     good: DataFrame         # mapped rows, destination columns
     bad: DataFrame          # original source rows + _error_reason
     error_count: int
-
-    def unpersist(self):
-        self._cached.unpersist()  # type: ignore[attr-defined]
 
 
 def annotate_errors(df: DataFrame, spec: JobSpec,
@@ -78,27 +81,23 @@ def split_errors(df: DataFrame, spec: JobSpec,
     """
     eh: ErrorHandling = spec.error_handling
     base = df.filter(F.expr(spec.filter)) if spec.filter else df
-    annotated = annotate_errors(base, spec, source_is_line).cache()
+    annotated = annotate_errors(base, spec, source_is_line)
     bad = (annotated.filter(F.col(ERROR_COL).isNotNull())
            .select(*df.columns, ERROR_COL))
     good = (annotated.filter(F.col(ERROR_COL).isNull())
             .select(*[F.col(f"__m_{m.dest}").alias(m.dest)
                       for m in spec.mappings]))
-    n_bad = bad.count()
+    if eh.strategy == "ROUTE_TO_FILE" and eh.error_file_path:
+        n_bad = write_csv(bad, {"path": eh.error_file_path})["records_written"]
+    else:
+        n_bad = bad.count()
     if n_bad > 0:
         if eh.strategy == "FAIL_JOB":
-            annotated.unpersist()
             raise JobFailedError(
                 f"{n_bad} row(s) failed mapping and strategy=FAIL_JOB")
         if 0 < eh.max_errors_allowed < n_bad:
-            annotated.unpersist()
             raise JobFailedError(
                 f"{n_bad} errors exceed maxErrorsAllowed={eh.max_errors_allowed}")
-        if eh.strategy == "ROUTE_TO_FILE" and eh.error_file_path:
-            (bad.write.mode("overwrite")
-                .option("header", "true").csv(eh.error_file_path))
         log.warning("job %s: %d row(s) on error path (strategy=%s)",
                     spec.job_id, n_bad, eh.strategy)
-    split = ErrorSplit(good=good, bad=bad, error_count=n_bad)
-    split._cached = annotated  # caller may unpersist after consuming
-    return split
+    return ErrorSplit(good=good, bad=bad, error_count=n_bad)

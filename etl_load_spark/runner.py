@@ -20,6 +20,7 @@ from pyspark.sql import SparkSession
 
 from etl_load_spark.operators.errors import JobFailedError, split_errors
 from etl_load_spark.plans.builder import apply_transformation, build_plan
+from etl_load_spark.session import register_operator_cache
 from etl_load_spark.sources.registry import read_source, write_sink
 from etl_load_spark.spec import JobSpec
 
@@ -129,30 +130,17 @@ def run_job(spark: SparkSession, spec: JobSpec,
         result.error = str(e)
         log.error("job %s failed: %s", spec.job_id, e)
     result.duration_sec = time.monotonic() - t0
-    # the expectations cache is normally consumed by VALIDATE_LOAD; if the
-    # write failed or the spec's explicit steps skip validation, release it
-    # here — a long-running serve/listen session must not pin one cached
-    # DataFrame per failed attempt
-    leftover = getattr(result, "_unpersist_after_validate", None)
-    if leftover is not None:
-        try:
-            leftover.unpersist()
-        except Exception:  # noqa: BLE001 — cleanup must not mask the result
-            pass
-        result._unpersist_after_validate = None
-    # Operator-internal persists (e.g. the LM_SURPRISAL stage's bigram
-    # relation) register with the session cache registry; the job's write
-    # action has materialized by now, so release them — a serve/listen
-    # session must not accumulate one cache per job.
+    # Every persist the job made (the LM_SURPRISAL stage's bigram relation,
+    # the expectations persist) registered with the session cache registry;
+    # release them whether the job completed or failed — a serve/listen
+    # session must not accumulate one cache per job. The registry is per
+    # thread, so concurrent jobs keep their own caches.
     from etl_load_spark.session import release_operator_caches
     release_operator_caches()
     wanted = {s.upper() for s in steps}
     if notify and (("NOTIFY_SUCCESS" in wanted and result.status == "COMPLETED")
                    or ("NOTIFY_FAILURE" in wanted and result.status == "FAILED")):
         notify(result)
-    if result.status == "FAILED" and spec.error_handling.strategy == "FAIL_JOB" \
-            and result.error and notify is None:
-        pass
     return result
 
 
@@ -209,7 +197,7 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
     # can produce different rows on the second run). Self-describing path
     # sinks are read back after the write (as the streaming path does);
     # other sinks persist the output so the write and the validation share
-    # one materialization.
+    # one materialization; run_job's epilogue releases the persist.
     readback = False
     if spec.expectations:
         fmt = spec.destination.type.split("_")[-1].lower()
@@ -224,8 +212,7 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
             and spec.destination.details.get("mode", "overwrite") == "overwrite" \
             and not spec.destination.details.get("overwrite_partitions")
         if not readback:
-            df = df.persist()
-            result._unpersist_after_validate = df
+            df = register_operator_cache(df.persist())
             result._output_df = df
     metrics = write_sink(df, spec.destination)
     result.records_written = metrics.get("records_written", 0)
@@ -243,8 +230,6 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
         if new_mark is not None:
             save_mark(inc["state_path"], inc["column"], new_mark,
                       spec.job_id)
-    if use_error_split:
-        split.unpersist()
 
 
 def _check_expectations(spec: JobSpec, result: JobResult) -> None:
@@ -299,10 +284,6 @@ def _check_expectations(spec: JobSpec, result: JobResult) -> None:
             raise ValueError(f"unknown expectation check: {check!r}")
         aggs.append(F.sum(bad.cast("long")).alias(f"__x{i}"))
     counters = df.agg(*aggs).collect()[0].asDict()
-    cached = getattr(result, "_unpersist_after_validate", None)
-    if cached is not None:
-        cached.unpersist()
-        result._unpersist_after_validate = None
     n_rows = counters["__n_rows"]
     failures = []
     for i, ex in enumerate(spec.expectations):

@@ -8,6 +8,7 @@ partition count) so plans exercised in tests are the plans we'd ship.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -63,7 +64,7 @@ def get_spark(app_name: str = "etl_load_spark", master: str | None = None,
 # ---------------------------------------------------------------------------
 # Operator-internal cache registry.
 #
-# Some operators (bigram_surprisal, the error-split runner path) must persist
+# Some operators (bigram_surprisal, the runner's expectations) must persist
 # an intermediate relation — Catalyst would otherwise re-plan an expensive
 # shared subtree per consumer branch. A CacheManager-registered persist is
 # held by a STRONG reference inside the session (never GC-collected), so an
@@ -71,11 +72,19 @@ def get_spark(app_name: str = "etl_load_spark", master: str | None = None,
 # long-running session. Every operator-internal persist registers here; the
 # materialization points (the job runner's epilogue, bench.py between
 # queries, tests) call release_operator_caches() once the result is
-# materialized. tests/test_session_hygiene.py asserts the contract
+# materialized. The registry is per thread: api.JobRegistry runs one thread
+# per job over one session, and a job's epilogue must release only what its
+# own thread registered. tests/test_session_hygiene.py asserts the contract
 # mechanically for every declared query.
 # ---------------------------------------------------------------------------
 
-_OPERATOR_CACHES: list = []
+
+class _ThreadCaches(threading.local):
+    def __init__(self):
+        self.dfs: list = []
+
+
+_OPERATOR_CACHES = _ThreadCaches()
 
 
 def register_operator_cache(df):
@@ -84,19 +93,19 @@ def register_operator_cache(df):
     Returns ``df`` so call sites can chain: ``register_operator_cache(
     rel.persist())``. Safe to call multiple times per operator invocation.
     """
-    _OPERATOR_CACHES.append(df)
+    _OPERATOR_CACHES.dfs.append(df)
     return df
 
 
 def release_operator_caches() -> int:
-    """Unpersist every registered operator cache; returns how many released.
+    """Unpersist every cache this thread registered; returns how many.
 
     Idempotent and exception-safe: cleanup must never mask the job result,
     and an already-unpersisted or dead-session DataFrame is a no-op.
     """
     n = 0
-    while _OPERATOR_CACHES:
-        df = _OPERATOR_CACHES.pop()
+    while _OPERATOR_CACHES.dfs:
+        df = _OPERATOR_CACHES.dfs.pop()
         try:
             df.unpersist()
             n += 1

@@ -224,4 +224,4 @@ def test_expectations_cache_released_when_validation_skipped(spark, sf_dir,
     })
     r = run_job(spark, spec)
     assert r.status == "COMPLETED", r.error
-    assert getattr(r, "_unpersist_after_validate", None) is None
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -113,16 +113,76 @@ def test_log_only_drops_bad_rows(spark, dirty_csv, tmp_path):
 def test_max_errors_budget_exceeded(spark, dirty_csv, tmp_path):
     res = run_job(spark, JobSpec.from_dict(
         _spec_dict(dirty_csv, str(tmp_path / "out"), "LOG_ONLY",
-                   max_errors=0) | {"errorHandling": {
-                       "strategy": "LOG_ONLY", "maxErrorsAllowed": 0}}))
-    # budget 0 means unlimited in the reference default; use 1-error budget
+                   max_errors=0)))
+    # budget 0 means unlimited in the reference default
+    assert res.status == "COMPLETED", res.error
+    assert res.records_failed == 1
+    # use a 1-error budget
     spec = _spec_dict(dirty_csv, str(tmp_path / "out2"), "LOG_ONLY")
     spec["errorHandling"]["maxErrorsAllowed"] = 1
-    # force two bad rows: make note non-nullable and null on row 2
-    spec["mappings"][3]["isDestNullable"] = False
-    res = run_job(spark, JobSpec.from_dict(spec))
+    res = run_job(spark, JobSpec.from_dict(_two_bad_rows(spec)))
     assert res.status == "FAILED"
     assert "maxErrorsAllowed" in res.error
+
+
+def _two_bad_rows(spec: dict) -> dict:
+    # row 2's empty note becomes a second bad row next to row 3's amount
+    spec["mappings"][3]["isDestNullable"] = False
+    return spec
+
+
+@pytest.mark.parametrize("strategy,max_errors", [
+    ("FAIL_JOB", 0), ("LOG_ONLY", 1), ("ROUTE_TO_FILE", 1)])
+def test_failed_check_leaves_no_destination_files(spark, dirty_csv, tmp_path,
+                                                  strategy, max_errors):
+    """FAIL_JOB and an exceeded maxErrorsAllowed fail the job before the
+    destination write; ROUTE_TO_FILE still writes its error file."""
+    out, errs = str(tmp_path / "out"), str(tmp_path / "errs")
+    res = run_job(spark, JobSpec.from_dict(_two_bad_rows(
+        _spec_dict(dirty_csv, out, strategy, errs, max_errors=max_errors))))
+    assert res.status == "FAILED"
+    assert glob.glob(out + "/part-*") == []
+    bad = _read_csv_rows(errs + "/part-*.csv")
+    if strategy == "ROUTE_TO_FILE":
+        assert sorted(r["id"] for r in bad) == ["2", "3"]
+    else:
+        assert bad == []
+
+
+def test_route_to_file_clean_rerun_empties_error_file(spark, dirty_csv,
+                                                      tmp_path):
+    """The error file is overwritten on every run: a clean re-run must not
+    leave the previous run's error rows behind."""
+    out, errs = str(tmp_path / "out"), str(tmp_path / "errs")
+    res = run_job(spark, JobSpec.from_dict(
+        _spec_dict(dirty_csv, out, "ROUTE_TO_FILE", errs, max_errors=10)))
+    assert res.status == "COMPLETED", res.error
+    assert len(_read_csv_rows(errs + "/part-*.csv")) == 1
+    clean = tmp_path / "clean.csv"
+    clean.write_text("id,amount,active,note\n1,2.5,y,ok\n")
+    res = run_job(spark, JobSpec.from_dict(
+        _spec_dict(str(clean), out, "ROUTE_TO_FILE", errs, max_errors=10)))
+    assert res.status == "COMPLETED", res.error
+    assert res.records_failed == 0 and res.records_written == 1
+    assert glob.glob(errs + "/_SUCCESS")
+    assert _read_csv_rows(errs + "/part-*.csv") == []
+
+
+def test_failed_write_leaves_no_cache(spark, dirty_csv, tmp_path):
+    """A sink failing permanently after the error split must leave nothing
+    in the CacheManager."""
+    from etl_load_spark.sources.registry import register_writer
+
+    def broken(df, details):
+        raise ValueError("schema mismatch")  # permanent: no retry
+
+    register_writer("BROKEN_AFTER_SPLIT", broken)
+    spec = _spec_dict(dirty_csv, str(tmp_path / "out"), "LOG_ONLY",
+                      max_errors=10)
+    spec["destination"] = {"type": "BROKEN_AFTER_SPLIT", "details": {}}
+    res = run_job(spark, JobSpec.from_dict(spec))
+    assert res.status == "FAILED" and "schema mismatch" in res.error
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_unknown_source_type_lists_known(spark, tmp_path):

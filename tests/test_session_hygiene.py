@@ -59,6 +59,32 @@ def test_registry_release_is_idempotent(spark):
     assert _cache_manager(spark).isEmpty()
 
 
+def test_registry_is_per_thread(spark):
+    """Jobs run on their own threads over one session (api.JobRegistry):
+    one thread's release must leave another thread's caches in place."""
+    import threading
+
+    mine = register_operator_cache(
+        spark.range(10).select((F.col("id") * 3).alias("v")).persist())
+    mine.count()
+    released = []
+
+    def other_job():
+        theirs = register_operator_cache(
+            spark.range(10).select((F.col("id") * 5).alias("v")).persist())
+        theirs.count()
+        released.append(release_operator_caches())
+
+    t = threading.Thread(target=other_job)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive() and released == [1]
+    assert not _cache_manager(spark).isEmpty()
+    assert mine.storageLevel.useMemory
+    assert release_operator_caches() == 1
+    assert _cache_manager(spark).isEmpty()
+
+
 def test_lm_surprisal_spec_stage_releases_via_runner(spark, tmp_path,
                                                      sf_dir):
     """The declarative LM_SURPRISAL stage runs inside run_job; the runner's
