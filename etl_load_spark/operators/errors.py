@@ -16,7 +16,7 @@ FAIL_JOB and ``maxErrorsAllowed`` checks run before the caller writes the
 destination, so a failed check leaves no destination output — a documented
 divergence from the reference's abort-mid-stream. The error file is
 overwritten on every ROUTE_TO_FILE run (header only on a clean run), in
-``sources.writers.write_csv``'s dialect: values untrimmed, NULL as empty.
+``sources.writers.write_file``'s CSV dialect: values untrimmed, NULL as empty.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from etl_load_spark.plans.builder import mapping_column
-from etl_load_spark.sources.writers import write_csv
+from etl_load_spark.sources.writers import write_file
 from etl_load_spark.spec import ErrorHandling, JobSpec
 
 log = logging.getLogger(__name__)
@@ -88,7 +88,8 @@ def split_errors(df: DataFrame, spec: JobSpec,
             .select(*[F.col(f"__m_{m.dest}").alias(m.dest)
                       for m in spec.mappings]))
     if eh.strategy == "ROUTE_TO_FILE" and eh.error_file_path:
-        n_bad = write_csv(bad, {"path": eh.error_file_path})["records_written"]
+        n_bad = write_file(bad, {"path": eh.error_file_path},
+                           "csv")["records_written"]
     else:
         n_bad = bad.count()
     if n_bad > 0:

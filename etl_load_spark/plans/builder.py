@@ -69,10 +69,10 @@ def build_plan(spark: SparkSession, spec: JobSpec,
     the source read (the runner passes the HWM-filtered source for
     incremental jobs).
     """
-    from etl_load_spark.sources.registry import read_source
+    from etl_load_spark.sources.registry import file_format, read_source
 
     df = source_df if source_df is not None else read_source(spark, spec.source)
-    source_is_line = spec.source.type.upper() in ("FILE_FIXED", "TEXT")
+    source_is_line = file_format(spec.source.type) == "text"
     if spec.query:
         df.createOrReplaceTempView("src")
         for name, ep in spec.extra_sources.items():

@@ -21,12 +21,11 @@ from pyspark.sql import SparkSession
 from etl_load_spark.operators.errors import JobFailedError, split_errors
 from etl_load_spark.plans.builder import apply_transformation, build_plan
 from etl_load_spark.session import register_operator_cache
-from etl_load_spark.sources.registry import read_source, write_sink
+from etl_load_spark.sources.registry import (file_format, read_source,
+                                             write_sink)
 from etl_load_spark.spec import JobSpec
 
 log = logging.getLogger(__name__)
-
-DEFAULT_STEPS = ["VALIDATE_SOURCE", "LOAD", "VALIDATE_LOAD", "NOTIFY_SUCCESS"]
 
 
 @dataclass
@@ -57,15 +56,12 @@ def run_job(spark: SparkSession, spec: JobSpec,
     """Execute the spec's step list; returns the final JobResult."""
     result = JobResult(job_id=spec.job_id, status="RUNNING")
     t0 = time.monotonic()
-    # None → default; an explicit [] is a deliberate no-op job and runs
-    # nothing (spec.from_dict applies the same distinction)
-    steps = spec.steps if spec.steps is not None else DEFAULT_STEPS
     # tag all actions with a cancellable job group (U6)
     spark.sparkContext.setJobGroup(f"etl_load_{spec.job_id}",
                                    f"etl_load_spark job {spec.job_id}",
                                    interruptOnCancel=True)
     try:
-        for step in steps:
+        for step in spec.steps:
             s = step.upper()
             result.step_log.append(s)
             if s == "VALIDATE_SOURCE":
@@ -103,7 +99,7 @@ def run_job(spark: SparkSession, spec: JobSpec,
                 if dest is None or "path" not in dest.details:
                     raise JobFailedError(
                         "COMPACT_DESTINATION requires a path-based sink")
-                fmt = dest.type.split("_")[-1].lower()
+                fmt = file_format(dest.type)
                 if fmt not in ("parquet", "orc"):
                     raise JobFailedError(
                         f"COMPACT_DESTINATION unsupported for {dest.type}")
@@ -137,7 +133,7 @@ def run_job(spark: SparkSession, spec: JobSpec,
     # thread, so concurrent jobs keep their own caches.
     from etl_load_spark.session import release_operator_caches
     release_operator_caches()
-    wanted = {s.upper() for s in steps}
+    wanted = {s.upper() for s in spec.steps}
     if notify and (("NOTIFY_SUCCESS" in wanted and result.status == "COMPLETED")
                    or ("NOTIFY_FAILURE" in wanted and result.status == "FAILED")):
         notify(result)
@@ -174,7 +170,7 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
     if use_error_split:
         src_df = inc_src if inc_src is not None \
             else read_source(spark, spec.source)
-        source_is_line = spec.source.type.upper() in ("FILE_FIXED", "TEXT")
+        source_is_line = file_format(spec.source.type) == "text"
         split = split_errors(src_df, spec, source_is_line)
         # the transform stage (U1 PYTHON_SCRIPT / SCD2_MERGE) applies to the
         # GOOD rows only — bad rows already routed per the error strategy
@@ -200,7 +196,6 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
     # one materialization; run_job's epilogue releases the persist.
     readback = False
     if spec.expectations:
-        fmt = spec.destination.type.split("_")[-1].lower()
         # append-mode sinks can't be read back batch-scoped (the sink holds
         # PRIOR batches too, and VALIDATE_LOAD's contract is "validate this
         # load") — those use the persist path below instead
@@ -208,7 +203,7 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
         # batch, so a readback would validate historical data against
         # "this load"'s expectations — use the batch-scoped persist path
         readback = "path" in spec.destination.details \
-            and fmt in ("parquet", "orc") \
+            and file_format(spec.destination.type) in ("parquet", "orc") \
             and spec.destination.details.get("mode", "overwrite") == "overwrite" \
             and not spec.destination.details.get("overwrite_partitions")
         if not readback:

@@ -4,6 +4,13 @@ Each reader takes (spark, details-dict) and returns a DataFrame. Details are
 the job-spec endpoint detail keys; schemas come from the mapping list (via
 ``schema`` DDL string) or source inference, mirroring the reference's
 declared-schema-with-ResultSetMetaData-fallback model (§1.2).
+
+Every file format has one reader, ``read_file(spark, d, fmt)``, with ``fmt``
+taken from the registry's ``FILE_FORMATS`` table. Each format's read options
+live in ``_file_options``, and ``read_stream_source`` applies the same
+options to ``spark.readStream``, so a batch and a streaming read of one
+endpoint parse alike. On a source, the details key ``mode`` is the parse
+mode (on a sink it is the save mode).
 """
 
 from __future__ import annotations
@@ -11,81 +18,79 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_parquet(spark: SparkSession, d: dict) -> DataFrame:
-    """Parquet scan. ``merge_schema=True`` enables schema evolution: the
-    schemas of all files union (columns added over time null-fill in old
-    files); the merge cost is per-file footer metadata only, not data."""
-    reader = spark.read
-    if d.get("merge_schema"):
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(d["path"])
+def _file_options(d: dict, fmt: str) -> tuple[dict, str | None]:
+    """Spark read options and schema DDL of one file endpoint — the single
+    place the batch (``read_file``) and the streaming
+    (``read_stream_source``) reads take them from.
 
-
-def read_csv(spark: SparkSession, d: dict) -> DataFrame:
-    """CSV scan (S5: ItemReaderFactory.java:170-224 semantics).
-
-    Default: comma delimiter, header on, UTF-8. With ``all_string=True`` the
-    reference's read-everything-as-string behavior applies
-    (ItemReaderFactory.java:212-221); typing then happens in the mapping cast.
+    - csv (S5: ItemReaderFactory.java:170-224 semantics): comma delimiter,
+      header on, UTF-8. With ``all_string=True`` (the default) the
+      reference's read-everything-as-string behavior applies
+      (ItemReaderFactory.java:212-221); typing then happens in the mapping
+      cast.
+    - csv / json (S6 FILE_JSON, etlModel.java:187): malformed-line handling
+      is the U3 parse-error path. Default PERMISSIVE; with
+      ``corrupt_column`` set the raw unparseable line lands in that column
+      (appended to the declared schema as string) and everything else
+      nulls — the error-routing split then sends those rows to the error
+      sink exactly like cast failures. ``mode`` may also be DROPMALFORMED
+      or FAILFAST.
+    - xml (Spark 4 built-in; the reference's type bridge handles SQLXML,
+      JdbcTypeHandler.java:126-128, and its FLAT_FILE world implies
+      document interchange): one row per ``row_tag`` element (default
+      "row"), optional ``attribute_prefix``. Without a ``schema`` the
+      source samples and infers, an extra pass to avoid at scale.
+    - avro: ``avro_schema`` is an optional reader-schema JSON for evolution.
+    - parquet / orc: ``merge_schema=True`` enables schema evolution: the
+      schemas of all files union (columns added over time null-fill in old
+      files); the merge cost is per-file footer metadata only, not data.
     """
-    reader = (spark.read
-              .option("sep", d.get("delimiter", ","))
-              .option("header", str(d.get("header", True)).lower())
-              .option("encoding", d.get("encoding", "UTF-8"))
-              .option("emptyValue", "")
-              .option("nullValue", d.get("null_value", ""))
-              # RFC-4180 embedded newlines (quoted) need multiLine parsing;
-              # off by default because it disables line-split parallel reads
-              .option("multiLine", str(d.get("multiline", False)).lower())
-              .option("mode", d.get("mode", "PERMISSIVE")))
-    if d.get("corrupt_column"):  # U3 parse-error path, same as FILE_JSON
-        reader = reader.option("columnNameOfCorruptRecord", d["corrupt_column"])
-        if d.get("schema") and d["corrupt_column"] not in d["schema"]:
-            d = dict(d, schema=f"{d['schema']}, {d['corrupt_column']} string")
-    if d.get("schema"):
-        reader = reader.schema(d["schema"])
-    elif not d.get("all_string", True):
-        reader = reader.option("inferSchema", "true")
-    # all_string default: columns arrive as strings (CSV has no types)
-    return reader.csv(d["path"])
-
-
-def read_json(spark: SparkSession, d: dict) -> DataFrame:
-    """Line-delimited JSON (S6 FILE_JSON, etlModel.java:187).
-
-    Malformed-line handling (the U3 parse-error path): default PERMISSIVE;
-    with ``corrupt_column`` set the raw unparseable line lands in that
-    column (appended to the declared schema as string) and everything else
-    nulls — the error-routing split then sends those rows to the error
-    sink exactly like cast failures. ``mode`` may also be DROPMALFORMED or
-    FAILFAST."""
-    reader = spark.read.option("mode", d.get("mode", "PERMISSIVE"))
+    opts = {}
     schema = d.get("schema")
-    cc = d.get("corrupt_column")
-    if cc:
-        reader = reader.option("columnNameOfCorruptRecord", cc)
-        if schema and cc not in schema:
-            schema = f"{schema}, {cc} string"
+    if fmt == "csv":
+        opts.update(sep=d.get("delimiter", ","),
+                    header=str(d.get("header", True)).lower(),
+                    encoding=d.get("encoding", "UTF-8"),
+                    emptyValue="", nullValue=d.get("null_value", ""),
+                    # RFC-4180 embedded newlines (quoted) need multiLine
+                    # parsing; off by default because it disables
+                    # line-split parallel reads
+                    multiLine=str(d.get("multiline", False)).lower())
+        if not schema and not d.get("all_string", True):
+            opts["inferSchema"] = "true"
+    if fmt in ("csv", "json"):
+        opts["mode"] = d.get("mode", "PERMISSIVE")
+        cc = d.get("corrupt_column")
+        if cc:
+            opts["columnNameOfCorruptRecord"] = cc
+            if schema and cc not in schema:
+                schema = f"{schema}, {cc} string"
+    elif fmt == "xml":
+        opts["rowTag"] = d.get("row_tag", "row")
+        if d.get("attribute_prefix"):
+            opts["attributePrefix"] = d["attribute_prefix"]
+    elif fmt == "avro" and d.get("avro_schema"):
+        opts["avroSchema"] = d["avro_schema"]
+    elif fmt in ("parquet", "orc") and d.get("merge_schema"):
+        opts["mergeSchema"] = "true"
+    return opts, schema
+
+
+def read_file(spark: SparkSession, d: dict, fmt: str) -> DataFrame:
+    """Batch scan of a file endpoint in Spark format ``fmt`` (the
+    registry's ``FILE_FORMATS`` value): parquet, orc, csv, json, xml, avro
+    (package-gated: without the external spark-avro module Spark raises its
+    standard error naming the deployment coordinates) or text.
+
+    text is fixed-width / raw lines: one ``value`` column per line (S6
+    FILE_FIXED); field extraction happens in the mapping plan via
+    ``fileColumnPosition`` substrings (plans.builder.mapping_column).
+    """
+    opts, schema = _file_options(d, fmt)
+    reader = spark.read.format(fmt).options(**opts)
     if schema:
         reader = reader.schema(schema)
-    return reader.json(d["path"])
-
-
-def read_orc(spark: SparkSession, d: dict) -> DataFrame:
-    """ORC scan — same columnar pushdown/pruning posture as parquet; here
-    for lakes standardized on ORC (Hive heritage)."""
-    reader = spark.read
-    if d.get("merge_schema"):
-        reader = reader.option("mergeSchema", "true")
-    return reader.orc(d["path"])
-
-
-def read_text(spark: SparkSession, d: dict) -> DataFrame:
-    """Fixed-width / raw text: one ``value`` column per line (S6 FILE_FIXED).
-
-    Field extraction happens in the mapping plan via ``fileColumnPosition``
-    substrings (plans.builder.mapping_column)."""
-    return spark.read.text(d["path"])
+    return reader.load(d["path"])
 
 
 def read_jdbc(spark: SparkSession, d: dict) -> DataFrame:
@@ -130,37 +135,6 @@ def read_rest(spark: SparkSession, d: dict) -> DataFrame:
         with urllib.request.urlopen(d["url"], timeout=d.get("timeout", 30)) as r:
             rows = json.loads(r.read())
     return spark.createDataFrame(rows, schema=d.get("schema"))
-
-
-def read_xml(spark: SparkSession, d: dict) -> DataFrame:
-    """XML scan (Spark 4 built-in xml source — the reference's type bridge
-    handles SQLXML, JdbcTypeHandler.java:126-128, and its FLAT_FILE world
-    implies document interchange): one row per ``row_tag`` element.
-
-    details: path, row_tag (default "row"), schema (DDL — without it the
-    source samples and infers, an extra pass to avoid at scale),
-    attribute_prefix ("_")."""
-    reader = (spark.read.format("xml")
-              .option("rowTag", d.get("row_tag", "row")))
-    if d.get("attribute_prefix"):
-        reader = reader.option("attributePrefix", d["attribute_prefix"])
-    if d.get("schema"):
-        reader = reader.schema(d["schema"])
-    return reader.load(d["path"])
-
-
-def read_avro(spark: SparkSession, d: dict) -> DataFrame:
-    """AVRO scan (the row-oriented interchange format of Kafka/JDBC-era
-    pipelines). The spark-avro module is external — package-gated like
-    KAFKA: without it Spark raises its standard error naming the
-    deployment coordinates.
-
-    details: path, avro_schema (optional reader-schema JSON for
-    evolution)."""
-    reader = spark.read.format("avro")
-    if d.get("avro_schema"):
-        reader = reader.option("avroSchema", d["avro_schema"])
-    return reader.load(d["path"])
 
 
 def read_memory(spark: SparkSession, d: dict) -> DataFrame:
@@ -230,13 +204,6 @@ def read_mongodb(spark: SparkSession, d: dict) -> DataFrame:
     return reader.load()
 
 
-#: file formats that support incremental (streaming) reads
-_STREAM_FILE_FORMATS = {"PARQUET": "parquet", "FILE_PARQUET": "parquet",
-                        "ORC": "orc", "FILE_ORC": "orc",
-                        "CSV": "csv", "FILE_CSV": "csv",
-                        "JSON": "json", "FILE_JSON": "json"}
-
-
 def read_stream_source(spark: SparkSession, type_name: str, d: dict) -> DataFrame:
     """Streaming read of a source endpoint (SURVEY §7 step 7): the same
     endpoint details as the batch readers, executed incrementally — each
@@ -247,27 +214,21 @@ def read_stream_source(spark: SparkSession, type_name: str, d: dict) -> DataFram
     it is inferred ONCE from the existing files via the batch reader
     (driver-side metadata read, not a data scan for parquet/orc).
     """
-    t = type_name.upper()
-    if t == "KAFKA":
+    from etl_load_spark.sources.registry import STREAM_FORMATS, file_format
+    if type_name.upper() == "KAFKA":
         return read_kafka(spark, dict(d, streaming=True))
-    if t not in _STREAM_FILE_FORMATS:
+    fmt = file_format(type_name)
+    if fmt not in STREAM_FORMATS:
         raise ValueError(f"source type {type_name!r} does not support "
-                         f"streaming (known: {sorted(_STREAM_FILE_FORMATS)}, KAFKA)")
-    fmt = _STREAM_FILE_FORMATS[t]
-    reader = spark.readStream.format(fmt)
-    if fmt == "csv":
-        reader = (reader.option("sep", d.get("delimiter", ","))
-                  .option("header", str(d.get("header", True)).lower()))
+                         f"streaming (known: file formats {STREAM_FORMATS}, "
+                         "KAFKA)")
+    opts, schema = _file_options(d, fmt)
+    reader = spark.readStream.format(fmt).options(**opts)
     if d.get("max_files_per_trigger"):
         # bounds micro-batch size — the streaming analogue of chunked loads
         reader = reader.option("maxFilesPerTrigger",
                                int(d["max_files_per_trigger"]))
-    schema = d.get("schema")
-    if schema:
-        reader = reader.schema(schema)
-    else:
-        from etl_load_spark.sources.registry import _READERS
-        reader = reader.schema(_READERS[t](spark, d).schema)
+    reader = reader.schema(schema or read_file(spark, d, fmt).schema)
     path = d["path"]
     import os
     if os.path.isfile(path):

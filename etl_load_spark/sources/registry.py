@@ -6,8 +6,9 @@ DataWriter). Registries are plain dicts; third-party connectors register
 themselves via ``register_reader`` / ``register_writer``.
 
 Covered source types (SURVEY.md §2.1 S1-S9):
-  PARQUET, FILE_CSV, FILE_JSON, FILE_ORC, FILE_XML (Spark 4 built-in),
-  FILE_AVRO (package-gated), FILE_FIXED/TEXT, ORACLE_DB/MSSQL_DB/JDBC,
+  the ``FILE_FORMATS`` file types — PARQUET, ORC, CSV, JSON, XML (Spark 4
+  built-in), AVRO (package-gated), FIXED/TEXT, each with or without the
+  ``FILE_`` prefix — ORACLE_DB/MSSQL_DB/JDBC,
   API_REST (driver-side fetch), KAFKA (batch/stream, package-gated),
   ELASTICSEARCH / MONGODB (connector-format plumbing, package-gated — the
   reference declares both and implements neither), MEMORY (inline rows).
@@ -15,6 +16,7 @@ Covered source types (SURVEY.md §2.1 S1-S9):
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,21 +24,29 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_load_spark.spec import EndpointConfig
 from etl_load_spark.sources import readers, writers
 
+#: endpoint type → Spark file format: the one place a file connector is
+#: named. Each type is accepted with or without the ``FILE_`` prefix and in
+#: any case (``file_format``); both directions and both execution modes
+#: (batch, streaming) resolve through it.
+FILE_FORMATS = {"PARQUET": "parquet", "ORC": "orc", "CSV": "csv",
+                "JSON": "json", "XML": "xml", "AVRO": "avro",
+                "FIXED": "text", "TEXT": "text"}
+
+#: the formats Spark's file-stream source and sink support
+STREAM_FORMATS = ("parquet", "orc", "csv", "json")
+
+
+def file_format(type_name: str) -> str | None:
+    """Spark format of a file endpoint type; None for a non-file type."""
+    return FILE_FORMATS.get(type_name.upper().removeprefix("FILE_"))
+
+
+_FILE_TYPES = [p + t for t in FILE_FORMATS for p in ("", "FILE_")]
+
+
 _READERS: dict[str, Callable[[SparkSession, dict], DataFrame]] = {
-    "PARQUET": readers.read_parquet,
-    "FILE_PARQUET": readers.read_parquet,
-    "FILE_CSV": readers.read_csv,
-    "CSV": readers.read_csv,
-    "FILE_JSON": readers.read_json,
-    "JSON": readers.read_json,
-    "FILE_ORC": readers.read_orc,
-    "ORC": readers.read_orc,
-    "FILE_XML": readers.read_xml,
-    "XML": readers.read_xml,
-    "FILE_AVRO": readers.read_avro,
-    "AVRO": readers.read_avro,
-    "FILE_FIXED": readers.read_text,
-    "TEXT": readers.read_text,
+    **{t: partial(readers.read_file, fmt=file_format(t))
+       for t in _FILE_TYPES},
     "ORACLE_DB": readers.read_jdbc,
     "MSSQL_DB": readers.read_jdbc,
     "JDBC": readers.read_jdbc,
@@ -48,18 +58,8 @@ _READERS: dict[str, Callable[[SparkSession, dict], DataFrame]] = {
 }
 
 _WRITERS: dict[str, Callable[[DataFrame, dict], dict]] = {
-    "PARQUET": writers.write_parquet,
-    "FILE_PARQUET": writers.write_parquet,
-    "FILE_CSV": writers.write_csv,
-    "CSV": writers.write_csv,
-    "FILE_JSON": writers.write_json,
-    "JSON": writers.write_json,
-    "FILE_ORC": writers.write_orc,
-    "ORC": writers.write_orc,
-    "FILE_XML": writers.write_xml,
-    "XML": writers.write_xml,
-    "FILE_AVRO": writers.write_avro,
-    "AVRO": writers.write_avro,
+    **{t: partial(writers.write_file, fmt=file_format(t))
+       for t in _FILE_TYPES},
     "ORACLE_DB": writers.write_jdbc,
     "MSSQL_DB": writers.write_jdbc,
     "JDBC": writers.write_jdbc,

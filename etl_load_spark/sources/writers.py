@@ -3,6 +3,12 @@
 Each writer takes (df, details-dict), performs the write action, and returns
 a small metrics dict (records_written). Row counts come from ``df.observe``
 — no second scan (SURVEY.md §4, count-query row).
+
+Every file format has one writer, ``write_file(df, d, fmt)``, with ``fmt``
+taken from the registry's ``FILE_FORMATS`` table: layout, save mode and
+file options apply to every format alike, and only the CSV, XML and Avro
+dialects differ (``_dialect_options``). On a sink, the details key ``mode``
+is the save mode (on a source it is the parse mode).
 """
 
 from __future__ import annotations
@@ -54,9 +60,43 @@ def _apply_layout(df: DataFrame, d: dict) -> DataFrame:
     return df
 
 
-def write_parquet(df: DataFrame, d: dict) -> dict:
-    """Parquet sink. Layout knobs for scale:
+def _dialect_options(d: dict, fmt: str) -> dict:
+    """The per-format part of a file write: the CSV, XML and Avro dialects.
 
+    - csv (S8): header from dest names, RFC-4180 quoting, null→empty —
+      Spark's CSV writer natively matches ETLCoreCsvFileWriter.java:46-185.
+    - xml (Spark 4 built-in): one ``row_tag`` element per row under
+      ``root_tag``. Null columns are omitted (standard XML absent-element
+      semantics — the read side restores them as NULL against a schema).
+    - avro: optional ``avro_schema`` (writer schema JSON).
+    """
+    if fmt == "csv":
+        return {"header": str(d.get("header", True)).lower(),
+                "sep": d.get("delimiter", ","),
+                "encoding": d.get("encoding", "UTF-8"),
+                "emptyValue": "", "nullValue": "",
+                # the reference writer never trims values (only quotes
+                # them, ETLCoreCsvFileWriter.java:174-185); Spark's writer
+                # trims unquoted whitespace unless told otherwise
+                "ignoreLeadingWhiteSpace": "false",
+                "ignoreTrailingWhiteSpace": "false"}
+    if fmt == "xml":
+        return {"rootTag": d.get("root_tag", "rows"),
+                "rowTag": d.get("row_tag", "row")}
+    if fmt == "avro" and d.get("avro_schema"):
+        return {"avroSchema": d["avro_schema"]}
+    return {}
+
+
+def write_file(df: DataFrame, d: dict, fmt: str) -> dict:
+    """File sink in Spark format ``fmt`` (the registry's ``FILE_FORMATS``
+    value). Avro is package-gated on the external spark-avro module (its
+    absence raises Spark's standard data-source error naming it); text
+    needs a single string column.
+
+    Every format takes the same layout knobs (``_apply_layout`` plus):
+
+    - ``mode``: the save mode (default overwrite).
     - ``partition_by``: hive-style directory partitioning (partition
       pruning on read).
     - ``bucket_by`` (+ ``n_buckets``, optional ``sort_by``, requires
@@ -70,97 +110,31 @@ def write_parquet(df: DataFrame, d: dict) -> dict:
       every other partition untouched. The idempotent daily-reload pattern
       at 100 TB: re-running a day's load rewrites that day's directories,
       never the whole table (static overwrite mode would truncate it all).
+    - ``compression``: the format's codec (e.g. snappy, gzip).
+    - ``max_records_per_file``: bounds output file size at scale (a
+      partition writing 10 GB rolls into N files instead of one
+      unsplittable-to-list monster).
     """
     df, obs = _observed(_apply_layout(df, d))
-    w = df.write.mode(d.get("mode", "overwrite"))
+    w = (df.write.format(fmt).mode(d.get("mode", "overwrite"))
+         .options(**_dialect_options(d, fmt)))
     if d.get("overwrite_partitions"):
         w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if d.get("compression"):
         w = w.option("compression", d["compression"])
     if d.get("max_records_per_file"):
-        # bounds output file size at scale (a partition writing 10 GB rolls
-        # into N files instead of one unsplittable-to-list monster)
         w = w.option("maxRecordsPerFile", int(d["max_records_per_file"]))
+    if d.get("partition_by"):
+        w = w.partitionBy(*d["partition_by"])
     if d.get("bucket_by"):
         w = w.bucketBy(int(d.get("n_buckets", 8)), *d["bucket_by"])
         if d.get("sort_by"):
             w = w.sortBy(*d["sort_by"])
         if d.get("path"):
             w = w.option("path", d["path"])
-        w.format("parquet").saveAsTable(d["table"])
-        return _finish(obs)
-    if d.get("partition_by"):
-        w = w.partitionBy(*d["partition_by"])
-    w.parquet(d["path"])
-    return _finish(obs)
-
-
-def write_orc(df: DataFrame, d: dict) -> dict:
-    """ORC sink: same layout knobs as parquet (partition_by /
-    max_records_per_file / compression / overwrite_partitions)."""
-    df, obs = _observed(_apply_layout(df, d))
-    w = df.write.mode(d.get("mode", "overwrite"))
-    if d.get("overwrite_partitions"):
-        w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    if d.get("compression"):
-        w = w.option("compression", d["compression"])
-    if d.get("max_records_per_file"):
-        w = w.option("maxRecordsPerFile", int(d["max_records_per_file"]))
-    if d.get("partition_by"):
-        w = w.partitionBy(*d["partition_by"])
-    w.orc(d["path"])
-    return _finish(obs)
-
-
-def write_csv(df: DataFrame, d: dict) -> dict:
-    """CSV sink (S8): header from dest names, RFC-4180 quoting, null→empty —
-    Spark's CSV writer natively matches ETLCoreCsvFileWriter.java:46-185."""
-    df, obs = _observed(_apply_layout(df, d))
-    (df.write.mode(d.get("mode", "overwrite"))
-       .option("header", str(d.get("header", True)).lower())
-       .option("sep", d.get("delimiter", ","))
-       .option("encoding", d.get("encoding", "UTF-8"))
-       .option("emptyValue", "")
-       .option("nullValue", "")
-       # the reference writer never trims values (only quotes them,
-       # ETLCoreCsvFileWriter.java:174-185); Spark's writer trims unquoted
-       # whitespace unless told otherwise
-       .option("ignoreLeadingWhiteSpace", "false")
-       .option("ignoreTrailingWhiteSpace", "false")
-       .csv(d["path"]))
-    return _finish(obs)
-
-
-def write_json(df: DataFrame, d: dict) -> dict:
-    df, obs = _observed(_apply_layout(df, d))
-    df.write.mode(d.get("mode", "overwrite")).json(d["path"])
-    return _finish(obs)
-
-
-def write_xml(df: DataFrame, d: dict) -> dict:
-    """XML sink (Spark 4 built-in): one ``row_tag`` element per row under
-    ``root_tag``. Null columns are omitted (standard XML absent-element
-    semantics — the read side restores them as NULL against a schema)."""
-    df, obs = _observed(_apply_layout(df, d))
-    (df.write.mode(d.get("mode", "overwrite")).format("xml")
-     .option("rootTag", d.get("root_tag", "rows"))
-     .option("rowTag", d.get("row_tag", "row"))
-     .save(d["path"]))
-    return _finish(obs)
-
-
-def write_avro(df: DataFrame, d: dict) -> dict:
-    """AVRO sink — package-gated on the external spark-avro module (its
-    absence raises Spark's standard data-source error naming it).
-
-    details: path, compression (snappy default per Spark), avro_schema."""
-    df, obs = _observed(_apply_layout(df, d))
-    wr = df.write.mode(d.get("mode", "overwrite")).format("avro")
-    if d.get("compression"):
-        wr = wr.option("compression", d["compression"])
-    if d.get("avro_schema"):
-        wr = wr.option("avroSchema", d["avro_schema"])
-    wr.save(d["path"])
+        w.saveAsTable(d["table"])
+    else:
+        w.save(d["path"])
     return _finish(obs)
 
 
@@ -390,11 +364,8 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
     return upsert
 
 
-_STREAM_SINK_FORMATS = {"PARQUET": "parquet", "FILE_PARQUET": "parquet",
-                        "ORC": "orc", "FILE_ORC": "orc",
-                        "CSV": "csv", "FILE_CSV": "csv",
-                        "JSON": "json", "FILE_JSON": "json",
-                        "MEMORY": "memory", "KAFKA": "kafka"}
+#: the non-file streaming sinks; file sinks resolve through the registry
+_STREAM_SINK_FORMATS = {"MEMORY": "memory", "KAFKA": "kafka"}
 
 
 def write_stream_sink(df: DataFrame, type_name: str, d: dict,
@@ -411,13 +382,15 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
     for update-mode file materialization (the runner derives it from the
     rollup stage; a raw SQL aggregate sets destination.details.merge_keys).
     """
+    from etl_load_spark.sources.registry import STREAM_FORMATS, file_format
     t = type_name.upper()
-    if t not in _STREAM_SINK_FORMATS:
+    fmt = _STREAM_SINK_FORMATS.get(t) or file_format(t)
+    if fmt not in (*STREAM_FORMATS, *_STREAM_SINK_FORMATS.values()):
         raise ValueError(f"destination type {type_name!r} does not support "
-                         f"streaming (known: {sorted(_STREAM_SINK_FORMATS)})")
+                         f"streaming (known: file formats {STREAM_FORMATS}, "
+                         f"{sorted(_STREAM_SINK_FORMATS)})")
     mode = streaming.get("output_mode",
                          streaming.get("outputMode", "append"))
-    fmt = _STREAM_SINK_FORMATS[t]
     if mode == "update" and fmt in ("csv", "json"):
         # the upsert merge reads the materialization back each batch;
         # a non-self-describing format cannot round-trip the rollup

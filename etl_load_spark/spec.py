@@ -109,7 +109,6 @@ class JobSpec:
     error_handling: ErrorHandling = field(default_factory=ErrorHandling)
     transformation: Transformation = field(default_factory=Transformation)
     steps: list[str] = field(default_factory=lambda: ["LOAD"])
-    batch_size: int = 10000
     order_by: list[str] = field(default_factory=list)
     #: streaming mode (SURVEY §7 step 7): same spec semantics, incremental
     #: execution. Keys: checkpoint (required), trigger
@@ -187,7 +186,6 @@ class JobSpec:
             steps=(d.get("steps") if d.get("steps") is not None else (
                 ["LOAD", "VALIDATE_LOAD"] if d.get("expectations")
                 else ["LOAD"])),
-            batch_size=d.get("batchSize", d.get("batch_size", 10000)),
             order_by=d.get("orderBy", d.get("order_by", [])),
             streaming=d.get("streaming", {}) or {},
             expectations=d.get("expectations", []) or [],

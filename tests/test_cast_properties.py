@@ -126,14 +126,14 @@ def test_csv_quote_escape_roundtrip(spark, tmp_root, values):
     null-as-empty contract, ETLCoreCsvFileWriter.java:161-171) and read
     back as null; everything else must round-trip exactly."""
     import tempfile
-    from etl_load_spark.sources.readers import read_csv
-    from etl_load_spark.sources.writers import write_csv
+    from etl_load_spark.sources.readers import read_file
+    from etl_load_spark.sources.writers import write_file
 
     path = tempfile.mkdtemp(dir=tmp_root, prefix="csvprop")
     rows = [(i, v) for i, v in enumerate(values)] + [(len(values), None)]
     df = spark.createDataFrame(rows, "id bigint, v string")
-    write_csv(df, {"path": path})
-    back = read_csv(spark, {"path": path, "multiline": True})
+    write_file(df, {"path": path}, "csv")
+    back = read_file(spark, {"path": path, "multiline": True}, "csv")
     got = {int(r["id"]): r["v"] for r in back.collect()}
     assert len(got) == len(rows)
     for i, v in rows:

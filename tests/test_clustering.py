@@ -6,7 +6,7 @@ import glob
 
 import pyarrow.parquet as pq
 
-from etl_load_spark.sources.writers import write_parquet
+from etl_load_spark.sources.writers import write_file
 
 
 def _avg_range_fraction(path: str, col: str, global_span: float) -> float:
@@ -35,9 +35,9 @@ def test_zorder_tightens_both_columns(spark, tmp_path):
                       "id AS payload"))
     naive = str(tmp_path / "naive")
     zord = str(tmp_path / "zord")
-    write_parquet(df, {"path": naive, "repartition": 16})
-    write_parquet(df, {"path": zord, "repartition": 16,
-                       "zorder_by": ["x", "y"]})
+    write_file(df, {"path": naive, "repartition": 16}, "parquet")
+    write_file(df, {"path": zord, "repartition": 16,
+                    "zorder_by": ["x", "y"]}, "parquet")
 
     span = float(side - 1)
     naive_x = _avg_range_fraction(naive, "x", span)
@@ -64,7 +64,8 @@ def test_single_key_range_by_still_tighter_on_its_key(spark, tmp_path):
           .selectExpr(f"CAST(id % {side} AS LONG) AS x",
                       f"CAST(CAST(id / {side} AS LONG) % {side} AS LONG) AS y"))
     rng = str(tmp_path / "ranged")
-    write_parquet(df, {"path": rng, "repartition": 16, "range_by": ["x"]})
+    write_file(df, {"path": rng, "repartition": 16, "range_by": ["x"]},
+               "parquet")
     span = float(side - 1)
     assert _avg_range_fraction(rng, "x", span) < 0.15
     assert _avg_range_fraction(rng, "y", span) > 0.9
@@ -83,9 +84,9 @@ def test_rank_zorder_handles_skew(spark, tmp_path):
               "     ELSE 10 + (id * 37) % 9990 END AS LONG) AS x",
               "CAST((id * 13) % 200 AS LONG) AS y"))
     ranked = str(tmp_path / "ranked")
-    write_parquet(df, {"path": ranked, "repartition": 16,
-                       "zorder_by": ["x", "y"], "zorder_bits": 6,
-                       "zorder_method": "rank"})
+    write_file(df, {"path": ranked, "repartition": 16,
+                    "zorder_by": ["x", "y"], "zorder_bits": 6,
+                    "zorder_method": "rank"}, "parquet")
     # y is uniform [0,200): rank-coded files must still cluster it
     assert _avg_range_fraction(ranked, "y", 199.0) < 0.6
     assert spark.read.parquet(ranked).count() == n

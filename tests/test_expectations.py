@@ -87,20 +87,20 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     """overwrite_partitions: a second load touching only one partition
     must replace that partition and leave the others intact — never the
     static-overwrite truncate-everything behavior."""
-    from etl_load_spark.sources.writers import write_parquet
+    from etl_load_spark.sources.writers import write_file
 
     path = str(tmp_path / "daily")
     full = spark.createDataFrame(
         [("2024-01-01", 1, "a"), ("2024-01-01", 2, "b"),
          ("2024-01-02", 3, "c")], "day string, id int, v string")
-    write_parquet(full, {"path": path, "partition_by": ["day"],
-                         "overwrite_partitions": True})
+    write_file(full, {"path": path, "partition_by": ["day"],
+                      "overwrite_partitions": True}, "parquet")
     # reload ONLY day 2 with corrected rows
     fix = spark.createDataFrame(
         [("2024-01-02", 3, "c2"), ("2024-01-02", 4, "d")],
         "day string, id int, v string")
-    write_parquet(fix, {"path": path, "partition_by": ["day"],
-                        "overwrite_partitions": True})
+    write_file(fix, {"path": path, "partition_by": ["day"],
+                     "overwrite_partitions": True}, "parquet")
     rows = sorted((str(r.day), r.id, r.v)
                   for r in spark.read.parquet(path).collect())
     assert rows == [("2024-01-01", 1, "a"), ("2024-01-01", 2, "b"),
@@ -110,16 +110,16 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
 def test_static_overwrite_truncates_other_partitions(spark, tmp_path):
     """Contrast pin: WITHOUT overwrite_partitions, overwrite mode replaces
     the whole dataset (documents why the knob exists)."""
-    from etl_load_spark.sources.writers import write_parquet
+    from etl_load_spark.sources.writers import write_file
 
     path = str(tmp_path / "daily_static")
     full = spark.createDataFrame(
         [("2024-01-01", 1, "a"), ("2024-01-02", 3, "c")],
         "day string, id int, v string")
-    write_parquet(full, {"path": path, "partition_by": ["day"]})
+    write_file(full, {"path": path, "partition_by": ["day"]}, "parquet")
     fix = spark.createDataFrame(
         [("2024-01-02", 3, "c2")], "day string, id int, v string")
-    write_parquet(fix, {"path": path, "partition_by": ["day"]})
+    write_file(fix, {"path": path, "partition_by": ["day"]}, "parquet")
     rows = sorted((str(r.day), r.id, r.v)
                   for r in spark.read.parquet(path).collect())
     assert rows == [("2024-01-02", 3, "c2")]

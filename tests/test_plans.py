@@ -291,10 +291,11 @@ def test_partitioned_layout_prunes_partitions(spark, sf_dir, tmp_path):
     parquet scan (directories never listed), not a post-scan Filter over
     all data."""
     from etl_load_spark.session import read_table
-    from etl_load_spark.sources.writers import write_parquet
+    from etl_load_spark.sources.writers import write_file
     path = str(tmp_path / "events_by_type")
     ev = read_table(spark, sf_dir, "events")
-    write_parquet(ev, {"path": path, "partition_by": ["event_type"]})
+    write_file(ev, {"path": path, "partition_by": ["event_type"]},
+               "parquet")
     one = spark.read.parquet(path).filter("event_type = 'click'")
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
@@ -308,10 +309,11 @@ def test_dynamic_partition_pruning_on_dim_filter(spark, sf_dir, tmp_path):
     of the fact are read — the DPP pattern that keeps a 100 TB
     date-partitioned fact from full-scanning on every dim-filtered join."""
     from etl_load_spark.session import read_table
-    from etl_load_spark.sources.writers import write_parquet
+    from etl_load_spark.sources.writers import write_file
     path = str(tmp_path / "orders_by_pri")
     o = read_table(spark, sf_dir, "orders")
-    write_parquet(o, {"path": path, "partition_by": ["o_orderpriority"]})
+    write_file(o, {"path": path, "partition_by": ["o_orderpriority"]},
+               "parquet")
     fact = spark.read.parquet(path)
     dim = (o.select("o_orderpriority").distinct()
            .filter("o_orderpriority like '1%'"))

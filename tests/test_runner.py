@@ -248,10 +248,11 @@ def test_range_by_layout_writes_disjoint_files(spark, sf_dir, tmp_path):
     """range_by sink layout: output files hold disjoint key ranges (the
     data-skipping clustering layout; readers prune files by footer stats)."""
     from etl_load_spark.session import read_table
-    from etl_load_spark.sources.writers import write_parquet
+    from etl_load_spark.sources.writers import write_file
     out = str(tmp_path / "ranged")
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    write_parquet(o, {"path": out, "range_by": ["o_orderkey"], "repartition": 4})
+    write_file(o, {"path": out, "range_by": ["o_orderkey"], "repartition": 4},
+               "parquet")
     import glob
     from pyspark.sql import functions as F
     files = sorted(glob.glob(out + "/part-*.parquet"))
@@ -272,14 +273,14 @@ def test_range_by_layout_writes_disjoint_files(spark, sf_dir, tmp_path):
 def test_json_corrupt_record_routing(spark, tmp_path):
     """Malformed JSONL lines land in the corrupt column (U3 parse-error
     path) and split cleanly from good rows; DROPMALFORMED silently drops."""
-    from etl_load_spark.sources.readers import read_json
+    from etl_load_spark.sources.readers import read_file
     p = tmp_path / "in.jsonl"
     p.write_text('{"id": 1, "v": "a"}\n'
                  '{oops not json\n'
                  '{"id": 2, "v": "b"}\n'
                  '{"id": "NaNope", "v": 3}\n')
-    df = read_json(spark, {"path": str(p), "schema": "id bigint, v string",
-                           "corrupt_column": "_corrupt"})
+    df = read_file(spark, {"path": str(p), "schema": "id bigint, v string",
+                           "corrupt_column": "_corrupt"}, "json")
     rows = df.collect()
     assert len(rows) == 4
     bad = [r for r in rows if r["_corrupt"] is not None]
@@ -291,20 +292,20 @@ def test_json_corrupt_record_routing(spark, tmp_path):
     # DROPMALFORMED removes unparseable lines only; the type-mismatched row
     # survives with the bad field nulled (PERMISSIVE + corrupt_column is the
     # mode that catches both, which is why the engine defaults to it)
-    dropped = read_json(spark, {"path": str(p), "schema": "id bigint, v string",
-                                "mode": "DROPMALFORMED"})
+    dropped = read_file(spark, {"path": str(p), "schema": "id bigint, v string",
+                                "mode": "DROPMALFORMED"}, "json")
     assert dropped.count() == 3
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     """merge_schema unions file schemas; columns absent in old files null."""
-    from etl_load_spark.sources.readers import read_parquet
+    from etl_load_spark.sources.readers import read_file
     out = str(tmp_path / "evolving")
     spark.createDataFrame([(1, "a")], "id bigint, v string") \
         .write.mode("append").parquet(out)
     spark.createDataFrame([(2, "b", 9.5)], "id bigint, v string, score double") \
         .write.mode("append").parquet(out)
-    df = read_parquet(spark, {"path": out, "merge_schema": True})
+    df = read_file(spark, {"path": out, "merge_schema": True}, "parquet")
     assert set(df.columns) == {"id", "v", "score"}
     rows = {r.id: r for r in df.collect()}
     assert rows[1].score is None and rows[2].score == 9.5
@@ -312,12 +313,12 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
 
 def test_max_records_per_file(spark, sf_dir, tmp_path):
     from etl_load_spark.session import read_table
-    from etl_load_spark.sources.writers import write_parquet
+    from etl_load_spark.sources.writers import write_file
     import glob
     out = str(tmp_path / "capped")
     n = read_table(spark, sf_dir, "orders").count()
-    write_parquet(read_table(spark, sf_dir, "orders").coalesce(1),
-                  {"path": out, "max_records_per_file": 500})
+    write_file(read_table(spark, sf_dir, "orders").coalesce(1),
+               {"path": out, "max_records_per_file": 500}, "parquet")
     files = glob.glob(out + "/part-*.parquet")
     assert len(files) >= n // 500
     assert spark.read.parquet(out).count() == n
@@ -326,11 +327,12 @@ def test_max_records_per_file(spark, sf_dir, tmp_path):
 def test_csv_corrupt_record_routing(spark, tmp_path):
     """CSV malformed rows (wrong column count / bad types) land in the
     corrupt column, mirroring the FILE_JSON U3 path."""
-    from etl_load_spark.sources.readers import read_csv
+    from etl_load_spark.sources.readers import read_file
     p = tmp_path / "in.csv"
     p.write_text("id,v\n1,a\nnot_a_number,b\n2,c\n")
-    df = read_csv(spark, {"path": str(p), "schema": "id bigint, v string",
-                          "corrupt_column": "_corrupt", "all_string": False})
+    df = read_file(spark, {"path": str(p), "schema": "id bigint, v string",
+                           "corrupt_column": "_corrupt", "all_string": False},
+                   "csv")
     rows = df.collect()
     bad = [r for r in rows if r["_corrupt"] is not None]
     good = [(r.id, r.v) for r in rows if r["_corrupt"] is None]

@@ -668,3 +668,30 @@ def test_update_mode_narrower_merge_keys_rejected(spark, tmp_path):
     }))
     assert r.status == "FAILED"
     assert "narrower" in (r.error or "")
+
+
+def test_streaming_csv_source_parses_like_batch(spark, tmp_path):
+    """A streaming CSV source takes the batch reader's options: with
+    ``null_value: "NA"`` the stream lands NULL exactly where the batch read
+    of the same file does."""
+    from etl_load_spark.sources.registry import read_source
+    from etl_load_spark.spec import EndpointConfig
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "in.csv").write_text("k,v\n1,a\n2,NA\n3,\n")
+    details = {"path": str(src), "schema": "k bigint, v string",
+               "null_value": "NA"}
+    dest = str(tmp_path / "dest")
+    r = run_job(spark, JobSpec.from_dict({
+        "job_id": "stream-csv-na",
+        "source": {"type": "FILE_CSV", "details": details},
+        "destination": {"type": "PARQUET", "details": {"path": dest}},
+        "streaming": {"checkpoint": str(tmp_path / "ckpt")},
+    }))
+    assert r.status == "COMPLETED", r.error
+    batch = read_source(spark, EndpointConfig(type="FILE_CSV",
+                                              details=details))
+    want = sorted(tuple(x) for x in batch.collect())
+    assert want[1] == (2, None)
+    assert sorted(tuple(x) for x in spark.read.parquet(dest).collect()) \
+        == want
