@@ -14,6 +14,12 @@ from pyspark.sql import SparkSession
 
 # At 100 TB these would come from the cluster profile; locally they are sized
 # for local[N] single-JVM runs (see SURVEY.md §6 / pyspark guide).
+# spark.sql.shuffle.partitions sizes batch shuffles only; AQE coalesces them
+# to the data. Streaming state is sized apart, by
+# sources/writers.start_stream (one state partition per core on a new
+# checkpoint): a stateful shuffle keeps the count its checkpoint recorded
+# and AQE never coalesces it, so this default would make every micro-batch
+# run 32 state-store tasks and commits however few rows it holds.
 _DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",

@@ -9,13 +9,18 @@ taken from the registry's ``FILE_FORMATS`` table: layout, save mode and
 file options apply to every format alike, and only the CSV, XML and Avro
 dialects differ (``_dialect_options``). On a sink, the details key ``mode``
 is the save mode (on a source it is the parse mode).
+
+Every streaming query starts through ``start_stream``, which sizes a new
+checkpoint's state to the cores.
 """
 
 from __future__ import annotations
 
+import threading
 import uuid
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def _observed(df: DataFrame):
@@ -206,14 +211,14 @@ def write_kafka(df: DataFrame, d: dict) -> dict:
     Batch df.write or streaming df.writeStream (checkpoint required for
     exactly-once). Requires the spark-sql-kafka package on the classpath.
     """
-    from pyspark.sql import functions as F
     payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
     if df.isStreaming:
-        q = (payload.writeStream.format("kafka")
-             .option("kafka.bootstrap.servers", d["bootstrap_servers"])
-             .option("topic", d["topic"])
-             .option("checkpointLocation", d["checkpoint"])
-             .start())
+        q = start_stream(payload.writeStream.format("kafka")
+                         .option("kafka.bootstrap.servers",
+                                 d["bootstrap_servers"])
+                         .option("topic", d["topic"])
+                         .option("checkpointLocation", d["checkpoint"]),
+                         df.sparkSession)
         return {"streaming_query": q.id}
     (payload.write.format("kafka")
      .option("kafka.bootstrap.servers", d["bootstrap_servers"])
@@ -289,6 +294,19 @@ def write_mongodb(df: DataFrame, d: dict) -> dict:
     return _finish(obs)
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop FileSystem.
+
+    Cheaper and quieter than catching ``PATH_NOT_FOUND`` from a read: the
+    failed analysis of such a read makes Spark's observation listener log
+    a long ERROR stack trace.
+    """
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return p.getFileSystem(conf).exists(p)
+
+
 def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
                          key_cols: list[str]):
     """Build the foreachBatch upsert for update-mode streaming rollups.
@@ -323,14 +341,16 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
 
     from functools import reduce
 
-    from pyspark.errors import AnalysisException
-
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
+        # the touched partition values, which the merge needs anyway,
+        # double as the empty-batch check
+        touched = [r[0] for r in
+                   batch_df.select(partition_col).distinct().collect()]
+        if not touched:
             return
         spark = batch_df.sparkSession
         out = batch_df
-        try:
+        if path_exists(spark, path):
             # read back under the BATCH's schema (ADVICE r12): headerless
             # CSV would otherwise come back as _c0.. (unionByName fails on
             # the second micro-batch) and JSON would re-infer types (e.g.
@@ -338,11 +358,6 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
             # for self-describing parquet/orc the schema is a no-op.
             existing = (spark.read.schema(batch_df.schema)
                         .format(fmt).load(path))
-        except AnalysisException:
-            existing = None  # first batch: nothing materialized yet
-        if existing is not None:
-            touched = [r[0] for r in
-                       batch_df.select(partition_col).distinct().collect()]
             non_null = [t for t in touched if t is not None]
             pcol = F.col(partition_col)
             pred = pcol.isin(non_null) if non_null else F.lit(False)
@@ -362,6 +377,40 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
          .save(path))
 
     return upsert
+
+
+#: held while ``start_stream`` has the session's partition count lowered
+_START_LOCK = threading.Lock()
+
+
+def start_stream(writer: DataStreamWriter,
+                 spark: SparkSession) -> StreamingQuery:
+    """Start a streaming query; a new checkpoint gets one state partition
+    per core.
+
+    A stateful operator's shuffle keeps the partition count its checkpoint
+    was created with, and AQE never coalesces it. Under the batch default
+    (``spark.sql.shuffle.partitions``) every micro-batch of a small stream
+    would run that many state-store tasks and commits. A new checkpoint
+    therefore takes ``min(spark.sql.shuffle.partitions,
+    defaultParallelism)``; a checkpoint that exists resumes with the count
+    its offset log records, which Spark restores over the session value.
+
+    The query clones the session inside ``start()``, so the lowered value
+    is set only for the length of that call, and restored after it. The
+    lock keeps two concurrent starts from restoring each other's value.
+    A batch job that plans on another thread during the call sees the
+    lowered value too, and shuffles into at most one partition per core.
+    """
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(min(int(prev),
+                                    spark.sparkContext.defaultParallelism)))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, prev)
 
 
 #: the non-file streaming sinks; file sinks resolve through the registry
@@ -448,29 +497,21 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
             raise ValueError(
                 f"update-mode merge_keys {missing} not in the plan's "
                 f"columns {df.columns}")
-        upsert = rollup_upsert_writer(d["path"], fmt, part, list(keys))
-
         w = (df.writeStream.outputMode("update")
-             .option("checkpointLocation", streaming["checkpoint"])
-             .foreachBatch(upsert))
-        trigger = streaming.get("trigger", "availableNow")
-        if trigger == "availableNow":
-            w = w.trigger(availableNow=True)
+             .foreachBatch(rollup_upsert_writer(d["path"], fmt, part,
+                                                list(keys))))
+    else:
+        w = df.writeStream.format(fmt).outputMode(mode)
+        if t == "MEMORY":
+            w = w.queryName(d.get("table", job_id))
         else:
-            w = w.trigger(processingTime=trigger)
-        return w.start()
-    w = (df.writeStream.format(fmt)
-         .outputMode(mode)
-         .option("checkpointLocation", streaming["checkpoint"]))
+            w = w.option("path", d["path"])
+        if d.get("partition_by"):
+            w = w.partitionBy(*d["partition_by"])
+    w = w.option("checkpointLocation", streaming["checkpoint"])
     trigger = streaming.get("trigger", "availableNow")
     if trigger == "availableNow":
         w = w.trigger(availableNow=True)
     else:
         w = w.trigger(processingTime=trigger)
-    if t == "MEMORY":
-        w = w.queryName(d.get("table", job_id))
-    else:
-        w = w.option("path", d["path"])
-    if d.get("partition_by"):
-        w = w.partitionBy(*d["partition_by"])
-    return w.start()
+    return start_stream(w, df.sparkSession)

@@ -22,6 +22,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from etl_load_spark.sources.writers import rollup_upsert_writer, start_stream
+
 
 def open_event_stream(spark: SparkSession, sf_dir: str,
                       max_files_per_trigger: int | None = None) -> DataFrame:
@@ -186,11 +188,11 @@ def run_available_now(stream_df: DataFrame, query_name: str | None = None) -> Da
     sink and return the final result as a batch DataFrame (test harness for
     batch-equivalence; complete output mode so aggregates are final)."""
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    q = (stream_df.writeStream
-         .format("memory").queryName(name)
-         .outputMode("complete" if stream_df.isStreaming else "append")
-         .trigger(availableNow=True)
-         .start())
+    q = start_stream(stream_df.writeStream
+                     .format("memory").queryName(name)
+                     .outputMode("complete" if stream_df.isStreaming
+                                 else "append")
+                     .trigger(availableNow=True), stream_df.sparkSession)
     q.awaitTermination(300)
     return stream_df.sparkSession.table(name)
 
@@ -199,11 +201,10 @@ def run_available_now_append(stream_df: DataFrame,
                              query_name: str | None = None) -> DataFrame:
     """Append-mode variant (for row-level streams like dedup)."""
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    q = (stream_df.writeStream
-         .format("memory").queryName(name)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
+    q = start_stream(stream_df.writeStream
+                     .format("memory").queryName(name)
+                     .outputMode("append")
+                     .trigger(availableNow=True), stream_df.sparkSession)
     q.awaitTermination(300)
     return stream_df.sparkSession.table(name)
 
@@ -629,15 +630,14 @@ def materialize_rollup(rollup_stream: DataFrame, path: str,
             "materialize_rollup needs the rollup's full group-key "
             "columns (key_cols) to merge micro-batches — e.g. "
             "['bucket_start', 'event_type'] for time_bucket_rollup")
-    from etl_load_spark.sources.writers import rollup_upsert_writer
     upsert = rollup_upsert_writer(path, "parquet", partition_col,
                                   list(key_cols))
-    return (rollup_stream.writeStream
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .start())
+    return start_stream(rollup_stream.writeStream
+                        .outputMode("update")
+                        .option("checkpointLocation", checkpoint)
+                        .foreachBatch(upsert)
+                        .trigger(availableNow=True),
+                        rollup_stream.sparkSession)
 
 
 def stream_block_dedup(docs: DataFrame, id_col: str = "doc_id",

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_load_spark.session import read_table
+from etl_load_spark.sources.writers import start_stream
 from etl_load_spark.streaming.windows import (
     dedup_within_watermark, open_event_stream, run_available_now,
     run_available_now_append, session_windows, sliding_counts,
@@ -200,10 +201,11 @@ def test_late_data_dropped_beyond_watermark(spark, tmp_path):
               .select(F.col("w.start").alias("ws"), "k", "n"))
 
     def run_once():
-        q = (stream.writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", chk)
-             .outputMode("append").trigger(availableNow=True).start())
+        q = start_stream(stream.writeStream.format("parquet")
+                         .option("path", out_dir)
+                         .option("checkpointLocation", chk)
+                         .outputMode("append").trigger(availableNow=True),
+                         spark)
         q.awaitTermination(120)
 
     run_once()
@@ -459,12 +461,12 @@ def test_stream_block_dedup_incremental_history(spark, tmp_path):
 
     def run_increment():
         stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = (stream_block_dedup(stream)
-             .writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", chk)
-             .outputMode("append")
-             .trigger(availableNow=True).start())
+        q = start_stream(stream_block_dedup(stream)
+                         .writeStream.format("parquet")
+                         .option("path", out_dir)
+                         .option("checkpointLocation", chk)
+                         .outputMode("append")
+                         .trigger(availableNow=True), spark)
         q.awaitTermination(300)
         return {(r.doc_id, r.block_text)
                 for r in spark.read.parquet(out_dir).collect()}
@@ -548,12 +550,12 @@ def test_stream_content_dedup_rocksdb_state_store(spark, tmp_path):
 
     def run_increment():
         stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = (stream_content_dedup(stream)
-             .writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", chk)
-             .outputMode("append")
-             .trigger(availableNow=True).start())
+        q = start_stream(stream_content_dedup(stream)
+                         .writeStream.format("parquet")
+                         .option("path", out_dir)
+                         .option("checkpointLocation", chk)
+                         .outputMode("append")
+                         .trigger(availableNow=True), spark)
         q.awaitTermination(300)
         return {r.content_md5 for r in spark.read.parquet(out_dir).collect()}
 
@@ -598,12 +600,12 @@ def test_stream_content_dedup_against_history_and_state(spark, tmp_path):
 
     def run_increment():
         stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = (stream_content_dedup(stream, hist)
-             .writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", chk)
-             .outputMode("append")
-             .trigger(availableNow=True).start())
+        q = start_stream(stream_content_dedup(stream, hist)
+                         .writeStream.format("parquet")
+                         .option("path", out_dir)
+                         .option("checkpointLocation", chk)
+                         .outputMode("append")
+                         .trigger(availableNow=True), spark)
         q.awaitTermination(300)
         return {r.content_md5 for r in spark.read.parquet(out_dir).collect()}
 

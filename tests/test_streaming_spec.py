@@ -695,3 +695,186 @@ def test_streaming_csv_source_parses_like_batch(spark, tmp_path):
     assert want[1] == (2, None)
     assert sorted(tuple(x) for x in spark.read.parquet(dest).collect()) \
         == want
+
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_TREND_SCHEMA = ("event_id bigint, user_id bigint, ts timestamp,"
+                 " value double")
+_TREND_COLS = ["user_id", "bucket_ts", "n_samples", "slope_per_sec"]
+
+
+def _trend_rows(day_offset, n):
+    import datetime as dt
+    day = dt.datetime(2024, 5, 1) + dt.timedelta(days=day_offset)
+    return [(100 * day_offset + i, i % 3, day + dt.timedelta(hours=i),
+             float(i * 7 % 50)) for i in range(n)]
+
+
+def _trend_spec(tmp_path, chk="chk"):
+    return {
+        "jobId": "trend-state-partitions",
+        "source": {"type": "PARQUET",
+                   "details": {"path": str(tmp_path / "in"),
+                               "schema": _TREND_SCHEMA}},
+        "transformation": {"type": "TREND", "parameters": {}},
+        "destination": {"type": "PARQUET",
+                        "details": {"path": str(tmp_path / "out"),
+                                    "partition_by": ["bucket_ts"]}},
+        "streaming": {"checkpoint": str(tmp_path / chk),
+                      "output_mode": "update"},
+    }
+
+
+def _recorded_partitions(chk) -> set[str]:
+    """The shuffle partition count every batch of a checkpoint's offset
+    log records (line 2 of each offsets file is the batch metadata)."""
+    import json
+    import pathlib
+    files = [f for f in pathlib.Path(chk, "offsets").iterdir()
+             if f.name.isdigit()]
+    assert files, f"no offset log under {chk}"
+    return {json.loads(f.read_text().splitlines()[1])["conf"][_PARTITIONS]
+            for f in files}
+
+
+def _sorted_trend(df):
+    return sorted(tuple(x[c] for c in _TREND_COLS) for x in df.collect())
+
+
+def test_new_checkpoint_gets_one_state_partition_per_core(spark, tmp_path):
+    """A new checkpoint records min(session shuffle partitions,
+    defaultParallelism) — above and below the core count — and the
+    session keeps its own value."""
+    from etl_load_spark.operators.timeseries import trend
+
+    rows = _trend_rows(0, 24)
+    spark.createDataFrame(rows, _TREND_SCHEMA).coalesce(1) \
+         .write.parquet(str(tmp_path / "in"))
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(_PARTITIONS)
+    try:
+        for session_n in (2 * cores, 1):
+            spark.conf.set(_PARTITIONS, str(session_n))
+            spec = _trend_spec(tmp_path, chk=f"chk_{session_n}")
+            spec["destination"]["details"]["path"] = str(
+                tmp_path / f"out_{session_n}")
+            r = run_job(spark, JobSpec.from_dict(spec))
+            assert r.status == "COMPLETED", r.error
+            assert _recorded_partitions(tmp_path / f"chk_{session_n}") \
+                == {str(min(session_n, cores))}
+            assert spark.conf.get(_PARTITIONS) == str(session_n)
+            assert _sorted_trend(spark.read.parquet(
+                str(tmp_path / f"out_{session_n}"))) \
+                == _sorted_trend(trend(spark.createDataFrame(
+                    rows, _TREND_SCHEMA)))
+    finally:
+        spark.conf.set(_PARTITIONS, prev)
+
+
+def test_old_checkpoint_resumes_with_its_partition_count(spark, tmp_path):
+    """A checkpoint created with the batch default of 32 state partitions
+    (the TREND rollup started without start_stream) keeps 32 when
+    run_job resumes it, and the rollup equals its batch oracle."""
+    from etl_load_spark.operators.timeseries import trend
+    from etl_load_spark.plans.builder import (apply_transformation,
+                                              streaming_merge_keys)
+    from etl_load_spark.sources.readers import read_stream_source
+    from etl_load_spark.sources.writers import rollup_upsert_writer
+
+    r1, r2 = _trend_rows(0, 24), _trend_rows(1, 12)
+    spark.createDataFrame(r1, _TREND_SCHEMA).coalesce(1) \
+         .write.parquet(str(tmp_path / "in"))
+    spec = JobSpec.from_dict(_trend_spec(tmp_path))
+    prev = spark.conf.get(_PARTITIONS)
+    spark.conf.set(_PARTITIONS, "32")
+    try:
+        df = apply_transformation(
+            read_stream_source(spark, "PARQUET", spec.source.details),
+            spark, spec)
+        q = (df.writeStream.outputMode("update")
+             .option("checkpointLocation", str(tmp_path / "chk"))
+             .foreachBatch(rollup_upsert_writer(
+                 str(tmp_path / "out"), "parquet", "bucket_ts",
+                 streaming_merge_keys(spec)))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(_PARTITIONS, prev)
+    assert _recorded_partitions(tmp_path / "chk") == {"32"}
+
+    spark.createDataFrame(r2, _TREND_SCHEMA).coalesce(1) \
+         .write.mode("append").parquet(str(tmp_path / "in"))
+    res = run_job(spark, spec)
+    assert res.status == "COMPLETED", res.error
+    assert res.records_read == len(r2)
+    assert _recorded_partitions(tmp_path / "chk") == {"32"}
+    assert _sorted_trend(spark.read.parquet(str(tmp_path / "out"))) \
+        == _sorted_trend(trend(spark.createDataFrame(r1 + r2,
+                                                     _TREND_SCHEMA)))
+
+
+def test_concurrent_stream_starts_restore_session_partitions(spark,
+                                                            tmp_path):
+    """Two threads start stateful streams at the same moment: each new
+    checkpoint gets one partition per core, and afterwards the session
+    reads its original value (the lock keeps one start from restoring
+    the other's lowered value). A failing start restores it too."""
+    import threading
+    import uuid
+
+    from etl_load_spark.sources.writers import start_stream
+
+    spark.createDataFrame([(i % 5, "x") for i in range(20)],
+                          "k bigint, v string") \
+         .write.parquet(str(tmp_path / "in"))
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get(_PARTITIONS)
+    barrier = threading.Barrier(2)
+    queries, errors = [], []
+
+    def start(i):
+        counts = (spark.readStream.schema("k bigint, v string")
+                  .parquet(str(tmp_path / "in")).groupBy("k").count())
+        w = (counts.writeStream.format("memory")
+             .queryName(f"conc_{i}_{uuid.uuid4().hex[:8]}")
+             .outputMode("complete")
+             .option("checkpointLocation", str(tmp_path / f"chk{i}"))
+             .trigger(availableNow=True))
+        barrier.wait()
+        try:
+            queries.append(start_stream(w, spark))
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=start, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    for q in queries:
+        q.awaitTermination(120)
+    assert not errors, errors
+    assert spark.conf.get(_PARTITIONS) == before
+    for i in range(2):
+        assert _recorded_partitions(tmp_path / f"chk{i}") \
+            == {str(min(int(before), cores))}
+
+    # a parquet sink without a path fails inside start()
+    bad = (spark.readStream.schema("k bigint, v string")
+           .parquet(str(tmp_path / "in")).writeStream.format("parquet")
+           .option("checkpointLocation", str(tmp_path / "chk_bad")))
+    with pytest.raises(Exception):
+        start_stream(bad, spark)
+    assert spark.conf.get(_PARTITIONS) == before
+
+
+def test_path_exists_asks_the_filesystem(spark, tmp_path):
+    """The upsert's first-batch check: a missing materialization reads
+    False without a failed Spark read, an existing one True (plain and
+    file:// paths)."""
+    from etl_load_spark.sources.writers import path_exists
+
+    assert not path_exists(spark, str(tmp_path / "missing"))
+    spark.range(3).write.parquet(str(tmp_path / "t"))
+    assert path_exists(spark, str(tmp_path / "t"))
+    assert path_exists(spark, f"file://{tmp_path / 't'}")
