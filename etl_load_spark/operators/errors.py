@@ -76,12 +76,13 @@ def split_errors(df: DataFrame, spec: JobSpec,
                  source_is_line: bool = False) -> ErrorSplit:
     """Run the mapping with error accounting; enforce the declared strategy.
 
-    Returns the good rows (destination shape) and bad rows (source shape +
-    reason). Raises JobFailedError per strategy/budget.
+    ``df`` is the relation the mappings apply to: ``build_plan`` has already
+    run the query and ``spec.filter`` over it. Returns the good rows
+    (destination shape) and bad rows (``df``'s shape + reason). Raises
+    JobFailedError per strategy/budget.
     """
     eh: ErrorHandling = spec.error_handling
-    base = df.filter(F.expr(spec.filter)) if spec.filter else df
-    annotated = annotate_errors(base, spec, source_is_line)
+    annotated = annotate_errors(df, spec, source_is_line)
     bad = (annotated.filter(F.col(ERROR_COL).isNotNull())
            .select(*df.columns, ERROR_COL))
     good = (annotated.filter(F.col(ERROR_COL).isNull())

@@ -1,1 +1,1 @@
-from etl_load_spark.plans.builder import build_mapping_plan, build_plan  # noqa: F401
+from etl_load_spark.plans.builder import build_plan  # noqa: F401

@@ -44,44 +44,50 @@ def mapping_column(m: Mapping, source_is_line: bool = False) -> F.Column:
     return col.alias(m.dest)
 
 
-def build_mapping_plan(df: DataFrame, spec: JobSpec,
-                       source_is_line: bool = False) -> DataFrame:
-    """Apply filter + mapping list to a source DataFrame."""
-    if spec.filter:
-        # predicate passthrough (P3): opaque SQL handed to Catalyst — parsed,
-        # optimized, and pushed down to the scan where possible
-        df = df.filter(F.expr(spec.filter))
-    if spec.mappings:
-        df = df.select(*[mapping_column(m, source_is_line) for m in spec.mappings])
-    if spec.order_by:
-        df = df.orderBy(*spec.order_by)
-    return df
-
-
 def build_plan(spark: SparkSession, spec: JobSpec,
-               source_df: DataFrame | None = None) -> DataFrame:
-    """Full plan: read source(s), register views, apply query or mappings.
+               source_df: DataFrame | None = None,
+               map_stage=None) -> DataFrame:
+    """The one assembly of a job's plan, used by batch, streaming and
+    ``explain`` alike. Stages run in this order:
 
-    When ``spec.query`` is set, the source is registered as view ``src``
-    (plus ``extra_sources`` under their keys) and the query is executed by
-    Spark SQL — this is where joins/aggs/windows/set-ops live (§2.9 items
-    3-8). Otherwise the mapping pipeline applies. ``source_df`` overrides
-    the source read (the runner passes the HWM-filtered source for
-    incremental jobs).
+        source → query → filter → mappings → transformation → order_by
+
+    - source: ``source_df`` when given (the runner passes its read, the
+      HWM-filtered incremental source or the watermarked stream), else a
+      read of ``spec.source``.
+    - query: the source is registered as view ``src`` (plus
+      ``extra_sources`` under their keys) and ``spec.query`` runs in Spark
+      SQL — joins/aggs/windows/set-ops live here (§2.9 items 3-8). This is
+      the only place those views are registered.
+    - filter (P3): opaque SQL handed to Catalyst over the query's output
+      (or the source), pushed down to the scan where possible.
+    - mappings: ``map_stage(df, spec, source_is_line)`` when given (the
+      batch runner passes the error split), else the plain
+      ``mapping_column`` projection, where a failed cast gives NULL.
+    - transformation: ``apply_transformation``.
+    - order_by: always last, so no later stage can drop the sort.
     """
     from etl_load_spark.sources.registry import file_format, read_source
 
     df = source_df if source_df is not None else read_source(spark, spec.source)
-    source_is_line = file_format(spec.source.type) == "text"
+    # fixed-width positions address the raw line, not a query's output
+    source_is_line = (not spec.query
+                      and file_format(spec.source.type) == "text")
     if spec.query:
         df.createOrReplaceTempView("src")
         for name, ep in spec.extra_sources.items():
             read_source(spark, ep).createOrReplaceTempView(name)
         df = spark.sql(spec.query)
-        df = build_mapping_plan(df, spec, False) if spec.mappings else df
-    else:
-        df = build_mapping_plan(df, spec, source_is_line)
-    return apply_transformation(df, spark, spec)
+    if spec.filter:
+        df = df.filter(F.expr(spec.filter))
+    if spec.mappings:
+        df = (map_stage(df, spec, source_is_line) if map_stage else
+              df.select(*[mapping_column(m, source_is_line)
+                          for m in spec.mappings]))
+    df = apply_transformation(df, spark, spec)
+    if spec.order_by:
+        df = df.orderBy(*spec.order_by)
+    return df
 
 
 def apply_transformation(df: DataFrame, spark: SparkSession,

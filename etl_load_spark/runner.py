@@ -18,8 +18,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+# perfbench/tracing.py wraps these by name on this module; keep them bound
 from etl_load_spark.operators.errors import JobFailedError, split_errors
-from etl_load_spark.plans.builder import apply_transformation, build_plan
+from etl_load_spark.plans.builder import apply_transformation, build_plan  # noqa: F401
 from etl_load_spark.session import register_operator_cache
 from etl_load_spark.sources.registry import (file_format, read_source,
                                              write_sink)
@@ -141,51 +142,44 @@ def run_job(spark: SparkSession, spec: JobSpec,
 
 
 def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
-    """The LOAD step: plan → (optional error split) → single write action."""
+    """The LOAD step: read the source (HWM-filtered for incremental jobs),
+    build the plan once through ``build_plan`` with the error split as its
+    mapping stage, then perform one write action."""
     if spec.streaming:
         _load_streaming(spark, spec, result)
         return
-    # Every mapping job goes through error accounting: FAIL_JOB needs it to
-    # detect bad rows at all (casts are null-on-failure), the routing
-    # strategies need the good/bad split.
     inc = spec.incremental
-    inc_src = None
-    prev_mark = None
+    src_df = read_source(spark, spec.source)
     if inc:
         if spec.destination is not None:
             # appending deltas is the natural incremental sink mode
             spec.destination.details.setdefault("mode", "append")
         from etl_load_spark.operators.incremental import (
             attach_hwm_observation, hwm_predicate, load_mark)
-        inc_src = read_source(spark, spec.source)
         prev_mark = load_mark(inc["state_path"])
         if prev_mark is not None:
-            inc_src = inc_src.filter(
-                hwm_predicate(inc_src, inc["column"], prev_mark))
+            src_df = src_df.filter(
+                hwm_predicate(src_df, inc["column"], prev_mark))
         # the new mark is observed on the write's own scan — a re-executed
         # MAX against a live (JDBC) source would advance past rows
         # committed after the load and silently skip them forever
-        inc_src, hwm_obs = attach_hwm_observation(inc_src, inc["column"])
-    use_error_split = bool(spec.mappings) and spec.query is None
-    if use_error_split:
-        src_df = inc_src if inc_src is not None \
-            else read_source(spark, spec.source)
-        source_is_line = file_format(spec.source.type) == "text"
-        split = split_errors(src_df, spec, source_is_line)
-        # the transform stage (U1 PYTHON_SCRIPT / SCD2_MERGE) applies to the
-        # GOOD rows only — bad rows already routed per the error strategy
-        df = apply_transformation(split.good, spark, spec)
-        if spec.order_by:
-            df = df.orderBy(*spec.order_by)
+        src_df, hwm_obs = attach_hwm_observation(src_df, inc["column"])
+
+    def map_with_errors(df, spec, source_is_line):
+        # Every mapping job goes through error accounting: FAIL_JOB needs it
+        # to detect bad rows at all (casts are null-on-failure), the routing
+        # strategies need the good/bad split. The transformation and
+        # order_by stages then apply to the GOOD rows only.
+        split = split_errors(df, spec, source_is_line)
         result.records_failed = split.error_count
-        result.records_read = split.error_count  # + good, added below
-    else:
-        df = build_plan(spark, spec, source_df=inc_src)
+        return split.good
+
+    df = build_plan(spark, spec, source_df=src_df, map_stage=map_with_errors)
     result._output_df = df  # VALIDATE_LOAD expectations evaluate this plan
     if spec.destination is None:
         # query-only job: materialize nothing; caller uses build_plan directly
         n = df.count()
-        result.records_read += n
+        result.records_read = result.records_failed + n
         result.records_written = n
         return
     # Expectations must see the rows actually COMMITTED, not a re-execution
@@ -211,7 +205,7 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
             result._output_df = df
     metrics = write_sink(df, spec.destination)
     result.records_written = metrics.get("records_written", 0)
-    result.records_read += result.records_written
+    result.records_read = result.records_failed + result.records_written
     if readback:
         result._output_df = read_source(spark, spec.destination)
         result._output_is_readback = True
@@ -304,20 +298,19 @@ def _check_expectations(spec: JobSpec, result: JobResult) -> None:
 def _load_streaming(spark: SparkSession, spec: JobSpec,
                     result: JobResult) -> None:
     """Streaming LOAD (SURVEY §7 step 7): the same spec, executed
-    incrementally. The mapping pipeline, filter, SQL query, and
-    DataFrame-level transforms all apply unchanged to the unbounded
-    DataFrame; the checkpoint makes re-running the job process ONLY
-    new source files (incremental ingest).
+    incrementally. The stream is read, watermarked and handed to
+    ``build_plan`` — query, filter, mappings and transformation apply
+    unchanged to the unbounded DataFrame; the checkpoint makes re-running
+    the job process ONLY new source files (incremental ingest).
 
     Constraints inherent to streaming (enforced here, not silently
     ignored): a checkpoint is required; order_by and the count-based
-    error-routing strategies don't apply (casts still null-on-failure —
-    route-and-count error handling belongs to a batch backfill or a
-    foreachBatch sink); AvailableNow is the default trigger so the job
-    terminates after draining what exists.
+    error-routing strategies don't apply (the mapping stage is the plain
+    projection, casts null-on-failure — route-and-count error handling
+    belongs to a batch backfill or a foreachBatch sink); AvailableNow is
+    the default trigger so the job terminates after draining what exists.
     """
-    from etl_load_spark.plans.builder import apply_transformation, \
-        build_mapping_plan
+    from etl_load_spark.plans.builder import streaming_merge_keys
     from etl_load_spark.sources.readers import read_stream_source
     from etl_load_spark.sources.writers import write_stream_sink
 
@@ -335,16 +328,7 @@ def _load_streaming(spark: SparkSession, spec: JobSpec,
     wm = spec.streaming.get("watermark")
     if wm:
         df = df.withWatermark(wm["column"], wm["delay"])
-    if spec.query:
-        df.createOrReplaceTempView("src")
-        for name, ep in spec.extra_sources.items():
-            # static dims join the stream (stream-static enrichment)
-            read_source(spark, ep).createOrReplaceTempView(name)
-        df = spark.sql(spec.query)
-    else:
-        df = build_mapping_plan(df, spec, False)
-    df = apply_transformation(df, spark, spec)
-    from etl_load_spark.plans.builder import streaming_merge_keys
+    df = build_plan(spark, spec, source_df=df)
     q = write_stream_sink(df, spec.destination.type, spec.destination.details,
                           spec.streaming, spec.job_id,
                           merge_keys=streaming_merge_keys(spec))

@@ -121,31 +121,38 @@ def release_operator_caches() -> int:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver testdata table, normalizing physical-type quirks.
-
-    The ``events`` table stores TIMESTAMP(NANOS) which Spark's vectorized
-    parquet reader rejects; we read it as int64 nanos
-    (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to microseconds
-    with integer division — the same µs truncation DuckDB applies, so oracle
-    comparisons stay exact.
-    """
-    from pyspark.sql import functions as F
-
+    """Read one driver testdata table, normalizing physical-type quirks
+    (``events``: see ``read_events``)."""
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
         return spark.read.parquet(path)
+    return read_events(spark, lambda: spark.read.parquet(path))
+
+
+def read_events(spark: SparkSession, read):
+    """Run ``read()`` — a batch or stream read of the ``events`` table —
+    and normalize its ``ts`` column to TIMESTAMP_LTZ.
+
+    ``events`` stores TIMESTAMP(NANOS), which Spark's vectorized parquet
+    reader rejects: the read runs with ``spark.sql.legacy.parquet.nanosAsLong``
+    on, and the int64 nanos are truncated to microseconds with integer
+    division — the same µs truncation DuckDB applies, so oracle comparisons
+    stay exact. A TIMESTAMP_NTZ ``ts`` is cast to LTZ (watermarks and epoch
+    functions need it); with the session TZ pinned to UTC the cast is the
+    identity on the underlying micros value.
+    """
+    from pyspark.sql import functions as F
+
     prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        df = spark.read.parquet(path)
+        df = read()
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     elif ts_type == "timestamp_ntz":
-        # Session TZ is pinned to UTC, so NTZ -> LTZ is the identity on the
-        # underlying micros value; keeps downstream epoch functions working.
         df = df.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
     return df
 

@@ -501,7 +501,8 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
              .foreachBatch(rollup_upsert_writer(d["path"], fmt, part,
                                                 list(keys))))
     else:
-        w = df.writeStream.format(fmt).outputMode(mode)
+        w = (df.writeStream.format(fmt).outputMode(mode)
+             .options(**_dialect_options(d, fmt)))
         if t == "MEMORY":
             w = w.queryName(d.get("table", job_id))
         else:

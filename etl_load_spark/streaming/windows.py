@@ -22,13 +22,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from etl_load_spark.session import read_events
 from etl_load_spark.sources.writers import rollup_upsert_writer, start_stream
 
 
 def open_event_stream(spark: SparkSession, sf_dir: str,
                       max_files_per_trigger: int | None = None) -> DataFrame:
-    """readStream over the events parquet (schema fixed up like
-    session.read_table: int64-nanos ts → timestamp)."""
+    """readStream over the events parquet (``ts`` normalized by
+    ``session.read_events``, as the batch ``read_table`` does)."""
     import os
     import tempfile
 
@@ -46,24 +47,13 @@ def open_event_stream(spark: SparkSession, sf_dir: str,
             os.symlink(part, os.path.join(stream_dir, f"part{i}.parquet"))
     else:
         os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        static = spark.read.parquet(f"{sf_dir}/events.parquet")
-        reader = spark.readStream.schema(static.schema)
+
+    def read():
+        reader = spark.readStream.schema(spark.read.parquet(src).schema)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        df = reader.parquet(stream_dir)
-    finally:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif ts_type == "timestamp_ntz":
-        # Watermarks require TIMESTAMP (LTZ); with session TZ pinned to UTC
-        # the cast is the identity on the underlying micros value.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
-    return df
+        return reader.parquet(stream_dir)
+    return read_events(spark, read)
 
 
 def tumbling_counts(events: DataFrame, window: str = "1 hour",

@@ -115,11 +115,14 @@ def test_queue_ack_after_launch(spark, tmp_path):
 
 def test_queue_cli_drain(spark, tmp_path, capsys):
     """CLI cron mode: `etl_load_spark listen <dir> --drain` processes the
-    backlog, prints JSON, exits 0 on all-COMPLETED."""
+    backlog, prints JSON, exits 0 on all-COMPLETED. The CPU threshold is
+    one no load reaches, so the box's own load cannot defer the job; the
+    DEFERRED path is covered by the admission tests below."""
     from etl_load_spark.cli import main
     q = FileQueueTransport(str(tmp_path / "q"))
     q.submit(_spec(tmp_path, "cli_drain"))
-    rc = main(["listen", str(tmp_path / "q"), "--drain", "--json"])
+    rc = main(["listen", str(tmp_path / "q"), "--drain", "--json",
+               "--max-cpu-pct", "inf"])
     assert rc == 0
     out = json.loads(capsys.readouterr().out)
     assert out["processed"] == 1

@@ -131,15 +131,24 @@ def _two_bad_rows(spec: dict) -> dict:
     return spec
 
 
-@pytest.mark.parametrize("strategy,max_errors", [
-    ("FAIL_JOB", 0), ("LOG_ONLY", 1), ("ROUTE_TO_FILE", 1)])
+SRC_QUERY = "SELECT * FROM src"
+
+
+@pytest.mark.parametrize("strategy,max_errors,query", [
+    pytest.param(s, n, q, id=f"{s}-{n}" + ("-query" if q else ""))
+    for s, n in (("FAIL_JOB", 0), ("LOG_ONLY", 1), ("ROUTE_TO_FILE", 1))
+    for q in (None, SRC_QUERY)])
 def test_failed_check_leaves_no_destination_files(spark, dirty_csv, tmp_path,
-                                                  strategy, max_errors):
+                                                  strategy, max_errors,
+                                                  query):
     """FAIL_JOB and an exceeded maxErrorsAllowed fail the job before the
-    destination write; ROUTE_TO_FILE still writes its error file."""
+    destination write; ROUTE_TO_FILE still writes its error file. The
+    mappings go through the same error accounting behind a query."""
     out, errs = str(tmp_path / "out"), str(tmp_path / "errs")
-    res = run_job(spark, JobSpec.from_dict(_two_bad_rows(
-        _spec_dict(dirty_csv, out, strategy, errs, max_errors=max_errors))))
+    spec = _two_bad_rows(
+        _spec_dict(dirty_csv, out, strategy, errs, max_errors=max_errors))
+    spec["query"] = query
+    res = run_job(spark, JobSpec.from_dict(spec))
     assert res.status == "FAILED"
     assert glob.glob(out + "/part-*") == []
     bad = _read_csv_rows(errs + "/part-*.csv")
@@ -147,6 +156,35 @@ def test_failed_check_leaves_no_destination_files(spark, dirty_csv, tmp_path,
         assert sorted(r["id"] for r in bad) == ["2", "3"]
     else:
         assert bad == []
+
+
+def test_query_job_counts_failed_mappings(spark, dirty_csv, tmp_path):
+    """LOG_ONLY behind a query drops and counts the bad row, as without
+    one."""
+    out = str(tmp_path / "out")
+    spec = _spec_dict(dirty_csv, out, "LOG_ONLY", max_errors=10)
+    spec["query"] = SRC_QUERY
+    res = run_job(spark, JobSpec.from_dict(spec))
+    assert res.status == "COMPLETED", res.error
+    assert (res.records_read, res.records_written, res.records_failed) \
+        == (4, 3, 1)
+    assert {r["dest_id"] for r in _read_csv_rows(out + "/part-*.csv")} \
+        == {"1", "2", "4"}
+
+
+def test_query_job_applies_filter(spark, tmp_path):
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    spark.createDataFrame([("1", 10), ("2", 20), ("3", 30)],
+                          "id string, v int").write.parquet(src)
+    res = run_job(spark, JobSpec.from_dict({
+        "jobId": "query-filter",
+        "source": {"type": "PARQUET", "details": {"path": src}},
+        "query": SRC_QUERY, "filter": "id = '1'",
+        "destination": {"type": "PARQUET", "details": {"path": out}},
+        "steps": ["LOAD"]}))
+    assert res.status == "COMPLETED", res.error
+    assert res.records_written == 1
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == [("1", 10)]
 
 
 def test_route_to_file_clean_rerun_empties_error_file(spark, dirty_csv,

@@ -57,6 +57,43 @@ def test_incremental_ingest_via_checkpoint(spark, tmp_path):
     assert spark.read.parquet(dest).count() == 3
 
 
+def test_streaming_query_applies_filter_and_mappings(spark, tmp_path):
+    """A streaming query job runs the same stages as a batch one: the
+    filter and mappings apply to the query's output."""
+    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
+    _write_batch(spark, src, [[1, "a"], [2, "b"], [-1, "c"]])
+    spec = _spec(src, dest, str(tmp_path / "ckpt"))
+    spec.query = "SELECT k, v FROM src"
+    r = run_job(spark, spec)
+    assert r.status == "COMPLETED", r.error
+    out = spark.read.parquet(dest)
+    assert out.columns == ["key", "val"]
+    assert {(x.key, x.val) for x in out.collect()} == {(1, "A"), (2, "B")}
+
+
+def test_streaming_csv_sink_writes_header(spark, tmp_path):
+    """A streamed FILE_CSV sink writes the batch writer's dialect, so the
+    job's own VALIDATE_LOAD reads every row back with header=true."""
+    import glob
+
+    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
+    _write_batch(spark, src, [[i, str(i * 10)] for i in range(10)])
+    r = run_job(spark, JobSpec.from_dict({
+        "job_id": "stream-csv-sink",
+        "source": {"type": "PARQUET", "details": {"path": src}},
+        "destination": {"type": "FILE_CSV", "details": {"path": dest}},
+        "streaming": {"checkpoint": str(tmp_path / "ckpt")},
+        "expectations": [{"check": "row_count_min", "value": 10}],
+        "steps": ["LOAD", "VALIDATE_LOAD"],
+    }))
+    assert r.status == "COMPLETED", r.error
+    parts = glob.glob(dest + "/part-*.csv")
+    assert parts
+    for part in parts:
+        with open(part) as f:
+            assert f.readline().strip() == "k,v"
+
+
 def test_streaming_windowed_query_with_watermark(spark, tmp_path):
     src = str(tmp_path / "events")
     dest = str(tmp_path / "agg")
