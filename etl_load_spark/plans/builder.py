@@ -9,10 +9,15 @@ the reference's per-row pipeline:
     rule (U2/F1-F2) → default (P7) → cast (P5) → rename (P4)
 
 Everything stays inside Catalyst (whole-stage codegen); projection and the
-filter push down into the source scan automatically.
+filter push down into the source scan automatically. The transformation
+stage is one lookup in ``STAGES``, the table that declares each built-in
+``transformation.type`` once, for batch and streaming alike.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -92,102 +97,22 @@ def build_plan(spark: SparkSession, spec: JobSpec,
 
 def apply_transformation(df: DataFrame, spark: SparkSession,
                          spec: JobSpec) -> DataFrame:
-    """U1 pluggable transform stage (spec.Transformation): load the user
-    script and apply its ``transform`` (DataFrame-level) or
-    ``transform_pandas`` (Arrow-batched mapInPandas) hook."""
+    """The transformation stage: ``NONE`` passes the rows through,
+    ``PYTHON_SCRIPT`` loads the user script and applies its ``transform``
+    (DataFrame-level) or ``transform_pandas`` (Arrow-batched
+    mapInPandas) hook, and every other type is one lookup in ``STAGES``,
+    which builds the batch plan or applies the stage's streaming
+    contract (``Stage.apply``)."""
     tr = spec.transformation
     if tr is None or tr.type.upper() == "NONE":
         return df
-    if tr.type.upper() == "SCD2_MERGE":
-        return _scd2_transform(df, spark, spec)
-    if tr.type.upper() == "CDC_SCD2_APPLY":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=CDC_SCD2_APPLY is batch-only (version "
-                "bounding needs the whole key group); land the feed, then "
-                "apply each landed batch downstream")
-        return _cdc_scd2_transform(df, spark, spec)
-    if tr.type.upper() == "DECONTAMINATE":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=DECONTAMINATE is batch-only; the bloom "
-                "probe and verify join are stream-safe map-side stages, but "
-                "the per-document shared-n-gram aggregation needs a landed "
-                "batch pass — land the stream, then run DECONTAMINATE "
-                "downstream")
-        return _decontaminate_transform(df, spark, spec)
-    if tr.type.upper() == "INCREMENTAL_DEDUP":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=INCREMENTAL_DEDUP is batch-only (the "
-                "within-batch survivor needs the whole content group); use "
-                "streaming.windows.stream_content_dedup for checkpointed "
-                "first-seen-wins content admission on a live stream "
-                "(stream-static anti join against the admitted index + "
-                "stateful in-stream dedup), or land the stream and admit "
-                "each landed batch downstream")
-        return _incremental_dedup_transform(df, spark, spec)
-    if tr.type.upper() == "IMPORTANCE_RESAMPLE":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=IMPORTANCE_RESAMPLE is batch-only "
-                "(the raw-corpus feature histogram is corpus-global); "
-                "train the histograms offline, then score the stream with "
-                "a broadcast join against the frozen bucket-score table")
-        return _importance_resample_transform(df, spark, spec)
-    if tr.type.upper() == "ASOF_JOIN":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=ASOF_JOIN is batch-only (the "
-                "union-window argmax needs each key's ordered history); "
-                "for bounded-lookback stream enrichment use "
-                "streaming.windows.stream_interval_join, or land the "
-                "stream and enrich each landed batch downstream")
-        return _asof_join_transform(df, spark, spec)
-    if tr.type.upper() == "HARD_NEGATIVES":
-        if df.isStreaming:
-            raise ValueError(
-                "transformation.type=HARD_NEGATIVES is batch-only (the "
-                "per-anchor top-k and best-positive max need the whole "
-                "corpus snapshot); land the stream, then mine each landed "
-                "snapshot downstream")
-        return _hard_negatives_transform(df, spark, spec)
-    if tr.type.upper() in _CORPUS_TRANSFORMS:
-        if df.isStreaming and tr.type.upper() in _STREAMING_TWINS:
-            # pure-aggregate rollups stream as their watermark twins
-            # (round 11): the identical aggregation minus the batch
-            # output sort, state bounded by the watermark. With a
-            # file destination use streaming.output_mode=update — the
-            # sink materializes via the continuous-aggregate upsert
-            # (dynamic partition overwrite per micro-batch).
-            return _STREAMING_TWINS[tr.type.upper()](df,
-                                                     tr.parameters or {})
-        if df.isStreaming and tr.type.upper() in _BATCH_ONLY_TRANSFORMS:
-            # multi-stage stateful plans are not expressible as ONE
-            # streaming query. Fail with the right pointer instead of
-            # Spark's output-mode error. (QUALITY_FILTER and
-            # MIXTURE_SAMPLE are per-row and work on streams.)
-            raise ValueError(
-                f"transformation.type={tr.type.upper()} is batch-only; "
-                f"{_BATCH_ONLY_TRANSFORMS[tr.type.upper()]}")
-        return _CORPUS_TRANSFORMS[tr.type.upper()](df, tr.parameters or {})
     if tr.type.upper() != "PYTHON_SCRIPT":
-        raise ValueError(f"unknown transformation.type: {tr.type!r} "
-                         "(known: NONE, PYTHON_SCRIPT, SCD2_MERGE, "
-                         "PASSAGE_DEDUP, QUALITY_FILTER, MIXTURE_SAMPLE, "
-                         "QUALITY_CLASSIFIER, SEMANTIC_DEDUP, DECONTAMINATE, "
-                         "CLUSTER_BALANCE, CHUNK_DOCUMENTS, LM_SURPRISAL, "
-                         "CROSS_SOURCE_DEDUP, TOKEN_BUDGET, ASSIGN_SHARDS, "
-                         "SEQUENCE_PACK, INCREMENTAL_DEDUP, "
-                         "QUANTIZE_EMBEDDINGS, STRATIFIED_SAMPLE, "
-                         "URL_CANONICALIZE, IMPORTANCE_RESAMPLE, MARKUP_STRIP, "
-                         "CDC_SCD2_APPLY, ASSIGN_SPLIT, PRIORITY_SAMPLE, "
-                         "QUOTA_SAMPLE, HARD_NEGATIVES, "
-                         "WINDOW_MINHASH_DEDUP, GAPFILL, COUNTER_RATE, "
-                         "OHLC, TIME_WEIGHTED_AVG, STATE_DURATIONS, "
-                         "HEARTBEAT_UPTIME, LTTB, TREND, INSTANT_RATE, "
-                         "VALUE_HISTOGRAM, DELTA, VALUE_STATS, CHANGES, "
-                         "VALUE_TOPK, ASOF_JOIN)")
+        stage = STAGES.get(tr.type.upper())
+        if stage is None:
+            raise ValueError(f"unknown transformation.type: {tr.type!r} "
+                             f"(known: NONE, PYTHON_SCRIPT, "
+                             f"{', '.join(STAGES)})")
+        return stage.apply(df, spark, spec)
     if not tr.script_path:
         raise ValueError("transformation.type=PYTHON_SCRIPT requires scriptPath")
     import importlib.util
@@ -819,6 +744,21 @@ def _window_minhash_dedup_transform(df: DataFrame, p: dict) -> DataFrame:
     return df.join(losers, id_col, "left_anti")
 
 
+#: the parameters the time-bucketed stages share: operator keyword →
+#: (spec parameter, default)
+_SERIES_PARAMS = {"key_col": ("keyColumn", "user_id"),
+                  "ts_col": ("tsColumn", "ts"),
+                  "value_col": ("valueColumn", "value"),
+                  "order_col": ("orderColumn", "event_id"),
+                  "bucket": ("bucket", "1 day")}
+
+
+def _series(p: dict, *kwargs: str) -> dict:
+    """The named shared time-series parameters of ``p`` as operator
+    keywords."""
+    return {k: p.get(*_SERIES_PARAMS[k]) for k in kwargs}
+
+
 def _gapfill_transform(df: DataFrame, p: dict) -> DataFrame:
     """Declarative time-series gap fill (operators/timeseries.gapfill —
     q172): bucket-resample a (key, ts, value) feed onto the dense
@@ -832,10 +772,8 @@ def _gapfill_transform(df: DataFrame, p: dict) -> DataFrame:
     keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
     bucket ('1 day')."""
     from etl_load_spark.operators.timeseries import gapfill
-    return gapfill(df, key_col=p.get("keyColumn", "user_id"),
-                   ts_col=p.get("tsColumn", "ts"),
-                   value_col=p.get("valueColumn", "value"),
-                   bucket=p.get("bucket", "1 day"))
+    return gapfill(df, **_series(p, "key_col", "ts_col", "value_col",
+                                 "bucket"))
 
 
 def _counter_rate_transform(df: DataFrame, p: dict) -> DataFrame:
@@ -856,16 +794,13 @@ def _counter_rate_transform(df: DataFrame, p: dict) -> DataFrame:
     parallelizes per time slice)."""
     from etl_load_spark.operators.timeseries import counter_rate
     bs = p.get("bucketSeconds")
-    return counter_rate(df, key_col=p.get("keyColumn", "user_id"),
-                        ts_col=p.get("tsColumn", "ts"),
-                        value_col=p.get("valueColumn", "value"),
-                        order_col=p.get("orderColumn", "event_id"),
-                        bucket=p.get("bucket", "1 day"),
+    return counter_rate(df, **_series(p, "key_col", "ts_col", "value_col",
+                                      "order_col", "bucket"),
                         bucket_seconds=int(bs) if bs is not None else None,
                         hot_split=p.get("hotSplit"))
 
 
-def _ohlc_transform(df: DataFrame, p: dict) -> DataFrame:
+def _ohlc_params(p: dict) -> dict:
     """Declarative OHLC / candlestick rollup (operators/timeseries.ohlc
     — q174): per (type, bucket) the open/high/low/close sample values
     and the sample count; open/close are deterministic via the
@@ -876,15 +811,11 @@ def _ohlc_transform(df: DataFrame, p: dict) -> DataFrame:
     aggregate: the shuffle is candle-sized, never sample-sized.
     Parameters: typeColumn ('event_type'), tsColumn ('ts'),
     valueColumn ('value'), orderColumn ('event_id'), bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import ohlc
-    return ohlc(df, type_col=p.get("typeColumn", "event_type"),
-                ts_col=p.get("tsColumn", "ts"),
-                value_col=p.get("valueColumn", "value"),
-                order_col=p.get("orderColumn", "event_id"),
-                bucket=p.get("bucket", "1 day"))
+    return {"type_col": p.get("typeColumn", "event_type"),
+            **_series(p, "ts_col", "value_col", "order_col", "bucket")}
 
 
-def _time_weighted_avg_transform(df: DataFrame, p: dict) -> DataFrame:
+def _time_weighted_avg_params(p: dict) -> dict:
     """Declarative time-weighted average (operators/timeseries.
     time_weighted_avg — q175): each sample weighted by how long it HELD
     (the in-bucket LOCF integral), so burst sampling cannot bias the
@@ -897,17 +828,11 @@ def _time_weighted_avg_transform(df: DataFrame, p: dict) -> DataFrame:
     orderColumn ('event_id'), bucket ('1 day'), carryIn (false),
     hotSplit (interval string; with carryIn, parallelizes a dominant
     series' cross-bucket carry per time slice — identical results)."""
-    from etl_load_spark.operators.timeseries import time_weighted_avg
-    return time_weighted_avg(df, key_col=p.get("keyColumn", "user_id"),
-                             ts_col=p.get("tsColumn", "ts"),
-                             value_col=p.get("valueColumn", "value"),
-                             order_col=p.get("orderColumn", "event_id"),
-                             bucket=p.get("bucket", "1 day"),
-                             carry_in=bool(p.get("carryIn", False)),
-                             hot_split=p.get("hotSplit"))
+    return _series(p, "key_col", "ts_col", "value_col", "order_col",
+                   "bucket")
 
 
-def _state_durations_transform(df: DataFrame, p: dict) -> DataFrame:
+def _state_durations_params(p: dict) -> dict:
     """Declarative time-in-state rollup (operators/timeseries.
     state_durations — q177): per (key, bucket, state) the
     integer-millisecond hold time (in-bucket LOCF), the entry count
@@ -921,17 +846,11 @@ def _state_durations_transform(df: DataFrame, p: dict) -> DataFrame:
     bucket ('1 day'), carryIn (false), hotSplit (interval string;
     with carryIn, parallelizes a dominant series' cross-bucket carry
     per time slice — identical results)."""
-    from etl_load_spark.operators.timeseries import state_durations
-    return state_durations(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           state_col=p.get("stateColumn", "event_type"),
-                           order_col=p.get("orderColumn", "event_id"),
-                           bucket=p.get("bucket", "1 day"),
-                           carry_in=bool(p.get("carryIn", False)),
-                           hot_split=p.get("hotSplit"))
+    return {"state_col": p.get("stateColumn", "event_type"),
+            **_series(p, "key_col", "ts_col", "order_col", "bucket")}
 
 
-def _heartbeat_uptime_transform(df: DataFrame, p: dict) -> DataFrame:
+def _heartbeat_uptime_params(p: dict) -> dict:
     """Declarative heartbeat/liveness rollup (operators/timeseries.
     heartbeat_uptime — q178): each row is a heartbeat keeping its
     series live for ``tolerance``; per (key, bucket) the beat count,
@@ -947,19 +866,12 @@ def _heartbeat_uptime_transform(df: DataFrame, p: dict) -> DataFrame:
     series' cross-bucket carry per time slice — identical results),
     emitDowntime (false; appends downtime_ms = bucket width − uptime,
     the Timescale (interpolated_)downtime complement)."""
-    from etl_load_spark.operators.timeseries import heartbeat_uptime
-    return heartbeat_uptime(df, key_col=p.get("keyColumn", "user_id"),
-                            ts_col=p.get("tsColumn", "ts"),
-                            order_col=p.get("orderColumn", "event_id"),
-                            bucket=p.get("bucket", "1 day"),
-                            tolerance=p.get("tolerance", "15 minutes"),
-                            carry_in=bool(p.get("carryIn", False)),
-                            hot_split=p.get("hotSplit"),
-                            emit_downtime=bool(p.get("emitDowntime",
-                                                     False)))
+    return {"tolerance": p.get("tolerance", "15 minutes"),
+            "emit_downtime": bool(p.get("emitDowntime", False)),
+            **_series(p, "key_col", "ts_col", "order_col", "bucket")}
 
 
-def _trend_transform(df: DataFrame, p: dict) -> DataFrame:
+def _trend_params(p: dict) -> dict:
     """Declarative per-bucket least-squares trend (operators/
     timeseries.trend — q183): the OLS slope of value over time within
     each (key, bucket), in value units per second at 4 exact decimals
@@ -969,14 +881,10 @@ def _trend_transform(df: DataFrame, p: dict) -> DataFrame:
     hash aggregate — the shuffle is trend-sized. Parameters:
     keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
     bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import trend
-    return trend(df, key_col=p.get("keyColumn", "user_id"),
-                 ts_col=p.get("tsColumn", "ts"),
-                 value_col=p.get("valueColumn", "value"),
-                 bucket=p.get("bucket", "1 day"))
+    return _series(p, "key_col", "ts_col", "value_col", "bucket")
 
 
-def _instant_rate_transform(df: DataFrame, p: dict) -> DataFrame:
+def _instant_rate_params(p: dict) -> dict:
     """Declarative instant rate (operators/timeseries.instant_rate —
     q184, Prometheus irate): per (key, bucket) the rate between the
     bucket's LAST TWO samples in value/second at 4 exact decimals,
@@ -986,15 +894,11 @@ def _instant_rate_transform(df: DataFrame, p: dict) -> DataFrame:
     rollup share (key, bucket). Parameters: keyColumn ('user_id'),
     tsColumn ('ts'), valueColumn ('value'), orderColumn ('event_id'),
     bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import instant_rate
-    return instant_rate(df, key_col=p.get("keyColumn", "user_id"),
-                        ts_col=p.get("tsColumn", "ts"),
-                        value_col=p.get("valueColumn", "value"),
-                        order_col=p.get("orderColumn", "event_id"),
-                        bucket=p.get("bucket", "1 day"))
+    return _series(p, "key_col", "ts_col", "value_col", "order_col",
+                   "bucket")
 
 
-def _value_histogram_transform(df: DataFrame, p: dict) -> DataFrame:
+def _value_histogram_params(p: dict) -> dict:
     """Declarative per-bucket value histogram (operators/timeseries.
     value_histogram — q185, Timescale histogram()): nbins equal
     cent-exact bins over [lo, hi) plus underflow bin 0 and overflow
@@ -1004,17 +908,12 @@ def _value_histogram_transform(df: DataFrame, p: dict) -> DataFrame:
     histogram-sized. Parameters: keyColumn ('user_id'), tsColumn
     ('ts'), valueColumn ('value'), bucket ('1 day'), lo (0.0),
     hi (100.0), nbins (10)."""
-    from etl_load_spark.operators.timeseries import value_histogram
-    return value_histogram(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           value_col=p.get("valueColumn", "value"),
-                           bucket=p.get("bucket", "1 day"),
-                           lo=float(p.get("lo", 0.0)),
-                           hi=float(p.get("hi", 100.0)),
-                           nbins=int(p.get("nbins", 10)))
+    return {"lo": float(p.get("lo", 0.0)), "hi": float(p.get("hi", 100.0)),
+            "nbins": int(p.get("nbins", 10)),
+            **_series(p, "key_col", "ts_col", "value_col", "bucket")}
 
 
-def _delta_transform(df: DataFrame, p: dict) -> DataFrame:
+def _delta_params(p: dict) -> dict:
     """Declarative per-bucket gauge delta (operators/timeseries.delta —
     q186, Timescale delta()): last value − first value over the padded
     (epoch_micros, order) key, exact integer cents. Row shape CHANGES
@@ -1022,15 +921,11 @@ def _delta_transform(df: DataFrame, p: dict) -> DataFrame:
     min_by/max_by aggregate. Parameters: keyColumn ('user_id'),
     tsColumn ('ts'), valueColumn ('value'), orderColumn ('event_id'),
     bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import delta
-    return delta(df, key_col=p.get("keyColumn", "user_id"),
-                 ts_col=p.get("tsColumn", "ts"),
-                 value_col=p.get("valueColumn", "value"),
-                 order_col=p.get("orderColumn", "event_id"),
-                 bucket=p.get("bucket", "1 day"))
+    return _series(p, "key_col", "ts_col", "value_col", "order_col",
+                   "bucket")
 
 
-def _value_stats_transform(df: DataFrame, p: dict) -> DataFrame:
+def _value_stats_params(p: dict) -> dict:
     """Declarative per-bucket exact mean/variance (operators/
     timeseries.value_stats — q187, Timescale stats_agg): 4-decimal
     fixed-point mean (sign-split half-up) and sample variance
@@ -1039,14 +934,10 @@ def _value_stats_transform(df: DataFrame, p: dict) -> DataFrame:
     variance). One map-side-combinable aggregate. Parameters:
     keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
     bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import value_stats
-    return value_stats(df, key_col=p.get("keyColumn", "user_id"),
-                       ts_col=p.get("tsColumn", "ts"),
-                       value_col=p.get("valueColumn", "value"),
-                       bucket=p.get("bucket", "1 day"))
+    return _series(p, "key_col", "ts_col", "value_col", "bucket")
 
 
-def _changes_transform(df: DataFrame, p: dict) -> DataFrame:
+def _changes_params(p: dict) -> dict:
     """Declarative per-bucket change count (operators/timeseries.
     changes — q188, Prometheus changes()): consecutive differing cents
     over the (ts, order) total order; the bucket's first sample is a
@@ -1055,12 +946,8 @@ def _changes_transform(df: DataFrame, p: dict) -> DataFrame:
     (key, bucket_ts) exchange. Parameters: keyColumn ('user_id'),
     tsColumn ('ts'), valueColumn ('value'), orderColumn ('event_id'),
     bucket ('1 day')."""
-    from etl_load_spark.operators.timeseries import changes
-    return changes(df, key_col=p.get("keyColumn", "user_id"),
-                   ts_col=p.get("tsColumn", "ts"),
-                   value_col=p.get("valueColumn", "value"),
-                   order_col=p.get("orderColumn", "event_id"),
-                   bucket=p.get("bucket", "1 day"))
+    return _series(p, "key_col", "ts_col", "value_col", "order_col",
+                   "bucket")
 
 
 def _value_topk_transform(df: DataFrame, p: dict) -> DataFrame:
@@ -1072,10 +959,8 @@ def _value_topk_transform(df: DataFrame, p: dict) -> DataFrame:
     keyColumn ('user_id'), tsColumn ('ts'), valueColumn ('value'),
     bucket ('1 day'), k (3)."""
     from etl_load_spark.operators.timeseries import value_topk
-    return value_topk(df, key_col=p.get("keyColumn", "user_id"),
-                      ts_col=p.get("tsColumn", "ts"),
-                      value_col=p.get("valueColumn", "value"),
-                      bucket=p.get("bucket", "1 day"),
+    return value_topk(df, **_series(p, "key_col", "ts_col", "value_col",
+                                    "bucket"),
                       k=int(p.get("k", 3)))
 
 
@@ -1095,10 +980,8 @@ def _lttb_transform(df: DataFrame, p: dict) -> DataFrame:
     maxPointsPerSeries (int, optional)."""
     from etl_load_spark.operators.timeseries import lttb
     mps = p.get("maxPointsPerSeries")
-    return lttb(df, key_col=p.get("keyColumn", "user_id"),
-                ts_col=p.get("tsColumn", "ts"),
-                value_col=p.get("valueColumn", "value"),
-                order_col=p.get("orderColumn", "event_id"),
+    return lttb(df, **_series(p, "key_col", "ts_col", "value_col",
+                              "order_col"),
                 resolution=int(p.get("resolution", 12)),
                 max_points_per_series=None if mps is None else int(mps))
 
@@ -1172,313 +1055,271 @@ def _asof_join_transform(df: DataFrame, spark: SparkSession,
                      tolerance=tol, how=p.get("how", "left"))
 
 
-_CORPUS_TRANSFORMS = {
-    "PASSAGE_DEDUP": _passage_dedup_transform,
-    "QUALITY_FILTER": _quality_filter_transform,
-    "MIXTURE_SAMPLE": _mixture_sample_transform,
-    "QUALITY_CLASSIFIER": _quality_classifier_transform,
-    "SEMANTIC_DEDUP": _semantic_dedup_transform,
-    "CLUSTER_BALANCE": _cluster_balance_transform,
-    "CHUNK_DOCUMENTS": _chunk_documents_transform,
-    "LM_SURPRISAL": _lm_surprisal_transform,
-    "CROSS_SOURCE_DEDUP": _cross_source_dedup_transform,
-    "TOKEN_BUDGET": _token_budget_transform,
-    "ASSIGN_SHARDS": _assign_shards_transform,
-    "SEQUENCE_PACK": _sequence_pack_transform,
-    "QUANTIZE_EMBEDDINGS": _quantize_embeddings_transform,
-    "STRATIFIED_SAMPLE": _stratified_sample_transform,
-    "URL_CANONICALIZE": _url_canonicalize_transform,
-    "MARKUP_STRIP": _markup_strip_transform,
-    "ASSIGN_SPLIT": _assign_split_transform,
-    "PRIORITY_SAMPLE": _priority_sample_transform,
-    "QUOTA_SAMPLE": _quota_sample_transform,
-    "WINDOW_MINHASH_DEDUP": _window_minhash_dedup_transform,
-    "GAPFILL": _gapfill_transform,
-    "COUNTER_RATE": _counter_rate_transform,
-    "OHLC": _ohlc_transform,
-    "TIME_WEIGHTED_AVG": _time_weighted_avg_transform,
-    "STATE_DURATIONS": _state_durations_transform,
-    "HEARTBEAT_UPTIME": _heartbeat_uptime_transform,
-    "LTTB": _lttb_transform,
-    "TREND": _trend_transform,
-    "INSTANT_RATE": _instant_rate_transform,
-    "VALUE_HISTOGRAM": _value_histogram_transform,
-    "DELTA": _delta_transform,
-    "VALUE_STATS": _value_stats_transform,
-    "CHANGES": _changes_transform,
-    "VALUE_TOPK": _value_topk_transform,
-}
+@dataclass(frozen=True)
+class Rollup:
+    """A time-bucketed rollup stage with a streaming twin. One parameter
+    reader (``params``: spec parameters → operator keywords) feeds the
+    batch operator ``operators.timeseries.<op>``, its twin
+    ``streaming.windows.streaming_<op>`` (plus ``watermark``) and the
+    merge keys of the update-mode upsert. Both operators are looked up
+    by name when the stage runs. The twin drops the batch output sort
+    (streams cannot sort) and keeps its state bounded by the watermark;
+    a file destination materializes it through the update-mode
+    continuous-aggregate upsert (sources/writers.write_stream_sink)."""
+    op: str
+    params: Callable[[dict], dict]
+    #: merge-key columns after (key, bucket_ts): an operator keyword
+    #: stands for its parameter's column, any other name is an output
+    #: column of the rollup
+    merge_extra: tuple[str, ...] = ()
+    #: set on the carry-class rollups, whose batch form takes carryIn and
+    #: hotSplit: the carried value a stream cannot keep, for the refusal
+    carried: str | None = None
+
+    def batch(self, df: DataFrame, p: dict) -> DataFrame:
+        from etl_load_spark.operators import timeseries
+        kw = self.params(p)
+        if self.carried:
+            kw.update(carry_in=bool(p.get("carryIn", False)),
+                      hot_split=p.get("hotSplit"))
+        return getattr(timeseries, self.op)(df, **kw)
+
+    def stream(self, df: DataFrame, p: dict, t: str) -> DataFrame:
+        from etl_load_spark.streaming import windows
+        if self.carried and p.get("carryIn"):
+            raise ValueError(
+                f"{t} carryIn=true is batch-only on a stream: "
+                f"{self.carried}, which the watermark has already evicted "
+                "when the next bucket opens — land the self-contained "
+                "rollup incrementally, then interpolate carries downstream "
+                "(the batch operator's carry_in=True over the landed table)")
+        if self.carried and p.get("hotSplit"):
+            raise ValueError(
+                f"{t} hotSplit only applies to the batch carry form (there "
+                "is no per-key window to split on a stream — the streaming "
+                "twin is already per-bucket-parallel)")
+        return getattr(windows, f"streaming_{self.op}")(
+            df, **self.params(p), watermark=p.get("watermark", "30 minutes"))
+
+    def merge_keys(self, p: dict) -> list[str]:
+        kw = self.params(p)
+        return [kw.get("key_col", kw.get("type_col")), "bucket_ts",
+                *(kw.get(c, c) for c in self.merge_extra)]
 
 
-def _streaming_ohlc_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_ohlc
-    return streaming_ohlc(df, type_col=p.get("typeColumn", "event_type"),
-                          ts_col=p.get("tsColumn", "ts"),
-                          value_col=p.get("valueColumn", "value"),
-                          order_col=p.get("orderColumn", "event_id"),
-                          bucket=p.get("bucket", "1 day"),
-                          watermark=p.get("watermark", "30 minutes"))
+@dataclass(frozen=True)
+class Stage:
+    """One ``transformation.type``. ``build`` makes the batch plan from
+    ``(df, params)``, or from ``(df, spark, spec)`` when ``takes_spec``
+    (stages that read ``extraSources``). The streaming contract is one
+    of three: ``twin`` (a ``Rollup``, with its merge keys),
+    ``batch_only`` (the refusal text after "is batch-only", naming the
+    streaming-native alternative: the stage's plan needs more than one
+    stateful step, which no single streaming query can run, so the
+    refusal comes before Spark's output-mode error), or neither: a
+    per-row stage, whose ``build`` runs on the stream unchanged."""
+    build: Callable
+    takes_spec: bool = False
+    batch_only: str | None = None
+    twin: Rollup | None = None
+
+    def apply(self, df: DataFrame, spark: SparkSession,
+              spec: JobSpec) -> DataFrame:
+        t = spec.transformation.type.upper()
+        p = spec.transformation.parameters or {}
+        if (self.twin or self.batch_only) and df.isStreaming:
+            if self.twin:
+                return self.twin.stream(df, p, t)
+            raise ValueError(
+                f"transformation.type={t} is batch-only{self.batch_only}")
+        return self.build(df, spark, spec) if self.takes_spec \
+            else self.build(df, p)
 
 
-def _streaming_trend_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_trend
-    return streaming_trend(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           value_col=p.get("valueColumn", "value"),
-                           bucket=p.get("bucket", "1 day"),
-                           watermark=p.get("watermark", "30 minutes"))
+def _rollup(op: str, params: Callable[[dict], dict], **kw) -> Stage:
+    twin = Rollup(op, params, **kw)
+    return Stage(twin.batch, twin=twin)
 
 
-def _streaming_value_histogram_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import (
-        streaming_value_histogram,
-    )
-    return streaming_value_histogram(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        bucket=p.get("bucket", "1 day"), lo=float(p.get("lo", 0.0)),
-        hi=float(p.get("hi", 100.0)), nbins=int(p.get("nbins", 10)),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_state_durations_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_state_durations
-    if p.get("carryIn"):
-        raise ValueError(
-            "STATE_DURATIONS carryIn=true is batch-only on a stream: the "
-            "carried state is the previous bucket's last sample, which "
-            "the watermark has already evicted when the next bucket "
-            "opens — land the self-contained rollup incrementally, then "
-            "interpolate carries downstream (the batch operator's "
-            "carry_in=True over the landed table)")
-    if p.get("hotSplit"):
-        raise ValueError(
-            "STATE_DURATIONS hotSplit only applies to the batch carry "
-            "form (there is no per-key window to split on a stream — "
-            "the streaming twin is already per-bucket-parallel)")
-    return streaming_state_durations(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        state_col=p.get("stateColumn", "event_type"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_heartbeat_uptime_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_heartbeat_uptime
-    if p.get("carryIn"):
-        raise ValueError(
-            "HEARTBEAT_UPTIME carryIn=true is batch-only on a stream: "
-            "the carried beat is the previous bucket's last sample, "
-            "which the watermark has already evicted when the next "
-            "bucket opens — land the self-contained rollup "
-            "incrementally, then interpolate carries downstream (the "
-            "batch operator's carry_in=True over the landed table)")
-    if p.get("hotSplit"):
-        raise ValueError(
-            "HEARTBEAT_UPTIME hotSplit only applies to the batch carry "
-            "form (there is no per-key window to split on a stream — "
-            "the streaming twin is already per-bucket-parallel)")
-    return streaming_heartbeat_uptime(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        tolerance=p.get("tolerance", "15 minutes"),
-        emit_downtime=bool(p.get("emitDowntime", False)),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-#: rollup stages with a STREAMING form (streaming/windows.py twins).
-#: OHLC/TREND/VALUE_HISTOGRAM are the identical pure aggregation with a
-#: watermark (round 11); STATE_DURATIONS/HEARTBEAT_UPTIME (round 12,
-#: non-carry only) run as ONE watermarked collect_list aggregation plus
-#: a stateless per-bucket fold — the batch lead/lag replayed inside the
-#: sorted sample array. On a streaming job these dispatch INSTEAD of
-#: the batch transform — same parameters plus `watermark`
-#: ('30 minutes'); the batch output sort is dropped (streams cannot
-#: sort), and a file destination materializes via the update-mode
-#: continuous-aggregate upsert (sources/writers.write_stream_sink).
-def _streaming_instant_rate_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_instant_rate
-    return streaming_instant_rate(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_twa_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import (
-        streaming_time_weighted_avg,
-    )
-    if p.get("carryIn"):
-        raise ValueError(
-            "TIME_WEIGHTED_AVG carryIn=true is batch-only on a stream: "
-            "the carried sample is the previous bucket's last row, "
-            "which the watermark has already evicted when the next "
-            "bucket opens — land the self-contained rollup "
-            "incrementally, then interpolate carries downstream (the "
-            "batch operator's carry_in=True over the landed table)")
-    if p.get("hotSplit"):
-        raise ValueError(
-            "TIME_WEIGHTED_AVG hotSplit only applies to the batch carry "
-            "form (there is no per-key window to split on a stream — "
-            "the streaming twin is already per-bucket-parallel)")
-    return streaming_time_weighted_avg(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        order_col=p.get("orderColumn", "event_id"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_delta_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_delta
-    return streaming_delta(df, key_col=p.get("keyColumn", "user_id"),
-                           ts_col=p.get("tsColumn", "ts"),
-                           value_col=p.get("valueColumn", "value"),
-                           order_col=p.get("orderColumn", "event_id"),
-                           bucket=p.get("bucket", "1 day"),
-                           watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_value_stats_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_value_stats
-    return streaming_value_stats(
-        df, key_col=p.get("keyColumn", "user_id"),
-        ts_col=p.get("tsColumn", "ts"),
-        value_col=p.get("valueColumn", "value"),
-        bucket=p.get("bucket", "1 day"),
-        watermark=p.get("watermark", "30 minutes"))
-
-
-def _streaming_changes_twin(df: DataFrame, p: dict) -> DataFrame:
-    from etl_load_spark.streaming.windows import streaming_changes
-    return streaming_changes(df, key_col=p.get("keyColumn", "user_id"),
-                             ts_col=p.get("tsColumn", "ts"),
-                             value_col=p.get("valueColumn", "value"),
-                             order_col=p.get("orderColumn", "event_id"),
-                             bucket=p.get("bucket", "1 day"),
-                             watermark=p.get("watermark", "30 minutes"))
-
-
-_STREAMING_TWINS = {
-    "OHLC": _streaming_ohlc_twin,
-    "TREND": _streaming_trend_twin,
-    "VALUE_HISTOGRAM": _streaming_value_histogram_twin,
-    "STATE_DURATIONS": _streaming_state_durations_twin,
-    "HEARTBEAT_UPTIME": _streaming_heartbeat_uptime_twin,
-    "DELTA": _streaming_delta_twin,
-    "VALUE_STATS": _streaming_value_stats_twin,
-    "CHANGES": _streaming_changes_twin,
-    "INSTANT_RATE": _streaming_instant_rate_twin,
-    "TIME_WEIGHTED_AVG": _streaming_twa_twin,
+#: every built-in ``transformation.type`` besides NONE and PYTHON_SCRIPT,
+#: in the order the unknown-type error lists them
+STAGES: dict[str, Stage] = {
+    "SCD2_MERGE": Stage(_scd2_transform, takes_spec=True),
+    "PASSAGE_DEDUP": Stage(
+        _passage_dedup_transform,
+        batch_only="; streaming.windows.stream_block_dedup (checkpointed "
+                   "first-occurrence block filter) and reassemble "
+                   "documents in a downstream batch job"),
+    "QUALITY_FILTER": Stage(_quality_filter_transform),
+    "MIXTURE_SAMPLE": Stage(_mixture_sample_transform),
+    "QUALITY_CLASSIFIER": Stage(
+        _quality_classifier_transform,
+        batch_only="; score incrementally with a watermarked aggregation, "
+                   "or run the classifier as a downstream batch job over "
+                   "the landed stream"),
+    "SEMANTIC_DEDUP": Stage(
+        _semantic_dedup_transform,
+        batch_only="; dedup each landed increment in a downstream batch "
+                   "job (k-means blocking needs a corpus snapshot)"),
+    "DECONTAMINATE": Stage(
+        _decontaminate_transform, takes_spec=True,
+        batch_only="; the bloom probe and verify join are stream-safe "
+                   "map-side stages, but the per-document shared-n-gram "
+                   "aggregation needs a landed batch pass — land the "
+                   "stream, then run DECONTAMINATE downstream"),
+    "CLUSTER_BALANCE": Stage(
+        _cluster_balance_transform,
+        batch_only="; anchor fitting and cluster counts need a corpus "
+                   "snapshot; fit anchors offline, then apply "
+                   "anchor_assign (a map-side projection) in the stream "
+                   "and balance in a downstream batch job"),
+    "CHUNK_DOCUMENTS": Stage(_chunk_documents_transform),
+    "LM_SURPRISAL": Stage(
+        _lm_surprisal_transform,
+        batch_only="; the bigram count table needs a corpus snapshot; "
+                   "train offline with operators/text.bigram_model, then "
+                   "score with score_with_bigram_model inside foreachBatch "
+                   "(a stream-safe stream-static join feeding a "
+                   "per-micro-batch reduction)"),
+    "CROSS_SOURCE_DEDUP": Stage(
+        _cross_source_dedup_transform,
+        batch_only="; survivor choice needs the whole content group; "
+                   "dedup each landed increment in a downstream batch "
+                   "job, or use streaming.windows.stream_block_dedup for "
+                   "checkpointed first-seen-wins without source "
+                   "preference"),
+    "TOKEN_BUDGET": Stage(
+        _token_budget_transform,
+        batch_only="; the running token total is corpus-global; land the "
+                   "stream, then realize the budget in a downstream batch "
+                   "job (ASSIGN_SHARDS is the stream-safe layout stage)"),
+    "ASSIGN_SHARDS": Stage(_assign_shards_transform),
+    "SEQUENCE_PACK": Stage(
+        _sequence_pack_transform,
+        batch_only="; the packed stream's offsets are a corpus-global "
+                   "prefix sum; land the stream, then pack in a "
+                   "downstream batch job (ASSIGN_SHARDS is the "
+                   "stream-safe layout stage)"),
+    "INCREMENTAL_DEDUP": Stage(
+        _incremental_dedup_transform, takes_spec=True,
+        batch_only=" (the within-batch survivor needs the whole content "
+                   "group); use streaming.windows.stream_content_dedup "
+                   "for checkpointed first-seen-wins content admission on "
+                   "a live stream (stream-static anti join against the "
+                   "admitted index + stateful in-stream dedup), or land "
+                   "the stream and admit each landed batch downstream"),
+    "QUANTIZE_EMBEDDINGS": Stage(_quantize_embeddings_transform),
+    "STRATIFIED_SAMPLE": Stage(
+        _stratified_sample_transform,
+        batch_only="; the minority-stratum size is corpus-global; land "
+                   "the stream, then balance in a downstream batch job "
+                   "(MIXTURE_SAMPLE is the stream-safe fixed-rate "
+                   "alternative)"),
+    "URL_CANONICALIZE": Stage(_url_canonicalize_transform),
+    "IMPORTANCE_RESAMPLE": Stage(
+        _importance_resample_transform, takes_spec=True,
+        batch_only=" (the raw-corpus feature histogram is corpus-global); "
+                   "train the histograms offline, then score the stream "
+                   "with a broadcast join against the frozen bucket-score "
+                   "table"),
+    "MARKUP_STRIP": Stage(_markup_strip_transform),
+    "CDC_SCD2_APPLY": Stage(
+        _cdc_scd2_transform, takes_spec=True,
+        batch_only=" (version bounding needs the whole key group); land "
+                   "the feed, then apply each landed batch downstream"),
+    "ASSIGN_SPLIT": Stage(_assign_split_transform),
+    "PRIORITY_SAMPLE": Stage(
+        _priority_sample_transform,
+        batch_only="; the exact-size cut is a corpus-global top-k; land "
+                   "the stream, then sample the landed batch downstream "
+                   "(MIXTURE_SAMPLE is the stream-safe fixed-rate "
+                   "alternative)"),
+    "QUOTA_SAMPLE": Stage(
+        _quota_sample_transform,
+        batch_only="; per-stratum exact sizes are corpus-global top-k "
+                   "cuts; land the stream, then sample the landed batch "
+                   "downstream (MIXTURE_SAMPLE is the stream-safe "
+                   "fixed-rate alternative)"),
+    "HARD_NEGATIVES": Stage(
+        _hard_negatives_transform, takes_spec=True,
+        batch_only=" (the per-anchor top-k and best-positive max need the "
+                   "whole corpus snapshot); land the stream, then mine "
+                   "each landed snapshot downstream"),
+    "WINDOW_MINHASH_DEDUP": Stage(
+        _window_minhash_dedup_transform,
+        batch_only="; the banded LSH self-join and exact verify need a "
+                   "corpus snapshot; land the stream, then dedup each "
+                   "landed batch downstream "
+                   "(streaming.windows.stream_content_dedup is the "
+                   "stream-safe exact-content alternative)"),
+    "GAPFILL": Stage(
+        _gapfill_transform,
+        batch_only="; the dense grid bounds and the LOCF/interpolation "
+                   "windows are feed-global; run the streaming rollup "
+                   "(streaming.windows.time_bucket_rollup) to land bucket "
+                   "aggregates incrementally, then gap-fill the landed "
+                   "table downstream"),
+    "COUNTER_RATE": Stage(
+        _counter_rate_transform,
+        batch_only="; sample-to-sample lag needs each series' full "
+                   "ordered history; keep the last sample per series in "
+                   "keyed state (streaming.stateful, "
+                   "applyInPandasWithState) to emit deltas incrementally, "
+                   "or land the stream and roll up each landed batch "
+                   "downstream"),
+    "OHLC": _rollup("ohlc", _ohlc_params),
+    "TIME_WEIGHTED_AVG": _rollup(
+        "time_weighted_avg", _time_weighted_avg_params,
+        carried="the carried sample is the previous bucket's last row"),
+    "STATE_DURATIONS": _rollup(
+        "state_durations", _state_durations_params,
+        merge_extra=("state_col",),
+        carried="the carried state is the previous bucket's last sample"),
+    "HEARTBEAT_UPTIME": _rollup(
+        "heartbeat_uptime", _heartbeat_uptime_params,
+        carried="the carried beat is the previous bucket's last sample"),
+    "LTTB": Stage(
+        _lttb_transform,
+        batch_only="; the largest-triangle selection is sequential over "
+                   "each series' complete point set; land the stream, "
+                   "then downsample each landed slice downstream (the "
+                   "per-bucket rollups — OHLC, TIME_WEIGHTED_AVG — are "
+                   "the incremental alternatives)"),
+    "TREND": _rollup("trend", _trend_params),
+    "INSTANT_RATE": _rollup("instant_rate", _instant_rate_params),
+    "VALUE_HISTOGRAM": _rollup("value_histogram", _value_histogram_params,
+                               merge_extra=("bin",)),
+    "DELTA": _rollup("delta", _delta_params),
+    "VALUE_STATS": _rollup("value_stats", _value_stats_params),
+    "CHANGES": _rollup("changes", _changes_params),
+    "VALUE_TOPK": Stage(
+        _value_topk_transform,
+        batch_only="; the frequency ranking is two chained aggregations "
+                   "(per-value counts, then the rank cut) — not ONE "
+                   "streaming query; land the stream, then rank each "
+                   "landed batch downstream (VALUE_HISTOGRAM is the "
+                   "stream-safe distribution rollup)"),
+    "ASOF_JOIN": Stage(
+        _asof_join_transform, takes_spec=True,
+        batch_only=" (the union-window argmax needs each key's ordered "
+                   "history); for bounded-lookback stream enrichment use "
+                   "streaming.windows.stream_interval_join, or land the "
+                   "stream and enrich each landed batch downstream"),
 }
 
 
 def streaming_merge_keys(spec) -> list[str] | None:
     """The FULL group key of a streaming rollup stage's output — what the
     update-mode continuous-aggregate upsert merges micro-batches on
-    (sources/writers.rollup_upsert_writer). Update mode emits only the
-    groups changed per batch, so the sink must know the key to avoid
-    deleting sibling groups in a touched bucket partition. Returns None
-    for non-rollup specs (a raw update-mode SQL aggregate declares
+    (sources/writers.rollup_upsert_writer), read from the stage's
+    ``Rollup`` entry in ``STAGES``. Update mode emits only the groups
+    changed per batch, so the sink must know the key to avoid deleting
+    sibling groups in a touched bucket partition. Returns None for
+    stages without a twin (a raw update-mode SQL aggregate declares
     destination.details.merge_keys itself)."""
     tr = getattr(spec, "transformation", None)
-    if tr is None or not tr.type:
+    stage = STAGES.get(tr.type.upper()) if tr is not None and tr.type \
+        else None
+    if stage is None or stage.twin is None:
         return None
-    t = tr.type.upper()
-    p = tr.parameters or {}
-    if t == "OHLC":
-        return [p.get("typeColumn", "event_type"), "bucket_ts"]
-    if t == "TREND":
-        return [p.get("keyColumn", "user_id"), "bucket_ts"]
-    if t == "VALUE_HISTOGRAM":
-        return [p.get("keyColumn", "user_id"), "bucket_ts", "bin"]
-    if t == "STATE_DURATIONS":
-        return [p.get("keyColumn", "user_id"), "bucket_ts",
-                p.get("stateColumn", "event_type")]
-    if t in ("HEARTBEAT_UPTIME", "DELTA", "VALUE_STATS", "CHANGES",
-             "INSTANT_RATE", "TIME_WEIGHTED_AVG"):
-        return [p.get("keyColumn", "user_id"), "bucket_ts"]
-    return None
-
-#: stages whose plan needs multiple stateful stages — impossible as ONE
-#: streaming query; each error names the streaming-native alternative
-_BATCH_ONLY_TRANSFORMS = {
-    "PASSAGE_DEDUP": ("streaming.windows.stream_block_dedup (checkpointed "
-                      "first-occurrence block filter) and reassemble "
-                      "documents in a downstream batch job"),
-    "QUALITY_CLASSIFIER": ("score incrementally with a watermarked "
-                           "aggregation, or run the classifier as a "
-                           "downstream batch job over the landed stream"),
-    "SEMANTIC_DEDUP": ("dedup each landed increment in a downstream batch "
-                       "job (k-means blocking needs a corpus snapshot)"),
-    "CLUSTER_BALANCE": ("anchor fitting and cluster counts need a corpus "
-                        "snapshot; fit anchors offline, then apply "
-                        "anchor_assign (a map-side projection) in the "
-                        "stream and balance in a downstream batch job"),
-    "LM_SURPRISAL": ("the bigram count table needs a corpus snapshot; "
-                     "train offline with operators/text.bigram_model, "
-                     "then score with score_with_bigram_model inside "
-                     "foreachBatch (a stream-safe stream-static join "
-                     "feeding a per-micro-batch reduction)"),
-    "CROSS_SOURCE_DEDUP": ("survivor choice needs the whole content "
-                           "group; dedup each landed increment in a "
-                           "downstream batch job, or use "
-                           "streaming.windows.stream_block_dedup for "
-                           "checkpointed first-seen-wins without source "
-                           "preference"),
-    "TOKEN_BUDGET": ("the running token total is corpus-global; land the "
-                     "stream, then realize the budget in a downstream "
-                     "batch job (ASSIGN_SHARDS is the stream-safe layout "
-                     "stage)"),
-    "SEQUENCE_PACK": ("the packed stream's offsets are a corpus-global "
-                      "prefix sum; land the stream, then pack in a "
-                      "downstream batch job (ASSIGN_SHARDS is the "
-                      "stream-safe layout stage)"),
-    "STRATIFIED_SAMPLE": ("the minority-stratum size is corpus-global; "
-                          "land the stream, then balance in a downstream "
-                          "batch job (MIXTURE_SAMPLE is the stream-safe "
-                          "fixed-rate alternative)"),
-    "PRIORITY_SAMPLE": ("the exact-size cut is a corpus-global top-k; "
-                        "land the stream, then sample the landed batch "
-                        "downstream (MIXTURE_SAMPLE is the stream-safe "
-                        "fixed-rate alternative)"),
-    "QUOTA_SAMPLE": ("per-stratum exact sizes are corpus-global top-k "
-                     "cuts; land the stream, then sample the landed "
-                     "batch downstream (MIXTURE_SAMPLE is the "
-                     "stream-safe fixed-rate alternative)"),
-    "WINDOW_MINHASH_DEDUP": ("the banded LSH self-join and exact verify "
-                             "need a corpus snapshot; land the stream, "
-                             "then dedup each landed batch downstream "
-                             "(streaming.windows.stream_content_dedup is "
-                             "the stream-safe exact-content alternative)"),
-    "GAPFILL": ("the dense grid bounds and the LOCF/interpolation "
-                "windows are feed-global; run the streaming rollup "
-                "(streaming.windows.time_bucket_rollup) to land bucket "
-                "aggregates incrementally, then gap-fill the landed "
-                "table downstream"),
-    "COUNTER_RATE": ("sample-to-sample lag needs each series' full "
-                     "ordered history; keep the last sample per series "
-                     "in keyed state (streaming.stateful, "
-                     "applyInPandasWithState) to emit deltas "
-                     "incrementally, or land the stream and roll up "
-                     "each landed batch downstream"),
-    "LTTB": ("the largest-triangle selection is sequential over each "
-             "series' complete point set; land the stream, then "
-             "downsample each landed slice downstream (the per-bucket "
-             "rollups — OHLC, TIME_WEIGHTED_AVG — are the incremental "
-             "alternatives)"),
-    "VALUE_TOPK": ("the frequency ranking is two chained aggregations "
-                   "(per-value counts, then the rank cut) — not ONE "
-                   "streaming query; land the stream, then rank each "
-                   "landed batch downstream (VALUE_HISTOGRAM is the "
-                   "stream-safe distribution rollup)"),
-}
+    return stage.twin.merge_keys(tr.parameters or {})

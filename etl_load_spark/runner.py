@@ -61,14 +61,15 @@ def run_job(spark: SparkSession, spec: JobSpec,
     spark.sparkContext.setJobGroup(f"etl_load_{spec.job_id}",
                                    f"etl_load_spark job {spec.job_id}",
                                    interruptOnCancel=True)
+    source_df = None   # VALIDATE_SOURCE's read, reused by a batch LOAD
     try:
         for step in spec.steps:
             s = step.upper()
             result.step_log.append(s)
             if s == "VALIDATE_SOURCE":
                 # source must open and have a readable schema (etlModel.java:167)
-                df = read_source(spark, spec.source)
-                if not df.schema.fields:
+                source_df = read_source(spark, spec.source)
+                if not source_df.schema.fields:
                     raise JobFailedError("source has no columns")
             elif s == "TRUNCATE_DESTINATION":
                 # file sinks truncate via overwrite mode at write time (S10);
@@ -77,7 +78,7 @@ def run_job(spark: SparkSession, spec: JobSpec,
                     spec.destination.details.setdefault("mode", "overwrite")
                     spec.destination.details.setdefault("truncate", True)
             elif s == "LOAD":
-                _load(spark, spec, result)
+                _load(spark, spec, result, source_df)
             elif s == "VALIDATE_LOAD":
                 # row-count integrity (etlModel.java:170, A3): written + failed
                 # must account for everything read. Streaming file sinks
@@ -141,15 +142,19 @@ def run_job(spark: SparkSession, spec: JobSpec,
     return result
 
 
-def _load(spark: SparkSession, spec: JobSpec, result: JobResult) -> None:
-    """The LOAD step: read the source (HWM-filtered for incremental jobs),
-    build the plan once through ``build_plan`` with the error split as its
-    mapping stage, then perform one write action."""
+def _load(spark: SparkSession, spec: JobSpec, result: JobResult,
+          src_df=None) -> None:
+    """The LOAD step: take the source (``src_df``, the DataFrame
+    VALIDATE_SOURCE opened, else a fresh read; HWM-filtered for
+    incremental jobs), build the plan once through ``build_plan`` with the
+    error split as its mapping stage, then perform one write action. A
+    streaming LOAD reads its own stream."""
     if spec.streaming:
         _load_streaming(spark, spec, result)
         return
     inc = spec.incremental
-    src_df = read_source(spark, spec.source)
+    if src_df is None:
+        src_df = read_source(spark, spec.source)
     if inc:
         if spec.destination is not None:
             # appending deltas is the natural incremental sink mode

@@ -233,28 +233,47 @@ def read_stream_source(spark: SparkSession, type_name: str, d: dict) -> DataFram
     import os
     if os.path.isfile(path):
         # the file-stream source needs a DIRECTORY ('basePath' must be a
-        # directory); expose a single-file table through a symlinked temp
-        # dir, no data copy (the streaming.windows.open_event_stream
-        # pattern — and like there, link the FILE, never a directory:
-        # the source does not recurse into a linked subdirectory).
-        # The dir is DETERMINISTIC (keyed by the resolved source path,
-        # ADVICE r12): the file-stream checkpoint's seen-files log keys
-        # on the LISTED path, so a fresh mkdtemp per run made every
-        # re-run with a retained checkpoint re-ingest the whole file as
-        # new — double-counting rows into retained update-mode state.
-        import hashlib
-        import tempfile
-        resolved = os.path.realpath(path)
-        key = hashlib.md5(resolved.encode()).hexdigest()[:16]
-        stream_dir = os.path.join(tempfile.gettempdir(),
-                                  f"etl_stream_src_{key}")
-        os.makedirs(stream_dir, exist_ok=True)
-        link = os.path.join(stream_dir, os.path.basename(path))
-        if os.path.lexists(link):
-            if not os.path.islink(link) or os.readlink(link) != resolved:
-                os.remove(link)
-                os.symlink(resolved, link)
-        else:
-            os.symlink(resolved, link)
-        path = stream_dir
+        # directory)
+        path = stream_link_dir(path)
     return reader.load(path)
+
+
+def stream_link_dir(path: str) -> str:
+    """A directory of symlinks through which the file-stream source reads
+    ``path``: the file itself, or each data file of a directory (names
+    starting with ``_`` or ``.`` are Spark's hidden files and stay out).
+    No data is copied.
+
+    Each data FILE is linked, never a directory: the file source does not
+    recurse into a linked subdirectory, so a directory link silently
+    streams zero rows. The directory is deterministic, keyed by the
+    resolved source path, because a checkpoint's seen-files log keys on
+    the listed path: a fresh directory per run would make every re-run
+    with a retained checkpoint re-ingest the source as new, and every
+    call would leave a directory behind. Links to files the source no
+    longer has are dropped."""
+    import contextlib
+    import hashlib
+    import os
+    import tempfile
+
+    resolved = os.path.realpath(path)
+    if os.path.isdir(resolved):
+        want = {n: os.path.join(resolved, n)
+                for n in sorted(os.listdir(resolved))
+                if not n.startswith(("_", "."))
+                and os.path.isfile(os.path.join(resolved, n))}
+    else:
+        want = {os.path.basename(path): resolved}
+    key = hashlib.md5(resolved.encode()).hexdigest()[:16]
+    link_dir = os.path.join(tempfile.gettempdir(), f"etl_stream_src_{key}")
+    os.makedirs(link_dir, exist_ok=True)
+    for name in os.listdir(link_dir):
+        link = os.path.join(link_dir, name)
+        if not os.path.islink(link) or os.readlink(link) != want.get(name):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(link)
+    for name, target in want.items():
+        with contextlib.suppress(FileExistsError):
+            os.symlink(target, os.path.join(link_dir, name))
+    return link_dir

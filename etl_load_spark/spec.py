@@ -81,9 +81,8 @@ class Transformation:
         equal input schema).
     """
 
-    # NONE | PYTHON_SCRIPT | SCD2_MERGE | PASSAGE_DEDUP | QUALITY_FILTER
-    # | MIXTURE_SAMPLE | QUALITY_CLASSIFIER | SEMANTIC_DEDUP
-    # (built-in stages: plans/builder.apply_transformation)
+    # NONE | PYTHON_SCRIPT | a key of plans/builder.STAGES, the table of
+    # built-in stages (case-insensitive)
     type: str = "NONE"
     script_path: str | None = None
     parameters: dict = field(default_factory=dict)

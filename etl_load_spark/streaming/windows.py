@@ -23,30 +23,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from etl_load_spark.session import read_events
+from etl_load_spark.sources.readers import stream_link_dir
 from etl_load_spark.sources.writers import rollup_upsert_writer, start_stream
 
 
 def open_event_stream(spark: SparkSession, sf_dir: str,
                       max_files_per_trigger: int | None = None) -> DataFrame:
     """readStream over the events parquet (``ts`` normalized by
-    ``session.read_events``, as the batch ``read_table`` does)."""
-    import os
-    import tempfile
-
-    # the file-stream source needs a directory of data files; expose the
-    # table through a symlinked temp dir (no data copy). A Spark-written
-    # table is itself a DIRECTORY of part files — symlink each part (the
-    # file source does not recurse into a linked subdirectory; a dir
-    # symlink silently streamed ZERO rows).
-    stream_dir = tempfile.mkdtemp(prefix="etl_events_stream_")
+    ``session.read_events``, as the batch ``read_table`` does), listed
+    through the table's link directory (``sources.readers.
+    stream_link_dir``: one per source path, each part file linked)."""
     src = f"{sf_dir}/events.parquet"
-    if os.path.isdir(src):
-        import glob as _glob
-        parts = sorted(_glob.glob(os.path.join(src, "*.parquet")))
-        for i, part in enumerate(parts):
-            os.symlink(part, os.path.join(stream_dir, f"part{i}.parquet"))
-    else:
-        os.symlink(src, os.path.join(stream_dir, "events.parquet"))
+    stream_dir = stream_link_dir(src)
 
     def read():
         reader = spark.readStream.schema(spark.read.parquet(src).schema)

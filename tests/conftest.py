@@ -29,3 +29,20 @@ def tables(spark, sf_dir):
 @pytest.fixture(scope="session")
 def tmp_root(tmp_path_factory):
     return str(tmp_path_factory.mktemp("prop"))
+
+
+@pytest.fixture(scope="session")
+def known_stage_types():
+    """The type names listed by the unknown-type error that
+    ``apply_transformation`` raises — what a spec author is told exists."""
+    import re
+
+    from etl_load_spark.plans.builder import apply_transformation
+    from etl_load_spark.spec import JobSpec
+    spec = JobSpec.from_dict({
+        "jobId": "unknown-stage",
+        "source": {"type": "PARQUET", "details": {"path": "unused"}},
+        "transformation": {"type": "NO_SUCH_STAGE"}})
+    with pytest.raises(ValueError, match="unknown transformation.type") as e:
+        apply_transformation(None, None, spec)
+    return re.search(r"\(known: (.*)\)$", str(e.value)).group(1).split(", ")

@@ -15,12 +15,28 @@ from etl_load_spark.session import read_table
 
 
 def _run_pipeline(spark, sf_dir, out_dir):
-    docs = read_table(spark, sf_dir, "documents")
+    # each stage is persisted, so each count runs only its own stage
+    # instead of re-running the pipeline prefix; released in the finally
+    held = []
+
+    def stage(df):
+        held.append(df.persist())
+        return held[-1]
+
+    try:
+        return _stages(spark, sf_dir, out_dir, stage)
+    finally:
+        for df in held:
+            df.unpersist()
+
+
+def _stages(spark, sf_dir, out_dir, stage):
+    docs = stage(read_table(spark, sf_dir, "documents"))
     n0 = docs.count()
 
     # 1. language filter (marker-word language ID)
-    lang_ok = docs.withColumn("_lang", predict_lang(F.col("text"))) \
-                  .filter(F.col("_lang") == "en")
+    lang_ok = stage(docs.withColumn("_lang", predict_lang(F.col("text")))
+                    .filter(F.col("_lang") == "en"))
     n1 = lang_ok.count()
 
     # 2. quality gates: composite score + token bounds + Gopher-style rules
@@ -28,35 +44,37 @@ def _run_pipeline(spark, sf_dir, out_dir):
               .withColumn("_q", quality_score(F.col("text")))
               .withColumn("_tok", token_count(F.col("text"))))
     r = quality_rules(F.col("text"), min_words=5)
-    good = scored.filter((F.col("_q") > 0) & (F.col("_tok") >= 5)
-                         & r[0] & r[1] & r[2] & r[3])
+    good = stage(scored.filter((F.col("_q") > 0) & (F.col("_tok") >= 5)
+                               & r[0] & r[1] & r[2] & r[3]))
     n2 = good.count()
 
     # 3. exact dedup on normalized text (min doc_id survives)
     norm = good.withColumn("_norm", normalize_text(F.col("text")))
-    exact = exact_dedup(norm, ["_norm"], "doc_id") \
-        .join(norm.select("doc_id", "text", "_tok", "source"), "doc_id")
+    exact = stage(exact_dedup(norm, ["_norm"], "doc_id")
+                  .join(norm.select("doc_id", "text", "_tok", "source"),
+                        "doc_id"))
     n3 = exact.count()
 
     # 3b. passage-level dedup: rebuild text from first-occurrence blocks,
     # drop documents emptied by it
     pd = passage_dedup(exact, "doc_id", "text", block_tokens=16)
-    exact = (exact.drop("text")
-             .join(pd.filter(F.col("n_kept") > 0)
-                   .select("doc_id", F.col("text_deduped").alias("text")),
-                   "doc_id"))
+    exact = stage(exact.drop("text")
+                  .join(pd.filter(F.col("n_kept") > 0)
+                        .select("doc_id",
+                                F.col("text_deduped").alias("text")),
+                        "doc_id"))
     n3b = exact.count()
 
     # 4. near-dedup: drop the higher id of every MinHash pair
     pairs = minhash_near_dup_pairs(exact, "doc_id", "text", threshold=0.5)
     losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    survivors = exact.join(losers, "doc_id", "left_anti")
+    survivors = stage(exact.join(losers, "doc_id", "left_anti"))
     n4 = survivors.count()
 
     # 4b. data mixture: reweight sources (every source kept here at 1.0
     # except a 50% downsample of src0 — deterministic, reproducible)
     weights = {f"src{i}": (0.5 if i == 0 else 1.0) for i in range(20)}
-    survivors = mixture_sample(survivors, weights, "doc_id", "source")
+    survivors = stage(mixture_sample(survivors, weights, "doc_id", "source"))
     n4b = survivors.count()
 
     # 5. deterministic split + write partitioned by split

@@ -969,12 +969,11 @@ def test_global_plan_sweep_all_queries(spark, sf_dir):
 
 def _stage_sweep_specs(tmp_path):
     """One minimal VALID spec per declarative transformation stage —
-    every dispatch path of plans/builder.apply_transformation (all
-    _CORPUS_TRANSFORMS registry stages + the 6 spec-dispatched
-    operators + both PYTHON_SCRIPT hooks + NONE; the completeness guard
-    below derives the exact set from the dispatcher source, so a count
-    here would only go stale), each through build_plan exactly as a
-    job would run it."""
+    every dispatch path of plans/builder.apply_transformation (every
+    STAGES table entry + both PYTHON_SCRIPT hooks + NONE; the
+    completeness guard below derives the exact set from the
+    unknown-type error, so a count here would only go stale), each
+    through build_plan exactly as a job would run it."""
     import json as _json
     import textwrap
 
@@ -1187,7 +1186,8 @@ def test_order_by_sorts_after_the_transformation(spark, tmp_path):
     assert [r.k for r in df.collect()] == [0, 1, 2]
 
 
-def test_global_plan_sweep_all_stages(spark, tmp_path):
+def test_global_plan_sweep_all_stages(spark, tmp_path,
+                                      known_stage_types):
     """VERDICT r7 #3: the all-queries sweep above pins the plan floor for
     the declared query surface, but the declarative stages reach the
     same operators through build_plan — a future stage (or a stage-only
@@ -1218,57 +1218,13 @@ def test_global_plan_sweep_all_stages(spark, tmp_path):
                  "CLUSTER_BALANCE",   # anchor argmax kernel (r13)
                  "HARD_NEGATIVES"}    # cosine_batch scoring kernel (r13)
     specs = _stage_sweep_specs(tmp_path)
-    # completeness: every registry stage AND every spec-dispatched
-    # branch of apply_transformation. Discovery is STRUCTURAL (ADVICE
-    # r8): walk the AST for comparisons whose left side is tr.type /
-    # tr.type.upper() — ==/!= against a string literal registers the
-    # branch, membership in the two registries is swept via
-    # _CORPUS_TRANSFORMS below, and ANY other comparison shape
-    # (`in ("X",)`, a tuple/set literal, a variable, an aliased
-    # `t = tr.type.upper()`) fails the guard outright instead of
-    # silently escaping the sweep.
-    import ast
-    import inspect
-    import textwrap
+    # completeness: every type apply_transformation accepts — read from
+    # the unknown-type error it actually raises, which must list exactly
+    # the STAGES table's keys plus NONE and PYTHON_SCRIPT — has a spec
     from etl_load_spark.plans import builder as _b
-
-    def _is_trtype(node):
-        if (isinstance(node, ast.Call) and not node.args
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "upper"):
-            node = node.func.value
-        return (isinstance(node, ast.Attribute) and node.attr == "type"
-                and isinstance(node.value, ast.Name)
-                and node.value.id == "tr")
-
-    tree = ast.parse(textwrap.dedent(
-        inspect.getsource(_b.apply_transformation)))
-    dispatched, undiscoverable = set(), []
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Compare) and _is_trtype(node.left):
-            for op, cmp_ in zip(node.ops, node.comparators):
-                if (isinstance(op, (ast.Eq, ast.NotEq))
-                        and isinstance(cmp_, ast.Constant)
-                        and isinstance(cmp_.value, str)):
-                    dispatched.add(cmp_.value.upper())
-                elif (isinstance(op, (ast.In, ast.NotIn))
-                      and isinstance(cmp_, ast.Name)
-                      and cmp_.id in ("_CORPUS_TRANSFORMS",
-                                      "_BATCH_ONLY_TRANSFORMS",
-                                      "_STREAMING_TWINS")):
-                    pass    # registry membership — swept structurally
-                else:
-                    undiscoverable.append(ast.unparse(node))
-        if (isinstance(node, (ast.Assign, ast.AnnAssign, ast.NamedExpr))
-                and _is_trtype(getattr(node, "value", None))):
-            undiscoverable.append(ast.unparse(node))
-    assert not undiscoverable, (
-        "apply_transformation compares tr.type in a shape this sweep's "
-        f"discovery can't register: {undiscoverable} — rewrite as "
-        'tr.type.upper() == "X" or registry membership so the stage '
-        "sweep sees the branch")
-    missing = ((set(_b._CORPUS_TRANSFORMS) | dispatched)
-               - {k.split(":")[0] for k in specs})
+    known = set(known_stage_types)
+    assert known == set(_b.STAGES) | {"NONE", "PYTHON_SCRIPT"}, known
+    missing = known - {k.split(":")[0] for k in specs}
     assert not missing, f"stage sweep lacks specs for: {sorted(missing)}"
     bad = []
     for name, spec in specs.items():

@@ -634,3 +634,49 @@ def test_stream_content_dedup_against_history_and_state(spark, tmp_path):
     want = {r.content_md5
             for r in incremental_dedup(full, hist).collect()}
     assert out2 == want
+
+
+def test_open_event_stream_twice_creates_no_second_directory(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """The event stream is listed through one link directory per source
+    path: a second open of the same table reuses it instead of leaving
+    another directory under the temp dir."""
+    import glob
+    import tempfile
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    pattern = str(tmp_path / "etl_*")
+    s1 = open_event_stream(spark, sf_dir)
+    made = glob.glob(pattern)
+    s2 = open_event_stream(spark, sf_dir)
+    assert len(made) == 1 and glob.glob(pattern) == made
+    assert s1.isStreaming and s2.schema == s1.schema
+    links = [os.path.join(made[0], n) for n in os.listdir(made[0])]
+    assert links and all(os.path.islink(p) and os.path.isfile(p)
+                         for p in links)
+
+
+def test_stream_link_dir_links_each_part_and_drops_stale_links(
+        tmp_path, monkeypatch):
+    """Every data file of a directory source is linked (never the
+    directory; Spark's hidden files stay out), and a link whose part is
+    gone is dropped on the next call."""
+    import tempfile
+
+    from etl_load_spark.sources.readers import stream_link_dir
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tmp_path / "tmp")
+    src = tmp_path / "table"
+    (src / "nested").mkdir(parents=True)
+    for name in ("part-0.parquet", "part-1.parquet", "_SUCCESS",
+                 ".part-0.parquet.crc"):
+        (src / name).write_text("x")
+    d = stream_link_dir(str(src))
+    assert sorted(os.listdir(d)) == ["part-0.parquet", "part-1.parquet"]
+    assert os.readlink(os.path.join(d, "part-1.parquet")) \
+        == os.path.join(os.path.realpath(src), "part-1.parquet")
+
+    (src / "part-1.parquet").unlink()
+    (src / "part-2.parquet").write_text("x")
+    assert stream_link_dir(str(src)) == d
+    assert sorted(os.listdir(d)) == ["part-0.parquet", "part-2.parquet"]
+    assert os.listdir(tmp_path / "tmp") == [os.path.basename(d)]

@@ -1036,24 +1036,19 @@ def test_timeseries_stages_validate_bucket_as_spec_error(spark, tmp_path):
             build_plan(spark, spec)
 
 
-def test_stage_registry_readme_and_error_in_sync():
+def test_stage_registry_readme_and_error_in_sync(known_stage_types):
     """ADVICE r5 hit README drift once (a shipped stage missing from the
-    docs); pin the three surfaces together: every _CORPUS_TRANSFORMS key
-    plus the spec-dispatched stages appears in README.md AND in the
-    unknown-transformation error text users actually see."""
-    import inspect
+    docs); pin the three surfaces together: every STAGES table key
+    appears in README.md AND in the unknown-transformation error text
+    users actually see."""
     import os
 
     from etl_load_spark.plans import builder
-    stages = set(builder._CORPUS_TRANSFORMS) | {
-        "SCD2_MERGE", "CDC_SCD2_APPLY", "DECONTAMINATE",
-        "INCREMENTAL_DEDUP", "IMPORTANCE_RESAMPLE", "HARD_NEGATIVES",
-        "ASOF_JOIN"}
+    stages = set(builder.STAGES)
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     readme = open(os.path.join(root, "README.md")).read()
-    err_src = inspect.getsource(builder.apply_transformation)
     missing_readme = sorted(s for s in stages if s not in readme)
-    missing_err = sorted(s for s in stages if s not in err_src)
+    missing_err = sorted(s for s in stages if s not in known_stage_types)
     assert not missing_readme, missing_readme
     assert not missing_err, missing_err
 
