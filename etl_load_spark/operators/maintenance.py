@@ -122,7 +122,7 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
     shutil.rmtree(backup)
     # the swap replaced every part file under the same path — drop the
     # session's cached file listing or the next reader of this path
-    # (VALIDATE_LOAD's readback, downstream jobs in the same session)
+    # (a streaming VALIDATE_LOAD, downstream jobs in the same session)
     # fails FAILED_READ_FILE.FILE_NOT_EXIST on the pre-compaction parts
     spark.catalog.refreshByPath(path)
     files_after, _ = _dir_stats(path)

@@ -16,7 +16,7 @@ import logging
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, functions as F
 
 # perfbench/tracing.py wraps these by name on this module; keep them bound
 from etl_load_spark.operators.errors import JobFailedError, split_errors
@@ -62,6 +62,8 @@ def run_job(spark: SparkSession, spec: JobSpec,
                                    f"etl_load_spark job {spec.job_id}",
                                    interruptOnCancel=True)
     source_df = None   # VALIDATE_SOURCE's read, reused by a batch LOAD
+    counters = None    # the expectation counters VALIDATE_LOAD judges
+    wanted = {s.upper() for s in spec.steps}
     try:
         for step in spec.steps:
             s = step.upper()
@@ -78,7 +80,8 @@ def run_job(spark: SparkSession, spec: JobSpec,
                     spec.destination.details.setdefault("mode", "overwrite")
                     spec.destination.details.setdefault("truncate", True)
             elif s == "LOAD":
-                _load(spark, spec, result, source_df)
+                counters = _load(spark, spec, result, source_df,
+                                 validate="VALIDATE_LOAD" in wanted)
             elif s == "VALIDATE_LOAD":
                 # row-count integrity (etlModel.java:170, A3): written + failed
                 # must account for everything read. Streaming file sinks
@@ -91,7 +94,14 @@ def run_job(spark: SparkSession, spec: JobSpec,
                         f"validate_load: read={result.records_read} != "
                         f"written={result.records_written} + failed={result.records_failed}")
                 if spec.expectations:
-                    _check_expectations(spec, result)
+                    if "LOAD" not in result.step_log:
+                        raise JobFailedError("expectations require a LOAD "
+                                             "step before VALIDATE_LOAD")
+                    if spec.streaming:
+                        observable, unique = _expectation_aggs(spec)
+                        counters = read_source(spark, spec.destination).agg(
+                            *observable, *unique).first().asDict()
+                    _judge_expectations(spec, result, counters)
             elif s == "COMPACT_DESTINATION":
                 # post-load small-file compaction (maintenance.py): rewrite
                 # the just-written sink to ~target-size files. Path-based
@@ -113,11 +123,6 @@ def run_job(spark: SparkSession, spec: JobSpec,
                 result.step_log[-1] = (f"COMPACT_DESTINATION:"
                                        f"{m['files_before']}->"
                                        f"{m['files_after']}")
-                if getattr(result, "_output_is_readback", False):
-                    # a sink-readback DataFrame captured the PRE-compaction
-                    # file listing; re-read so a later VALIDATE_LOAD scans
-                    # the swapped files instead of failing FILE_NOT_EXIST
-                    result._output_df = read_source(spark, spec.destination)
             elif s in ("NOTIFY_SUCCESS", "NOTIFY_FAILURE"):
                 pass  # emitted in the finally-style epilogue below
             else:
@@ -129,13 +134,12 @@ def run_job(spark: SparkSession, spec: JobSpec,
         log.error("job %s failed: %s", spec.job_id, e)
     result.duration_sec = time.monotonic() - t0
     # Every persist the job made (the LM_SURPRISAL stage's bigram relation,
-    # the expectations persist) registered with the session cache registry;
-    # release them whether the job completed or failed — a serve/listen
-    # session must not accumulate one cache per job. The registry is per
-    # thread, so concurrent jobs keep their own caches.
+    # the `unique` expectations persist) registered with the session cache
+    # registry; release them whether the job completed or failed — a
+    # serve/listen session must not accumulate one cache per job. The
+    # registry is per thread, so concurrent jobs keep their own caches.
     from etl_load_spark.session import release_operator_caches
     release_operator_caches()
-    wanted = {s.upper() for s in spec.steps}
     if notify and (("NOTIFY_SUCCESS" in wanted and result.status == "COMPLETED")
                    or ("NOTIFY_FAILURE" in wanted and result.status == "FAILED")):
         notify(result)
@@ -143,15 +147,18 @@ def run_job(spark: SparkSession, spec: JobSpec,
 
 
 def _load(spark: SparkSession, spec: JobSpec, result: JobResult,
-          src_df=None) -> None:
+          src_df=None, validate: bool = False) -> dict | None:
     """The LOAD step: take the source (``src_df``, the DataFrame
     VALIDATE_SOURCE opened, else a fresh read; HWM-filtered for
     incremental jobs), build the plan once through ``build_plan`` with the
     error split as its mapping stage, then perform one write action. A
-    streaming LOAD reads its own stream."""
+    streaming LOAD reads its own stream. With ``validate``, returns the
+    expectation counters of the rows written (batch only)."""
+    observable, unique = (_expectation_aggs(spec)
+                          if validate and spec.expectations else ([], []))
     if spec.streaming:
         _load_streaming(spark, spec, result)
-        return
+        return None
     inc = spec.incremental
     if src_df is None:
         src_df = read_source(spark, spec.source)
@@ -180,40 +187,18 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult,
         return split.good
 
     df = build_plan(spark, spec, source_df=src_df, map_stage=map_with_errors)
-    result._output_df = df  # VALIDATE_LOAD expectations evaluate this plan
+    if unique:
+        # `unique` must count the rows written, not a re-run of the plan;
+        # run_job's epilogue releases the persist
+        df = register_operator_cache(df.persist())
     if spec.destination is None:
-        # query-only job: materialize nothing; caller uses build_plan directly
-        n = df.count()
-        result.records_read = result.records_failed + n
-        result.records_written = n
-        return
-    # Expectations must see the rows actually COMMITTED, not a re-execution
-    # of the plan (non-deterministic plans — unordered LIMIT, sampling —
-    # can produce different rows on the second run). Self-describing path
-    # sinks are read back after the write (as the streaming path does);
-    # other sinks persist the output so the write and the validation share
-    # one materialization; run_job's epilogue releases the persist.
-    readback = False
-    if spec.expectations:
-        # append-mode sinks can't be read back batch-scoped (the sink holds
-        # PRIOR batches too, and VALIDATE_LOAD's contract is "validate this
-        # load") — those use the persist path below instead
-        # dynamic partition overwrite keeps partitions untouched by this
-        # batch, so a readback would validate historical data against
-        # "this load"'s expectations — use the batch-scoped persist path
-        readback = "path" in spec.destination.details \
-            and file_format(spec.destination.type) in ("parquet", "orc") \
-            and spec.destination.details.get("mode", "overwrite") == "overwrite" \
-            and not spec.destination.details.get("overwrite_partitions")
-        if not readback:
-            df = register_operator_cache(df.persist())
-            result._output_df = df
-    metrics = write_sink(df, spec.destination)
+        # query-only job: one aggregate counts the rows and the checks
+        row = df.agg(F.count(F.lit(1)).alias("n"), *observable).first()
+        metrics = {"records_written": row["n"], "counters": row.asDict()}
+    else:  # the counters ride the write's own observation
+        metrics = write_sink(df, spec.destination, counters=observable)
     result.records_written = metrics.get("records_written", 0)
     result.records_read = result.records_failed + result.records_written
-    if readback:
-        result._output_df = read_source(spark, spec.destination)
-        result._output_is_readback = True
     if inc:
         # advance the mark only AFTER the write committed (a failed write
         # leaves the old mark → the next run re-ingests the batch); the
@@ -224,43 +209,44 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult,
         if new_mark is not None:
             save_mark(inc["state_path"], inc["column"], new_mark,
                       spec.job_id)
+    counters = metrics.get("counters")
+    if unique:
+        counters.update(df.agg(*unique).first().asDict())
+    return counters
 
 
-def _check_expectations(spec: JobSpec, result: JobResult) -> None:
-    """Evaluate the spec's declarative data-quality expectations against the
-    loaded output in ONE aggregate pass (plus one Expand per ``unique``
-    check — Spark's multi-distinct rewrite).
+#: each expectation check → the keys it needs ("a|b": either will do)
+_CHECK_KEYS = {"not_null": ["column"], "range": ["column", "min|max"],
+               "accepted_values": ["column", "values"],
+               "expression": ["sql"], "unique": ["columns|column"],
+               "row_count_min": ["value"], "row_count_max": ["value"]}
 
-    Scale: every check compiles to a map-side-combinable aggregate over the
-    already-built output plan — no per-check scans, no collect of data rows;
-    the driver sees one row of violation counters. Error-severity
-    violations raise ``JobFailedError`` (the job reports FAILED); warn
-    severity records and continues. The reference's VALIDATE_LOAD checks
-    row-count integrity only (etlModel.java:170); column-level expectations
-    are the engine-extension equivalent of its per-field nullability
-    validation (ETLCoreMappingProcessor.java null-route), applied post-load.
-    """
-    from pyspark.sql import functions as F
 
-    df = getattr(result, "_output_df", None)
-    if df is None:
-        raise JobFailedError("expectations require a LOAD step before "
-                             "VALIDATE_LOAD")
-    aggs = [F.count(F.lit(1)).alias("__n_rows")]
+def _expectation_aggs(spec: JobSpec) -> tuple[list, list]:
+    """Compile the expectations, before anything is written, into the
+    ``observable`` aggregates a write's observation carries (``__n_rows``
+    and a violation count ``__x<i>`` per column check) and the ``unique``
+    ones it cannot (observed metrics reject DISTINCT). The reference checks
+    row-count integrity only (etlModel.java:170); the column checks extend
+    its per-field nullability route (ETLCoreMappingProcessor.java)."""
+    observable = [F.count(F.lit(1)).alias("__n_rows")]
+    unique = []
     for i, ex in enumerate(spec.expectations):
         check = ex.get("check")
+        if check not in _CHECK_KEYS:
+            raise ValueError(f"unknown expectation check: {check!r}")
+        for need in _CHECK_KEYS[check]:
+            if all(ex.get(k) in (None, "", []) for k in need.split("|")):
+                raise ValueError(f"expectation {check!r} needs "
+                                 f"{need.replace('|', ' or ')}")
         col = ex.get("column")
         if check == "not_null":
             bad = F.col(col).isNull()
         elif check == "range":
-            c = F.col(col)
-            conds = []
-            if ex.get("min") is not None:
-                conds.append(c < F.lit(ex["min"]))
-            if ex.get("max") is not None:
-                conds.append(c > F.lit(ex["max"]))
-            bad = conds[0] if len(conds) == 1 else (conds[0] | conds[1])
-            bad = c.isNotNull() & bad
+            c, lo, hi = F.col(col), ex.get("min"), ex.get("max")
+            bad = c.isNotNull() & (
+                (c < F.lit(lo) if lo is not None else F.lit(False))
+                | (c > F.lit(hi) if hi is not None else F.lit(False)))
         elif check == "accepted_values":
             bad = F.col(col).isNotNull() & ~F.col(col).isin(ex["values"])
         elif check == "expression":
@@ -268,16 +254,20 @@ def _check_expectations(spec: JobSpec, result: JobResult) -> None:
             bad = ~F.coalesce(F.expr(ex["sql"]), F.lit(False))
         elif check == "unique":
             cols = ex.get("columns") or [col]
-            aggs.append((F.count(F.lit(1))
-                         - F.count_distinct(F.struct(*cols)))
-                        .alias(f"__x{i}"))
+            unique.append((F.count(F.lit(1))
+                           - F.count_distinct(F.struct(*cols)))
+                          .alias(f"__x{i}"))
             continue
-        elif check in ("row_count_min", "row_count_max"):
+        else:  # row_count_min / row_count_max read __n_rows
             continue
-        else:
-            raise ValueError(f"unknown expectation check: {check!r}")
-        aggs.append(F.sum(bad.cast("long")).alias(f"__x{i}"))
-    counters = df.agg(*aggs).collect()[0].asDict()
+        observable.append(F.sum(bad.cast("long")).alias(f"__x{i}"))
+    return observable, unique
+
+
+def _judge_expectations(spec: JobSpec, result: JobResult,
+                        counters: dict) -> None:
+    """VALIDATE_LOAD's verdict over the counters: one result per check;
+    error-severity violations fail the job, warn severity only records."""
     n_rows = counters["__n_rows"]
     failures = []
     for i, ex in enumerate(spec.expectations):
@@ -346,12 +336,5 @@ def _load_streaming(spark: SparkSession, spec: JobSpec,
     finally:
         for p in q.recentProgress:
             result.records_read += int(p["numInputRows"])
-            for sink_p in [p.get("sink") or {}]:
-                n = sink_p.get("numOutputRows", -1)
-                result.records_written += max(int(n), 0)
-    if spec.expectations:
-        # streaming loads validate what actually COMMITTED: read the sink
-        # back (file/table sinks only — exactly the sinks with a committed
-        # on-disk state to validate)
-        result._output_df = read_source(spark, spec.destination)
-        result._output_is_readback = True
+            n = (p.get("sink") or {}).get("numOutputRows", -1)
+            result.records_written += max(int(n), 0)

@@ -70,18 +70,18 @@ def get_spark(app_name: str = "etl_load_spark", master: str | None = None,
 # ---------------------------------------------------------------------------
 # Operator-internal cache registry.
 #
-# Some operators (bigram_surprisal, the runner's expectations) must persist
-# an intermediate relation — Catalyst would otherwise re-plan an expensive
-# shared subtree per consumer branch. A CacheManager-registered persist is
-# held by a STRONG reference inside the session (never GC-collected), so an
-# operator that persists and forgets pins executor memory for the life of a
-# long-running session. Every operator-internal persist registers here; the
-# materialization points (the job runner's epilogue, bench.py between
-# queries, tests) call release_operator_caches() once the result is
-# materialized. The registry is per thread: api.JobRegistry runs one thread
-# per job over one session, and a job's epilogue must release only what its
-# own thread registered. tests/test_session_hygiene.py asserts the contract
-# mechanically for every declared query.
+# Some operators (bigram_surprisal; the runner's `unique` expectations, which
+# a write's observation cannot count) must persist an intermediate relation —
+# Catalyst would otherwise re-plan the shared subtree per consumer. A
+# CacheManager-registered persist is held by a STRONG reference inside the
+# session (never GC-collected), so an operator that persists and forgets
+# pins executor memory for the life of a long-running session. Every
+# operator-internal persist registers here; the materialization points (the
+# job runner's epilogue, bench.py between queries, tests) call
+# release_operator_caches() once the result is materialized. The registry
+# is per thread: api.JobRegistry runs one thread per job over one session,
+# and a job's epilogue must release only what its own thread registered.
+# tests/test_session_hygiene.py asserts it for every declared query.
 # ---------------------------------------------------------------------------
 
 

@@ -57,7 +57,7 @@ _READERS: dict[str, Callable[[SparkSession, dict], DataFrame]] = {
     "MEMORY": readers.read_memory,
 }
 
-_WRITERS: dict[str, Callable[[DataFrame, dict], dict]] = {
+_WRITERS: dict[str, Callable[..., dict]] = {
     **{t: partial(writers.write_file, fmt=file_format(t))
        for t in _FILE_TYPES},
     "ORACLE_DB": writers.write_jdbc,
@@ -104,13 +104,15 @@ def _is_transient(err: Exception) -> bool:
 
 
 def write_sink(df: DataFrame, ep: EndpointConfig, max_attempts: int = 3,
-               backoff_sec: float = 1.0) -> dict:
+               backoff_sec: float = 1.0, counters=()) -> dict:
     """Write with the reference's retry policy (U4): ``max_attempts`` tries,
     exponential backoff, transient errors only
     (ETLCoreMainJobExecution.java:184-221). File sinks commit atomically
     (Spark's commit protocol), so a retried attempt never double-writes;
     JDBC appends should use staging tables or idempotent keys (SURVEY §7.5.4).
+    A writer that cannot observe ``counters`` is refused before it writes.
     """
+    import inspect
     import time as _time
 
     try:
@@ -118,10 +120,21 @@ def write_sink(df: DataFrame, ep: EndpointConfig, max_attempts: int = 3,
     except KeyError:
         raise ValueError(f"Unsupported destination type: {ep.type!r} "
                          f"(known: {sorted(_WRITERS)})") from None
+    kwargs = {"counters": counters} if counters else {}
+    no_counters = ValueError(f"destination type {ep.type!r} cannot count "
+                             "expectations")
+    try:
+        if counters:
+            inspect.signature(fn).bind(df, ep.details, **kwargs)
+    except TypeError:
+        raise no_counters from None
     attempt = 0
     while True:
         try:
-            return fn(df, ep.details)
+            out = fn(df, ep.details, **kwargs)
+            if counters and "counters" not in out:
+                raise no_counters
+            return out
         except Exception as e:  # noqa: BLE001 — filtered below
             attempt += 1
             if attempt >= max_attempts or not _is_transient(e):

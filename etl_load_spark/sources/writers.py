@@ -1,8 +1,9 @@
 """Sink writers (SURVEY.md §2.1 S7-S10).
 
-Each writer takes (df, details-dict), performs the write action, and returns
-a small metrics dict (records_written). Row counts come from ``df.observe``
-— no second scan (SURVEY.md §4, count-query row).
+Each writer takes (df, details-dict, counters=()), writes, and returns
+``records_written`` and the values of the ``counters`` aggregates, both from
+one fresh ``df.observe`` per attempt, placed above the layout and the sort
+(no second scan, SURVEY.md §4).
 
 Every file format has one writer, ``write_file(df, d, fmt)``, with ``fmt``
 taken from the registry's ``FILE_FORMATS`` table: layout, save mode and
@@ -23,13 +24,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
-def _observed(df: DataFrame):
+def _observed(df: DataFrame, counters=()):
     obs = Observation(f"write_{uuid.uuid4().hex[:8]}")
-    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+    return df.observe(obs, F.count(F.lit(1)).alias("n"), *counters), obs
 
 
 def _finish(obs) -> dict:
-    return {"records_written": obs.get["n"]}
+    counters = obs.get
+    return {"records_written": counters.pop("n"), "counters": counters}
 
 
 def _apply_layout(df: DataFrame, d: dict) -> DataFrame:
@@ -93,7 +95,7 @@ def _dialect_options(d: dict, fmt: str) -> dict:
     return {}
 
 
-def write_file(df: DataFrame, d: dict, fmt: str) -> dict:
+def write_file(df: DataFrame, d: dict, fmt: str, counters=()) -> dict:
     """File sink in Spark format ``fmt`` (the registry's ``FILE_FORMATS``
     value). Avro is package-gated on the external spark-avro module (its
     absence raises Spark's standard data-source error naming it); text
@@ -120,7 +122,7 @@ def write_file(df: DataFrame, d: dict, fmt: str) -> dict:
       partition writing 10 GB rolls into N files instead of one
       unsplittable-to-list monster).
     """
-    df, obs = _observed(_apply_layout(df, d))
+    df, obs = _observed(_apply_layout(df, d), counters)
     w = (df.write.format(fmt).mode(d.get("mode", "overwrite"))
          .options(**_dialect_options(d, fmt)))
     if d.get("overwrite_partitions"):
@@ -143,13 +145,13 @@ def write_file(df: DataFrame, d: dict, fmt: str) -> dict:
     return _finish(obs)
 
 
-def write_jdbc(df: DataFrame, d: dict) -> dict:
+def write_jdbc(df: DataFrame, d: dict, counters=()) -> dict:
     """JDBC batch-insert sink (S7) + truncate-before-load (S10).
 
     ``truncate=True`` with overwrite mode issues TRUNCATE TABLE instead of
     DROP (TruncateTasklet.java:54-111 semantics). ``batch_size`` maps to the
     JDBC ``batchsize`` option (ItemWriterFactory.java batching)."""
-    df, obs = _observed(df)
+    df, obs = _observed(df, counters)
     w = (df.write.format("jdbc")
          .option("url", d["url"])
          .option("dbtable", d["table"])
@@ -164,7 +166,7 @@ def write_jdbc(df: DataFrame, d: dict) -> dict:
     return _finish(obs)
 
 
-def write_rest(df: DataFrame, d: dict) -> dict:
+def write_rest(df: DataFrame, d: dict, counters=()) -> dict:
     """API_REST sink (S9): per-partition batched HTTP POST.
 
     Executor-side POSTs via foreachPartition — never a driver collect. The
@@ -190,7 +192,7 @@ def write_rest(df: DataFrame, d: dict) -> dict:
                     url, data=payload, headers={"Content-Type": "application/json"})
                 urllib.request.urlopen(req, timeout=30)
 
-    df, obs = _observed(df)
+    df, obs = _observed(df, counters)
     df.foreachPartition(send)
     return _finish(obs)
 
@@ -198,19 +200,20 @@ def write_rest(df: DataFrame, d: dict) -> dict:
 _MEMORY_SINKS: dict[str, list] = {}
 
 
-def write_memory(df: DataFrame, d: dict) -> dict:
+def write_memory(df: DataFrame, d: dict, counters=()) -> dict:
     """Collect into a named in-memory buffer (tests only — not a scale path)."""
-    rows = df.collect()
-    _MEMORY_SINKS[d.get("name", "default")] = rows
-    return {"records_written": len(rows)}
+    df, obs = _observed(df, counters)
+    _MEMORY_SINKS[d.get("name", "default")] = df.collect()
+    return _finish(obs)
 
 
-def write_kafka(df: DataFrame, d: dict) -> dict:
+def write_kafka(df: DataFrame, d: dict, counters=()) -> dict:
     """KAFKA sink: rows serialized to JSON values (S9-style declared slot).
 
     Batch df.write or streaming df.writeStream (checkpoint required for
     exactly-once). Requires the spark-sql-kafka package on the classpath.
     """
+    df, obs = (df, None) if df.isStreaming else _observed(df, counters)
     payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
     if df.isStreaming:
         q = start_stream(payload.writeStream.format("kafka")
@@ -224,7 +227,7 @@ def write_kafka(df: DataFrame, d: dict) -> dict:
      .option("kafka.bootstrap.servers", d["bootstrap_servers"])
      .option("topic", d["topic"])
      .save())
-    return {"records_written": -1}  # kafka sink reports no count
+    return _finish(obs)
 
 
 def es_options(d: dict) -> dict:
@@ -248,7 +251,7 @@ def es_options(d: dict) -> dict:
     return opts
 
 
-def write_elasticsearch(df: DataFrame, d: dict) -> dict:
+def write_elasticsearch(df: DataFrame, d: dict, counters=()) -> dict:
     """ELASTICSEARCH sink via the es-hadoop Spark connector (distributed
     per-partition bulk writes — never a driver-side client loop). The
     connector jar isn't bundled in this container; a missing package
@@ -256,7 +259,7 @@ def write_elasticsearch(df: DataFrame, d: dict) -> dict:
 
     details: nodes, port, index (as "index/type" resource), batch_size,
     id_column (+write_operation upsert/index), user/password, wan_only."""
-    df, obs = _observed(df)
+    df, obs = _observed(df, counters)
     (df.write.format("org.elasticsearch.spark.sql")
      .options(**es_options(d))
      .mode(d.get("mode", "append"))
@@ -279,14 +282,14 @@ def mongo_options(d: dict) -> dict:
     return opts
 
 
-def write_mongodb(df: DataFrame, d: dict) -> dict:
+def write_mongodb(df: DataFrame, d: dict, counters=()) -> dict:
     """MONGODB sink via the official mongo-spark connector (v10 "mongodb"
     format; executors write partitions in parallel). Package-gated like
     KAFKA/ELASTICSEARCH.
 
     details: uri, database, collection, id_column (+write_operation
     replace/update), batch_size."""
-    df, obs = _observed(df)
+    df, obs = _observed(df, counters)
     (df.write.format("mongodb")
      .options(**mongo_options(d))
      .mode(d.get("mode", "append"))

@@ -114,8 +114,8 @@ class JobSpec:
     #: ("availableNow" default | processing time string), watermark
     #: ({"column", "delay"}), output_mode (default "append").
     streaming: dict = field(default_factory=dict)
-    #: declarative data-quality expectations, evaluated against the loaded
-    #: output during VALIDATE_LOAD in ONE aggregate pass. Each entry:
+    #: declarative data-quality expectations, counted on the load's write
+    #: and judged by VALIDATE_LOAD (runner._expectation_aggs). Each entry:
     #:   {"check": "not_null"|"range"|"accepted_values"|"unique"|
     #:             "expression"|"row_count_min"|"row_count_max",
     #:    "column": ..., "columns": [...], "min"/"max"/"values"/"sql"/

@@ -1,6 +1,8 @@
 """Declarative data-quality expectations (VALIDATE_LOAD) and dynamic
 partition overwrite (the idempotent daily-reload sink pattern)."""
 
+import glob
+
 import pytest
 
 from etl_load_spark.runner import run_job
@@ -225,3 +227,132 @@ def test_expectations_cache_released_when_validation_skipped(spark, sf_dir,
     r = run_job(spark, spec)
     assert r.status == "COMPLETED", r.error
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("expectation, message", [
+    ({"check": "range", "column": "o_totalprice"},
+     "expectation 'range' needs min or max"),
+    ({"check": "row_count_min"}, "expectation 'row_count_min' needs value"),
+    ({"check": "unique"}, "expectation 'unique' needs columns or column"),
+    ({"check": "not_null"}, "expectation 'not_null' needs column"),
+])
+def test_malformed_expectation_fails_before_the_write(spark, sf_dir, tmp_path,
+                                                      expectation, message):
+    """An incomplete check fails the job with a message naming the check
+    and the missing key, and nothing reaches the destination."""
+    res = run_job(spark, _spec(sf_dir, tmp_path, [expectation]))
+    assert res.status == "FAILED"
+    assert res.error == message
+    assert not glob.glob(str(tmp_path / "out" / "part-*"))
+
+
+def _always_failing_count(res, sink_rows):
+    """The `expression: false` warn check fails every row: its count must be
+    the rows written, and the rows the sink holds."""
+    assert res.status == "COMPLETED", res.error
+    [entry] = res.expectation_results
+    assert entry["failed_rows"] == res.records_written == sink_rows
+
+
+_FALSE = [{"check": "expression", "sql": "false", "severity": "warn"}]
+
+
+def test_counters_count_the_rows_of_a_nondeterministic_plan(spark, sf_dir,
+                                                            tmp_path):
+    res = run_job(spark, _spec(sf_dir, tmp_path, _FALSE,
+                               query="SELECT * FROM src WHERE rand() < 0.5"))
+    _always_failing_count(res,
+                          spark.read.parquet(str(tmp_path / "out")).count())
+
+
+def test_counters_count_once_under_a_sort_and_a_range_layout(spark, sf_dir,
+                                                             tmp_path):
+    """The range partitioner's sample job re-runs the plan below the sort;
+    the counters sit above it and count each written row once."""
+    out = str(tmp_path / "ranged")
+    res = run_job(spark, JobSpec.from_dict({
+        "jobId": "exp_sorted",
+        "source": {"type": "PARQUET", "path": f"{sf_dir}/orders.parquet"},
+        "query": "SELECT * FROM src",
+        "orderBy": ["o_totalprice"],
+        "destination": {"type": "PARQUET", "path": out,
+                        "range_by": ["o_orderkey"], "repartition": 4},
+        "expectations": _FALSE,
+    }))
+    _always_failing_count(res, spark.read.parquet(out).count())
+
+
+def test_counters_count_the_retried_write_only(spark, sf_dir, tmp_path):
+    """A transient failure retried by write_sink: the counters come from
+    the attempt that committed."""
+    from etl_load_spark.sources.registry import register_writer
+    from etl_load_spark.sources.writers import write_file
+
+    calls = []
+
+    def flaky_parquet(df, details, **counters):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("java.io.IOException: connection reset")
+        return write_file(df, details, "parquet", **counters)
+
+    register_writer("FLAKY_PARQUET", flaky_parquet)
+    out = str(tmp_path / "retried")
+    res = run_job(spark, JobSpec.from_dict({
+        "jobId": "exp_retried",
+        "source": {"type": "PARQUET", "path": f"{sf_dir}/orders.parquet"},
+        "destination": {"type": "FLAKY_PARQUET", "path": out},
+        "expectations": _FALSE,
+    }))
+    assert len(calls) == 2
+    _always_failing_count(res, spark.read.parquet(out).count())
+
+
+def test_observable_checks_add_no_spark_job(spark, sf_dir, tmp_path):
+    """Every check but `unique` rides the write's observation, so
+    VALIDATE_LOAD runs no Spark job of its own."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(job_id, expectations):
+        res = run_job(spark, JobSpec.from_dict({
+            "jobId": job_id,
+            "source": {"type": "PARQUET", "path": f"{sf_dir}/orders.parquet"},
+            "destination": {"type": "PARQUET",
+                            "path": str(tmp_path / job_id)},
+            "steps": ["VALIDATE_SOURCE", "LOAD", "VALIDATE_LOAD"],
+            "expectations": expectations,
+        }))
+        assert res.status == "COMPLETED", res.error
+        return len(tracker.getJobIdsForGroup(f"etl_load_{job_id}"))
+
+    plain = jobs("exp_plain", [])
+    checked = jobs("exp_checked", [
+        {"check": "not_null", "column": "o_orderkey"},
+        {"check": "range", "column": "o_totalprice", "min": 0},
+        {"check": "accepted_values", "column": "o_orderstatus",
+         "values": ["O", "F", "P"]},
+        {"check": "expression", "sql": "o_custkey >= 0"},
+        {"check": "row_count_min", "value": 1},
+        {"check": "row_count_max", "value": 10**9},
+    ])
+    assert checked == plain
+
+
+def test_writer_without_counters_is_refused_before_the_write(spark, sf_dir,
+                                                             tmp_path):
+    """A writer registered with the (df, details) signature cannot carry
+    the counters: a job with expectations fails naming the destination
+    type, and the writer never runs."""
+    from etl_load_spark.sources.registry import register_writer
+
+    calls = []
+    register_writer("PLAIN_SINK", lambda df, details: calls.append(1))
+    res = run_job(spark, JobSpec.from_dict({
+        "jobId": "exp_plain_sink",
+        "source": {"type": "PARQUET", "path": f"{sf_dir}/orders.parquet"},
+        "destination": {"type": "PLAIN_SINK", "details": {}},
+        "expectations": [{"check": "not_null", "column": "o_orderkey"}],
+    }))
+    assert res.status == "FAILED"
+    assert "destination type 'PLAIN_SINK'" in res.error
+    assert not calls
