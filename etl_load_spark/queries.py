@@ -1605,10 +1605,11 @@ def q48_stateful_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the one streaming query the oracle CAN check exactly."""
     from etl_load_spark.streaming.stateful import stateful_user_stats
     from etl_load_spark.streaming.windows import (
-        open_event_stream, run_available_now_append,
+        open_event_stream, run_available_now,
     )
-    out = run_available_now_append(
-        stateful_user_stats(open_event_stream(spark, sf_dir)))
+    out = run_available_now(
+        stateful_user_stats(open_event_stream(spark, sf_dir)),
+        output_mode="append")
     # one emission per key per trigger; n_events is monotone, so the final
     # state is the row with the max count per user
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())

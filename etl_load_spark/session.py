@@ -30,6 +30,9 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
     "spark.sql.files.maxPartitionBytes": "128MB",
     "spark.ui.enabled": "false",
+    # the cap: get_spark lowers it to three quarters of physical RAM. A
+    # heap that may outgrow the box gets the driver OOM-killed by the
+    # kernel before AdmissionControl's heap probe can defer a job.
     "spark.driver.memory": "16g",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     # PySpark 4's DataFrame debugging wraps EVERY DataFrame API call with a
@@ -57,7 +60,7 @@ def get_spark(app_name: str = "etl_load_spark", master: str | None = None,
         return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(master or f"local[{cpus}]").appName(app_name)
-    conf = dict(_DEFAULTS)
+    conf = dict(_DEFAULTS, **{"spark.driver.memory": _driver_memory()})
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -65,6 +68,19 @@ def get_spark(app_name: str = "etl_load_spark", master: str | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _driver_memory() -> str:
+    """Three quarters of physical RAM in whole GiB, at most the
+    ``_DEFAULTS`` cap; the cap itself if RAM cannot be read."""
+    cap = _DEFAULTS["spark.driver.memory"]
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return cap
+    if ram <= 0:
+        return cap
+    return f"{max(1, min(int(cap[:-1]), ram * 3 // 4 // 2**30))}g"
 
 
 # ---------------------------------------------------------------------------

@@ -9,8 +9,10 @@ Every file format has one reader, ``read_file(spark, d, fmt)``, with ``fmt``
 taken from the registry's ``FILE_FORMATS`` table. Each format's read options
 live in ``_file_options``, and ``read_stream_source`` applies the same
 options to ``spark.readStream``, so a batch and a streaming read of one
-endpoint parse alike. On a source, the details key ``mode`` is the parse
-mode (on a sink it is the save mode).
+endpoint parse alike. ``read_stream_source`` is the only place that opens a
+file stream; a single local file streams through a one-name glob. On a
+source, the details key ``mode`` is the parse mode (on a sink it is the
+save mode).
 """
 
 from __future__ import annotations
@@ -229,51 +231,23 @@ def read_stream_source(spark: SparkSession, type_name: str, d: dict) -> DataFram
         reader = reader.option("maxFilesPerTrigger",
                                int(d["max_files_per_trigger"]))
     reader = reader.schema(schema or read_file(spark, d, fmt).schema)
-    path = d["path"]
+    return reader.load(_stream_path(d["path"]))
+
+
+def _stream_path(path: str) -> str:
+    """The path the file-stream source lists for ``path``.
+
+    A directory streams as it is. A local FILE streams as the one-name
+    glob ``<dir>/{<name>}``: the stream source needs a directory
+    ('basePath' must be a directory), and for a glob path Spark sets no
+    basePath. The name's Hadoop glob characters are backslash-escaped, so
+    the glob matches that file only, and the checkpoint's seen-files log
+    records the file's real path.
+    """
     import os
-    if os.path.isfile(path):
-        # the file-stream source needs a DIRECTORY ('basePath' must be a
-        # directory)
-        path = stream_link_dir(path)
-    return reader.load(path)
-
-
-def stream_link_dir(path: str) -> str:
-    """A directory of symlinks through which the file-stream source reads
-    ``path``: the file itself, or each data file of a directory (names
-    starting with ``_`` or ``.`` are Spark's hidden files and stay out).
-    No data is copied.
-
-    Each data FILE is linked, never a directory: the file source does not
-    recurse into a linked subdirectory, so a directory link silently
-    streams zero rows. The directory is deterministic, keyed by the
-    resolved source path, because a checkpoint's seen-files log keys on
-    the listed path: a fresh directory per run would make every re-run
-    with a retained checkpoint re-ingest the source as new, and every
-    call would leave a directory behind. Links to files the source no
-    longer has are dropped."""
-    import contextlib
-    import hashlib
-    import os
-    import tempfile
-
-    resolved = os.path.realpath(path)
-    if os.path.isdir(resolved):
-        want = {n: os.path.join(resolved, n)
-                for n in sorted(os.listdir(resolved))
-                if not n.startswith(("_", "."))
-                and os.path.isfile(os.path.join(resolved, n))}
-    else:
-        want = {os.path.basename(path): resolved}
-    key = hashlib.md5(resolved.encode()).hexdigest()[:16]
-    link_dir = os.path.join(tempfile.gettempdir(), f"etl_stream_src_{key}")
-    os.makedirs(link_dir, exist_ok=True)
-    for name in os.listdir(link_dir):
-        link = os.path.join(link_dir, name)
-        if not os.path.islink(link) or os.readlink(link) != want.get(name):
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(link)
-    for name, target in want.items():
-        with contextlib.suppress(FileExistsError):
-            os.symlink(target, os.path.join(link_dir, name))
-    return link_dir
+    import re
+    if not os.path.isfile(path):
+        return path
+    parent, name = os.path.split(os.path.abspath(path))
+    name = re.sub(r"([\\{}\[\]*?,])", r"\\\1", name)
+    return f"{parent}/{{{name}}}"

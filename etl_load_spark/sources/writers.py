@@ -11,8 +11,10 @@ file options apply to every format alike, and only the CSV, XML and Avro
 dialects differ (``_dialect_options``). On a sink, the details key ``mode``
 is the save mode (on a source it is the parse mode).
 
-Every streaming query starts through ``start_stream``, which sizes a new
-checkpoint's state to the cores.
+``write_stream_sink`` is the only place that builds a stream writer: file,
+MEMORY and KAFKA sinks and the update-mode rollup upsert. Every stream
+starts through ``start_stream``, which sizes a new checkpoint's state to the
+cores.
 """
 
 from __future__ import annotations
@@ -197,36 +199,31 @@ def write_rest(df: DataFrame, d: dict, counters=()) -> dict:
     return _finish(obs)
 
 
-_MEMORY_SINKS: dict[str, list] = {}
-
-
 def write_memory(df: DataFrame, d: dict, counters=()) -> dict:
-    """Collect into a named in-memory buffer (tests only — not a scale path)."""
+    """Run the plan and keep nothing: the ``noop`` format executes every
+    row and carries the write's observation (tests only)."""
     df, obs = _observed(df, counters)
-    _MEMORY_SINKS[d.get("name", "default")] = df.collect()
+    df.write.format("noop").mode("overwrite").save()
     return _finish(obs)
 
 
-def write_kafka(df: DataFrame, d: dict, counters=()) -> dict:
-    """KAFKA sink: rows serialized to JSON values (S9-style declared slot).
+def _kafka_payload(df: DataFrame, d: dict) -> tuple[DataFrame, dict]:
+    """Each row as a JSON ``value``, and the connector options: the one
+    shape of a batch (``write_kafka``) and a streaming
+    (``write_stream_sink``) Kafka write."""
+    return (df.select(F.to_json(F.struct(*df.columns)).alias("value")),
+            {"kafka.bootstrap.servers": d["bootstrap_servers"],
+             "topic": d["topic"]})
 
-    Batch df.write or streaming df.writeStream (checkpoint required for
-    exactly-once). Requires the spark-sql-kafka package on the classpath.
+
+def write_kafka(df: DataFrame, d: dict, counters=()) -> dict:
+    """KAFKA batch sink: rows serialized to JSON values (S9-style declared
+    slot); KAFKA streams go through ``write_stream_sink``. Requires the
+    spark-sql-kafka package on the classpath.
     """
-    df, obs = (df, None) if df.isStreaming else _observed(df, counters)
-    payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    if df.isStreaming:
-        q = start_stream(payload.writeStream.format("kafka")
-                         .option("kafka.bootstrap.servers",
-                                 d["bootstrap_servers"])
-                         .option("topic", d["topic"])
-                         .option("checkpointLocation", d["checkpoint"]),
-                         df.sparkSession)
-        return {"streaming_query": q.id}
-    (payload.write.format("kafka")
-     .option("kafka.bootstrap.servers", d["bootstrap_servers"])
-     .option("topic", d["topic"])
-     .save())
+    df, obs = _observed(df, counters)
+    payload, opts = _kafka_payload(df, d)
+    payload.write.format("kafka").options(**opts).save()
     return _finish(obs)
 
 
@@ -433,6 +430,11 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
     ``merge_keys``: the full group key of an update-mode rollup — required
     for update-mode file materialization (the runner derives it from the
     rollup stage; a raw SQL aggregate sets destination.details.merge_keys).
+
+    ``streaming["checkpoint"]`` is set as the checkpoint location when
+    given; jobs always give one (``runner._load_streaming`` requires it).
+    A KAFKA stream writes the same JSON ``value`` as the batch
+    ``write_kafka``.
     """
     from etl_load_spark.sources.registry import STREAM_FORMATS, file_format
     t = type_name.upper()
@@ -504,15 +506,18 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
              .foreachBatch(rollup_upsert_writer(d["path"], fmt, part,
                                                 list(keys))))
     else:
-        w = (df.writeStream.format(fmt).outputMode(mode)
-             .options(**_dialect_options(d, fmt)))
+        opts = _dialect_options(d, fmt)
+        if t == "KAFKA":
+            df, opts = _kafka_payload(df, d)
+        elif t != "MEMORY":
+            opts["path"] = d["path"]
+        w = df.writeStream.format(fmt).outputMode(mode).options(**opts)
         if t == "MEMORY":
             w = w.queryName(d.get("table", job_id))
-        else:
-            w = w.option("path", d["path"])
         if d.get("partition_by"):
             w = w.partitionBy(*d["partition_by"])
-    w = w.option("checkpointLocation", streaming["checkpoint"])
+    if streaming.get("checkpoint"):
+        w = w.option("checkpointLocation", streaming["checkpoint"])
     trigger = streaming.get("trigger", "availableNow")
     if trigger == "availableNow":
         w = w.trigger(availableNow=True)

@@ -11,6 +11,10 @@ Test strategy (§5.5): every streaming query here is executed with
 formulation; session windows additionally match a gaps-and-islands SQL
 oracle (tests/test_streaming.py).
 
+This module has no stream reader or writer of its own: streams open through
+``sources.readers.read_stream_source`` and start through
+``sources.writers.write_stream_sink``, as a streaming job's do.
+
 Scale: streaming state is keyed by (window, group) — state store size is
 bounded by watermark horizon × key cardinality, not stream length; late
 data beyond the watermark is dropped deterministically.
@@ -23,25 +27,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from etl_load_spark.session import read_events
-from etl_load_spark.sources.readers import stream_link_dir
-from etl_load_spark.sources.writers import rollup_upsert_writer, start_stream
+from etl_load_spark.sources.readers import read_stream_source
+from etl_load_spark.sources.writers import write_stream_sink
 
 
 def open_event_stream(spark: SparkSession, sf_dir: str,
                       max_files_per_trigger: int | None = None) -> DataFrame:
-    """readStream over the events parquet (``ts`` normalized by
-    ``session.read_events``, as the batch ``read_table`` does), listed
-    through the table's link directory (``sources.readers.
-    stream_link_dir``: one per source path, each part file linked)."""
-    src = f"{sf_dir}/events.parquet"
-    stream_dir = stream_link_dir(src)
-
-    def read():
-        reader = spark.readStream.schema(spark.read.parquet(src).schema)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.parquet(stream_dir)
-    return read_events(spark, read)
+    """readStream over the events parquet through ``sources.readers.
+    read_stream_source``, with ``ts`` normalized by
+    ``session.read_events``, as the batch ``read_table`` does."""
+    d = {"path": f"{sf_dir}/events.parquet",
+         "max_files_per_trigger": max_files_per_trigger}
+    return read_events(
+        spark, lambda: read_stream_source(spark, "PARQUET", d))
 
 
 def tumbling_counts(events: DataFrame, window: str = "1 hour",
@@ -161,28 +159,15 @@ def stream_interval_join(left: DataFrame, right: DataFrame,
             .drop(rk))
 
 
-def run_available_now(stream_df: DataFrame, query_name: str | None = None) -> DataFrame:
+def run_available_now(stream_df: DataFrame, query_name: str | None = None,
+                      output_mode: str = "complete") -> DataFrame:
     """Execute a streaming DataFrame with Trigger.AvailableNow into a memory
     sink and return the final result as a batch DataFrame (test harness for
-    batch-equivalence; complete output mode so aggregates are final)."""
+    batch-equivalence). ``output_mode`` "complete" makes aggregates final;
+    row-level streams like dedup run in "append"."""
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    q = start_stream(stream_df.writeStream
-                     .format("memory").queryName(name)
-                     .outputMode("complete" if stream_df.isStreaming
-                                 else "append")
-                     .trigger(availableNow=True), stream_df.sparkSession)
-    q.awaitTermination(300)
-    return stream_df.sparkSession.table(name)
-
-
-def run_available_now_append(stream_df: DataFrame,
-                             query_name: str | None = None) -> DataFrame:
-    """Append-mode variant (for row-level streams like dedup)."""
-    name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    q = start_stream(stream_df.writeStream
-                     .format("memory").queryName(name)
-                     .outputMode("append")
-                     .trigger(availableNow=True), stream_df.sparkSession)
+    q = write_stream_sink(stream_df, "MEMORY", {"table": name},
+                          {"output_mode": output_mode}, name)
     q.awaitTermination(300)
     return stream_df.sparkSession.table(name)
 
@@ -593,8 +578,8 @@ def materialize_rollup(rollup_stream: DataFrame, path: str,
     mode emits only the groups changed per micro-batch, so overwriting
     a touched partition with the batch rows alone would delete its
     sibling groups (other event_types in the same bucket) on any
-    multi-batch run — sources/writers.rollup_upsert_writer owns the
-    merge.
+    multi-batch run — ``sources.writers.write_stream_sink`` starts the
+    stream and ``rollup_upsert_writer`` owns the merge.
 
     This is the continuous-aggregate maintenance pattern SCALE.md
     describes for q53: at 100 TB the bucket column partitions the
@@ -608,14 +593,12 @@ def materialize_rollup(rollup_stream: DataFrame, path: str,
             "materialize_rollup needs the rollup's full group-key "
             "columns (key_cols) to merge micro-batches — e.g. "
             "['bucket_start', 'event_type'] for time_bucket_rollup")
-    upsert = rollup_upsert_writer(path, "parquet", partition_col,
-                                  list(key_cols))
-    return start_stream(rollup_stream.writeStream
-                        .outputMode("update")
-                        .option("checkpointLocation", checkpoint)
-                        .foreachBatch(upsert)
-                        .trigger(availableNow=True),
-                        rollup_stream.sparkSession)
+    return write_stream_sink(
+        rollup_stream, "PARQUET",
+        {"path": path, "partition_by": [partition_col],
+         "merge_keys": list(key_cols)},
+        {"checkpoint": checkpoint, "output_mode": "update"},
+        "materialize_rollup")
 
 
 def stream_block_dedup(docs: DataFrame, id_col: str = "doc_id",

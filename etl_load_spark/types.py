@@ -3,12 +3,10 @@
 The reference declares schema externally per job as mapping lists with string
 type names (Gen A: ETLCoreMappingProcessor.java:157-241) or java.sql.Types
 integer codes (Gen B: JdbcTypeHandler.java:40-137).  Here both vocabularies
-normalize to Spark DDL strings that feed ``Column.cast`` / ``StructType``.
+normalize to Spark DDL strings that feed ``Column.cast``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
 
 # Gen A string type names (case-insensitive), per the castType switch in
 # ETLCoreMappingProcessor.java:157-241.
@@ -69,15 +67,3 @@ def ddl_for(type_name_or_code) -> str:
         return "string"
     return name  # assume valid Spark DDL; Spark raises if not
 
-
-def spark_type(type_name_or_code) -> T.DataType:
-    """Parse the normalized DDL into a ``pyspark.sql.types.DataType``."""
-    return T._parse_datatype_string(ddl_for(type_name_or_code))
-
-
-def struct_from_mappings(mappings) -> T.StructType:
-    """Destination-side StructType from a mapping list (spec.Mapping)."""
-    return T.StructType([
-        T.StructField(m.dest, spark_type(m.dest_type), m.dest_nullable)
-        for m in mappings
-    ])

@@ -125,3 +125,26 @@ def test_lm_surprisal_annotate_rejects_cut_params(spark, sf_dir):
         _lm_surprisal_transform(df, {"mode": "annotate",
                                      "keepQuantile": 0.5})
     release_operator_caches()
+
+
+def test_driver_memory_default_fits_physical_ram(monkeypatch):
+    """The driver heap default is three quarters of physical RAM in whole
+    GiB, capped at the ``_DEFAULTS`` value, and the cap when RAM cannot
+    be read."""
+    from etl_load_spark import session
+
+    def ram(n_bytes):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": n_bytes // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+    ram(int(15.7e9))
+    assert session._driver_memory() == "10g"
+    ram(64 * 2**30)
+    assert session._driver_memory() == "16g"
+    ram(2**30)
+    assert session._driver_memory() == "1g"
+
+    def unreadable(_name):
+        raise ValueError("unknown sysconf name")
+    monkeypatch.setattr(session.os, "sysconf", unreadable)
+    assert session._driver_memory() == "16g"

@@ -2,7 +2,6 @@
 Trigger.AvailableNow must equal its batch formulation; session windows also
 match the gaps-and-islands SQL oracle."""
 
-import os
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,8 +9,7 @@ from etl_load_spark.session import read_table
 from etl_load_spark.sources.writers import start_stream
 from etl_load_spark.streaming.windows import (
     dedup_within_watermark, open_event_stream, run_available_now,
-    run_available_now_append, session_windows, sliding_counts,
-    tumbling_counts,
+    session_windows, sliding_counts, tumbling_counts,
 )
 
 
@@ -169,8 +167,9 @@ def test_session_matches_gaps_and_islands_sql(spark, batch_events):
 
 
 def test_dedup_within_watermark(spark, stream_events, batch_events):
-    stream = run_available_now_append(
-        dedup_within_watermark(stream_events, ["user_id", "event_type"]))
+    stream = run_available_now(
+        dedup_within_watermark(stream_events, ["user_id", "event_type"]),
+        output_mode="append")
     # every (user_id, event_type) appears exactly once
     dups = (stream.groupBy("user_id", "event_type")
             .count().filter(F.col("count") > 1).count())
@@ -228,7 +227,8 @@ def test_stateful_stats_stream_equals_batch(spark, batch_events, stream_events):
     from pyspark.sql import Window as W
     from etl_load_spark.streaming.stateful import stateful_user_stats
 
-    out = run_available_now_append(stateful_user_stats(stream_events))
+    out = run_available_now(stateful_user_stats(stream_events),
+                            output_mode="append")
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (out.withColumn("_rn", F.row_number().over(w))
              .filter(F.col("_rn") == 1)
@@ -257,8 +257,8 @@ def test_interval_join_stream_equals_batch(spark, batch_events, sf_dir):
     batch = stream_interval_join(*sides(read_table(spark, sf_dir, "events")))
     s1 = open_event_stream(spark, sf_dir)
     s2 = open_event_stream(spark, sf_dir)
-    stream = run_available_now_append(
-        stream_interval_join(sides(s1)[0], sides(s2)[1]))
+    stream = run_available_now(
+        stream_interval_join(sides(s1)[0], sides(s2)[1]), output_mode="append")
     cols = ["click_id", "err_id", "user_id"]
     got, want = _rows(stream, cols), _rows(batch, cols)
     assert got == want and len(got) > 0
@@ -380,7 +380,7 @@ def test_interval_left_outer_stream_equals_batch(spark, sf_dir):
     every outcome is final by end-of-stream — there streamed == batch."""
     from etl_load_spark.session import read_table
     from etl_load_spark.streaming.windows import (open_event_stream,
-                                                  run_available_now_append,
+                                                  run_available_now,
                                                   stream_interval_join)
     ev = read_table(spark, sf_dir, "events")
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
@@ -396,8 +396,9 @@ def test_interval_left_outer_stream_equals_batch(spark, sf_dir):
 
     batch = stream_interval_join(*sides(ev), how="leftOuter")
     s1, s2 = open_event_stream(spark, sf_dir), open_event_stream(spark, sf_dir)
-    stream = run_available_now_append(
-        stream_interval_join(sides(s1)[0], sides(s2)[1], how="leftOuter"))
+    stream = run_available_now(
+        stream_interval_join(sides(s1)[0], sides(s2)[1], how="leftOuter"),
+        output_mode="append")
     # final watermark = (max surviving click ts) - 30m delay; only clicks
     # strictly past it have final outcomes. 1-min margin for boundary rows.
     import datetime as _dt
@@ -427,7 +428,8 @@ def test_stateful_stats_tws_stream_equals_batch(spark, batch_events,
     spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
                         "RocksDBStateStoreProvider")
     try:
-        out = run_available_now_append(stateful_user_stats_tws(stream_events))
+        out = run_available_now(stateful_user_stats_tws(stream_events),
+                                output_mode="append")
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -511,7 +513,8 @@ def test_stateful_stats_null_values_stream_equals_batch(spark, tmp_path):
     src = str(tmp_path / "null_events")
     df.write.parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    out = run_available_now_append(stateful_user_stats(stream))
+    out = run_available_now(stateful_user_stats(stream),
+                            output_mode="append")
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (out.withColumn("_rn", F.row_number().over(w))
              .filter(F.col("_rn") == 1)
@@ -634,49 +637,3 @@ def test_stream_content_dedup_against_history_and_state(spark, tmp_path):
     want = {r.content_md5
             for r in incremental_dedup(full, hist).collect()}
     assert out2 == want
-
-
-def test_open_event_stream_twice_creates_no_second_directory(
-        spark, sf_dir, tmp_path, monkeypatch):
-    """The event stream is listed through one link directory per source
-    path: a second open of the same table reuses it instead of leaving
-    another directory under the temp dir."""
-    import glob
-    import tempfile
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    pattern = str(tmp_path / "etl_*")
-    s1 = open_event_stream(spark, sf_dir)
-    made = glob.glob(pattern)
-    s2 = open_event_stream(spark, sf_dir)
-    assert len(made) == 1 and glob.glob(pattern) == made
-    assert s1.isStreaming and s2.schema == s1.schema
-    links = [os.path.join(made[0], n) for n in os.listdir(made[0])]
-    assert links and all(os.path.islink(p) and os.path.isfile(p)
-                         for p in links)
-
-
-def test_stream_link_dir_links_each_part_and_drops_stale_links(
-        tmp_path, monkeypatch):
-    """Every data file of a directory source is linked (never the
-    directory; Spark's hidden files stay out), and a link whose part is
-    gone is dropped on the next call."""
-    import tempfile
-
-    from etl_load_spark.sources.readers import stream_link_dir
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
-    os.makedirs(tmp_path / "tmp")
-    src = tmp_path / "table"
-    (src / "nested").mkdir(parents=True)
-    for name in ("part-0.parquet", "part-1.parquet", "_SUCCESS",
-                 ".part-0.parquet.crc"):
-        (src / name).write_text("x")
-    d = stream_link_dir(str(src))
-    assert sorted(os.listdir(d)) == ["part-0.parquet", "part-1.parquet"]
-    assert os.readlink(os.path.join(d, "part-1.parquet")) \
-        == os.path.join(os.path.realpath(src), "part-1.parquet")
-
-    (src / "part-1.parquet").unlink()
-    (src / "part-2.parquet").write_text("x")
-    assert stream_link_dir(str(src)) == d
-    assert sorted(os.listdir(d)) == ["part-0.parquet", "part-2.parquet"]
-    assert os.listdir(tmp_path / "tmp") == [os.path.basename(d)]

@@ -598,13 +598,12 @@ def test_update_mode_file_sink_without_merge_keys_raises(spark, tmp_path):
 
 def test_single_file_stream_source_checkpoint_survives_reruns(spark,
                                                               tmp_path):
-    """ADVICE r12: a SINGLE-FILE streaming source is exposed through a
-    symlinked directory, and the file-stream checkpoint keys its
-    seen-files log on the LISTED path — so the symlink dir must be
-    deterministic across runs. A re-run with a retained checkpoint and
-    no new data must ingest ZERO rows (the per-run mkdtemp form
-    re-ingested the whole file, double-counting into retained
-    update-mode state)."""
+    """ADVICE r12: a SINGLE-FILE streaming source is listed through a
+    one-name glob, and the file-stream checkpoint keys its seen-files log
+    on the listed path — so that path must be the same across runs. A
+    re-run with a retained checkpoint and no new data must ingest ZERO
+    rows (a per-run listing directory re-ingested the whole file,
+    double-counting into retained update-mode state)."""
     import datetime as dt
     from etl_load_spark.runner import run_job
     from etl_load_spark.spec import JobSpec
@@ -915,3 +914,94 @@ def test_path_exists_asks_the_filesystem(spark, tmp_path):
     spark.range(3).write.parquet(str(tmp_path / "t"))
     assert path_exists(spark, str(tmp_path / "t"))
     assert path_exists(spark, f"file://{tmp_path / 't'}")
+
+
+def _single_file(tmp_path, name, rows):
+    """Write ``rows`` as ONE parquet file named ``name`` in tmp_path/in."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    (tmp_path / "in").mkdir(exist_ok=True)
+    path = tmp_path / "in" / name
+    pq.write_table(pa.table({"k": pa.array([r[0] for r in rows], pa.int64()),
+                             "v": [r[1] for r in rows]}), str(path))
+    return str(path)
+
+
+def test_kafka_stream_sink_reaches_the_connector(spark, tmp_path):
+    """A streaming PARQUET → KAFKA job builds a Kafka stream writer: it
+    fails with Spark's data-source error naming kafka (the connector is
+    not on this classpath), not on a file sink's missing ``path``."""
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, [[1, "a"]])
+    r = run_job(spark, JobSpec.from_dict({
+        "job_id": "stream-kafka",
+        "source": {"type": "PARQUET", "details": {"path": src}},
+        "destination": {"type": "KAFKA",
+                        "details": {"bootstrap_servers": "b:9092",
+                                    "topic": "t"}},
+        "streaming": {"checkpoint": str(tmp_path / "chk")},
+        "steps": ["LOAD"],
+    }))
+    assert r.status == "FAILED"
+    assert "find data source: kafka" in r.error, r.error
+
+
+def test_single_file_stream_makes_no_temp_directory_and_resumes(
+        spark, tmp_path, monkeypatch):
+    """A single-file source streams in place: nothing is made under the
+    temp directory, and a re-run on the retained checkpoint reads 0
+    rows."""
+    import os
+    import tempfile
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    src = _single_file(tmp_path, "one.parquet", [[1, "a"], [2, "b"]])
+    spec = _spec(src, str(tmp_path / "dest"), str(tmp_path / "chk"))
+
+    r1 = run_job(spark, spec)
+    assert r1.status == "COMPLETED", r1.error
+    assert r1.records_read == 2
+    r2 = run_job(spark, spec)
+    assert r2.status == "COMPLETED", r2.error
+    assert r2.records_read == 0
+    assert spark.read.parquet(str(tmp_path / "dest")).count() == 2
+    assert os.listdir(tmp_path / "tmp") == []
+
+
+def test_single_file_stream_name_with_comma_reads_that_file(spark,
+                                                            tmp_path):
+    """A comma is a glob alternation inside braces: the file name is
+    escaped, so ``o, x.parquet`` streams all its rows and neither the
+    sibling ``o`` nor ``o, x.parquet2``."""
+    src = _single_file(tmp_path, "o, x.parquet",
+                       [[1, "a"], [2, "b"], [3, "c"]])
+    _single_file(tmp_path, "o", [[10, "x"]])
+    _single_file(tmp_path, "o, x.parquet2", [[20, "y"]])
+    r = run_job(spark, _spec(src, str(tmp_path / "dest"),
+                             str(tmp_path / "chk")))
+    assert r.status == "COMPLETED", r.error
+    assert r.records_read == 3
+    got = {x.key for x in spark.read.parquet(str(tmp_path / "dest")).collect()}
+    assert got == {1, 2, 3}
+
+
+def test_one_stream_reader_and_one_stream_writer():
+    """Only ``read_stream_source`` and ``read_kafka`` use ``.readStream``,
+    and only ``write_stream_sink`` uses ``.writeStream``, anywhere in the
+    package: every stream reads and writes through one path each."""
+    import ast
+    import pathlib
+
+    import etl_load_spark
+    allowed = {"readStream": {"read_stream_source", "read_kafka"},
+               "writeStream": {"write_stream_sink"}}
+    root = pathlib.Path(etl_load_spark.__file__).parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text(), str(path)).body:
+            owner = getattr(top, "name", None)
+            stray += [f"{path.relative_to(root)}:{n.lineno} .{n.attr} "
+                      f"in {owner}" for n in ast.walk(top)
+                      if isinstance(n, ast.Attribute) and n.attr in allowed
+                      and owner not in allowed[n.attr]]
+    assert not stray, stray
