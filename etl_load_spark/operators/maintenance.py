@@ -20,7 +20,8 @@ live path is restored, a leftover backup beside a live path (crash during
 the final backup delete) is dropped, and a stale temp dir is cleared.
 Callers never see a half state across crash + re-run.
 
-Scale: one read + one write of the data, no driver materialization; the
+Scale: one read + one write of the data (none when every directory
+already holds one file within the target), no driver materialization; the
 repartition count is computed from on-disk bytes, so output files land
 near the target regardless of row width. With ``partition_by`` the
 shuffle keys on (partition columns, content-hash salt) where each
@@ -40,23 +41,44 @@ import shutil
 from pyspark.sql import SparkSession
 
 
-def _dir_stats(path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) under a local path (parquet/orc parts)."""
-    n, b = 0, 0
+def _dir_stats(path: str) -> dict[str, list[int]]:
+    """The data files (parquet/orc parts) under a local path: each
+    directory's path relative to ``path`` → its files' sizes in bytes."""
+    dirs = {}
     for dirpath, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.startswith(("_", ".")):
-                continue
-            n += 1
-            b += os.path.getsize(os.path.join(dirpath, fn))
-    return n, b
+        sizes = [os.path.getsize(os.path.join(dirpath, fn)) for fn in files
+                 if not fn.startswith(("_", "."))]
+        if sizes:
+            dirs[os.path.relpath(dirpath, path)] = sizes
+    return dirs
+
+
+def _is_compact(dirs: dict[str, list[int]], target_bytes: int,
+                partition_by: list[str] | None) -> bool:
+    """Whether a rewrite could change nothing: every data file sits alone
+    in the directory the rewrite would put it in (the root, or one
+    ``col=value`` level per ``partition_by`` column), within the target."""
+    levels = [f"{c}=" for c in partition_by or []]
+    for rel, sizes in dirs.items():
+        parts = [] if rel == "." else rel.split(os.sep)
+        if (len(sizes) > 1 or sizes[0] > target_bytes
+                or len(parts) != len(levels)
+                or not all(p.startswith(c) for p, c in zip(parts, levels))):
+            return False
+    return True
 
 
 def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
                   fmt: str = "parquet",
                   partition_by: list[str] | None = None) -> dict:
     """Rewrite ``path`` to ~``target_file_mb`` files; returns metrics
-    {files_before, files_after, bytes, rows, partitions}."""
+    {files_before, files_after, bytes, rows, partitions}.
+
+    A dataset that is already compact (see ``_is_compact``: after crash
+    recovery, no directory holds more than one data file and no file
+    exceeds the target) is left as it is, without a Spark read: then
+    ``files_after == files_before`` and ``rows`` is None, since nothing
+    was counted."""
     from pyspark.sql import functions as F
 
     tmp = path.rstrip("/") + ".compact_tmp"
@@ -69,10 +91,16 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
             os.rename(backup, path)  # crashed between the two renames
     if os.path.exists(tmp):
         shutil.rmtree(tmp)          # stale partial rewrite
-    files_before, total_bytes = _dir_stats(path)
+    dirs = _dir_stats(path)
+    files_before = sum(len(sizes) for sizes in dirs.values())
+    total_bytes = sum(sum(sizes) for sizes in dirs.values())
+    target_bytes = target_file_mb * 1024 * 1024
+    if os.path.isdir(path) and _is_compact(dirs, target_bytes, partition_by):
+        return {"files_before": files_before, "files_after": files_before,
+                "bytes": total_bytes, "rows": None,
+                "partitions": list(partition_by or [])}
     df = getattr(spark.read, fmt)(path)
     rows = df.count()
-    target_bytes = target_file_mb * 1024 * 1024
     n_out = max(1, math.ceil(total_bytes / target_bytes))
     if partition_by:
         # key the shuffle on (partition cols, salt): partition cols alone
@@ -125,7 +153,7 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
     # (a streaming VALIDATE_LOAD, downstream jobs in the same session)
     # fails FAILED_READ_FILE.FILE_NOT_EXIST on the pre-compaction parts
     spark.catalog.refreshByPath(path)
-    files_after, _ = _dir_stats(path)
+    files_after = sum(len(sizes) for sizes in _dir_stats(path).values())
     return {"files_before": files_before, "files_after": files_after,
             "bytes": total_bytes, "rows": rows,
             "partitions": list(partition_by or [])}

@@ -84,10 +84,10 @@ def run_job(spark: SparkSession, spec: JobSpec,
                                  validate="VALIDATE_LOAD" in wanted)
             elif s == "VALIDATE_LOAD":
                 # row-count integrity (etlModel.java:170, A3): written + failed
-                # must account for everything read. Streaming file sinks
-                # don't report numOutputRows in progress — their integrity
-                # mechanism is the checkpoint/commit log, and expectations
-                # below read the committed sink directly.
+                # must account for everything read. Not for streams: a
+                # rollup writes one row per group, not per row read — their
+                # integrity mechanism is the checkpoint/commit log, and
+                # expectations below read the committed sink directly.
                 if not spec.streaming and \
                         result.records_written + result.records_failed < result.records_read:
                     raise JobFailedError(
@@ -152,12 +152,13 @@ def _load(spark: SparkSession, spec: JobSpec, result: JobResult,
     VALIDATE_SOURCE opened, else a fresh read; HWM-filtered for
     incremental jobs), build the plan once through ``build_plan`` with the
     error split as its mapping stage, then perform one write action. A
-    streaming LOAD reads its own stream. With ``validate``, returns the
+    streaming LOAD reads its own stream, under ``src_df``'s schema when
+    VALIDATE_SOURCE opened one. With ``validate``, returns the
     expectation counters of the rows written (batch only)."""
     observable, unique = (_expectation_aggs(spec)
                           if validate and spec.expectations else ([], []))
     if spec.streaming:
-        _load_streaming(spark, spec, result)
+        _load_streaming(spark, spec, result, src_df)
         return None
     inc = spec.incremental
     if src_df is None:
@@ -291,7 +292,7 @@ def _judge_expectations(spec: JobSpec, result: JobResult,
 
 
 def _load_streaming(spark: SparkSession, spec: JobSpec,
-                    result: JobResult) -> None:
+                    result: JobResult, src_df=None) -> None:
     """Streaming LOAD (SURVEY §7 step 7): the same spec, executed
     incrementally. The stream is read, watermarked and handed to
     ``build_plan`` — query, filter, mappings and transformation apply
@@ -304,10 +305,16 @@ def _load_streaming(spark: SparkSession, spec: JobSpec,
     projection, casts null-on-failure — route-and-count error handling
     belongs to a batch backfill or a foreachBatch sink); AvailableNow is
     the default trigger so the job terminates after draining what exists.
+
+    The stream takes ``src_df``'s schema (VALIDATE_SOURCE's read) when
+    there is one. Written rows are the sink's ``STREAM_WRITTEN``
+    observation summed over the micro-batches — one per emitted group for
+    a rollup; file and foreachBatch sinks report no ``numOutputRows``.
     """
     from etl_load_spark.plans.builder import streaming_merge_keys
     from etl_load_spark.sources.readers import read_stream_source
-    from etl_load_spark.sources.writers import write_stream_sink
+    from etl_load_spark.sources.writers import (STREAM_WRITTEN,
+                                                write_stream_sink)
 
     if spec.incremental:
         raise ValueError("incremental (HWM) and streaming modes are "
@@ -319,7 +326,8 @@ def _load_streaming(spark: SparkSession, spec: JobSpec,
         raise ValueError("order_by is undefined on an unbounded stream")
     if spec.destination is None:
         raise ValueError("streaming jobs require a destination")
-    df = read_stream_source(spark, spec.source.type, spec.source.details)
+    df = read_stream_source(spark, spec.source.type, spec.source.details,
+                            None if src_df is None else src_df.schema)
     wm = spec.streaming.get("watermark")
     if wm:
         df = df.withWatermark(wm["column"], wm["delay"])
@@ -336,5 +344,5 @@ def _load_streaming(spark: SparkSession, spec: JobSpec,
     finally:
         for p in q.recentProgress:
             result.records_read += int(p["numInputRows"])
-            n = (p.get("sink") or {}).get("numOutputRows", -1)
-            result.records_written += max(int(n), 0)
+            written = p["observedMetrics"].get(STREAM_WRITTEN)
+            result.records_written += written["n"] if written else 0

@@ -206,15 +206,17 @@ def read_mongodb(spark: SparkSession, d: dict) -> DataFrame:
     return reader.load()
 
 
-def read_stream_source(spark: SparkSession, type_name: str, d: dict) -> DataFrame:
+def read_stream_source(spark: SparkSession, type_name: str, d: dict,
+                       schema=None) -> DataFrame:
     """Streaming read of a source endpoint (SURVEY §7 step 7): the same
     endpoint details as the batch readers, executed incrementally — each
     micro-batch processes only files not yet recorded in the checkpoint,
     which is what turns a batch spec into an incremental ingest job.
 
-    File streams need a schema up front; if the spec doesn't declare one,
-    it is inferred ONCE from the existing files via the batch reader
-    (driver-side metadata read, not a data scan for parquet/orc).
+    File streams need a schema up front: the spec's declared one, else
+    ``schema`` (the schema a batch read of the same endpoint already
+    found), else it is inferred ONCE from the existing files via the batch
+    reader (driver-side metadata read, not a data scan for parquet/orc).
     """
     from etl_load_spark.sources.registry import STREAM_FORMATS, file_format
     if type_name.upper() == "KAFKA":
@@ -224,13 +226,14 @@ def read_stream_source(spark: SparkSession, type_name: str, d: dict) -> DataFram
         raise ValueError(f"source type {type_name!r} does not support "
                          f"streaming (known: file formats {STREAM_FORMATS}, "
                          "KAFKA)")
-    opts, schema = _file_options(d, fmt)
+    opts, declared = _file_options(d, fmt)
     reader = spark.readStream.format(fmt).options(**opts)
     if d.get("max_files_per_trigger"):
         # bounds micro-batch size — the streaming analogue of chunked loads
         reader = reader.option("maxFilesPerTrigger",
                                int(d["max_files_per_trigger"]))
-    reader = reader.schema(schema or read_file(spark, d, fmt).schema)
+    reader = reader.schema(declared or schema
+                           or read_file(spark, d, fmt).schema)
     return reader.load(_stream_path(d["path"]))
 
 

@@ -321,12 +321,21 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
     (``key_cols`` — batch rows win), before overwriting those
     partitions.
 
+    One pass per micro-batch: the batch is localCheckpoint'ed first, so
+    the stateful plan (planning, shuffle, state-store commit) runs once
+    and the touched-value collect, the merge and the write all read the
+    checkpoint. ``persist()`` is not a substitute: on some rollup plans
+    (the OHLC twin) a persisted micro-batch fails Spark's
+    ``assertOptimized`` with ``key not found``.
+
     Scale posture: per micro-batch this reads back only the touched
     (open) bucket partitions — bounded by the watermark horizon, never
     the full materialization — and the anti-join's build side is the
     batch's distinct key set (micro-batch-sized, broadcastable). The
     merged slice is localCheckpoint'ed so no lazy read of ``path``
-    survives into the overwrite of the same path.
+    survives into the overwrite of the same path. The write hashes on
+    ``partition_col``, so every touched partition lands as exactly one
+    file and a later ``compact_files`` has nothing to rewrite.
 
     NULL handling: group keys join null-safely (NULL event_type is a
     legitimate rollup group — the q71 eqNullSafe lesson) and a NULL
@@ -342,6 +351,7 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
     from functools import reduce
 
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
+        batch_df = batch_df.localCheckpoint()
         # the touched partition values, which the merge needs anyway,
         # double as the empty-batch check
         touched = [r[0] for r in
@@ -370,7 +380,7 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
             kept = existing.where(pred).join(
                 F.broadcast(batch_keys), cond, "left_anti")
             out = batch_df.unionByName(kept).localCheckpoint()
-        (out.write.mode("overwrite")
+        (out.repartition(partition_col).write.mode("overwrite")
          .format(fmt)
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(partition_col)
@@ -379,14 +389,14 @@ def rollup_upsert_writer(path: str, fmt: str, partition_col: str,
     return upsert
 
 
-#: held while ``start_stream`` has the session's partition count lowered
+#: held while ``start_stream`` has the session's confs changed
 _START_LOCK = threading.Lock()
 
 
-def start_stream(writer: DataStreamWriter,
-                 spark: SparkSession) -> StreamingQuery:
+def start_stream(writer: DataStreamWriter, spark: SparkSession,
+                 confs: dict | None = None) -> StreamingQuery:
     """Start a streaming query; a new checkpoint gets one state partition
-    per core.
+    per core, and the query runs under the caller's ``confs``.
 
     A stateful operator's shuffle keeps the partition count its checkpoint
     was created with, and AQE never coalesces it. Under the batch default
@@ -397,24 +407,35 @@ def start_stream(writer: DataStreamWriter,
     its offset log records, which Spark restores over the session value.
 
     The query clones the session inside ``start()``, so the lowered value
-    is set only for the length of that call, and restored after it. The
-    lock keeps two concurrent starts from restoring each other's value.
-    A batch job that plans on another thread during the call sees the
-    lowered value too, and shuffles into at most one partition per core.
+    and ``confs`` (start-time SQL confs of this query only, e.g. no
+    no-data micro-batches) are set only for the length of that call, and
+    restored after it. The lock keeps two concurrent starts from restoring
+    each other's values. A batch job that plans on another thread during
+    the call sees them too, and shuffles into at most one partition per
+    core.
     """
     key = "spark.sql.shuffle.partitions"
+    confs = confs or {}
     with _START_LOCK:
-        prev = spark.conf.get(key)
-        spark.conf.set(key, str(min(int(prev),
+        prev = {k: spark.conf.get(k) for k in (key, *confs)}
+        spark.conf.set(key, str(min(int(prev[key]),
                                     spark.sparkContext.defaultParallelism)))
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         try:
             return writer.start()
         finally:
-            spark.conf.set(key, prev)
+            for k, v in prev.items():
+                spark.conf.set(k, v)
 
 
 #: the non-file streaming sinks; file sinks resolve through the registry
 _STREAM_SINK_FORMATS = {"MEMORY": "memory", "KAFKA": "kafka"}
+
+#: the named observation that counts each micro-batch's written rows: a
+#: stream's progress reads it under ``observedMetrics`` (file and
+#: foreachBatch sinks report ``numOutputRows`` as -1)
+STREAM_WRITTEN = "etl_written"
 
 
 def write_stream_sink(df: DataFrame, type_name: str, d: dict,
@@ -434,7 +455,10 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
     ``streaming["checkpoint"]`` is set as the checkpoint location when
     given; jobs always give one (``runner._load_streaming`` requires it).
     A KAFKA stream writes the same JSON ``value`` as the batch
-    ``write_kafka``.
+    ``write_kafka``. Every micro-batch counts the rows it writes in the
+    ``STREAM_WRITTEN`` observation of its progress. The update-mode upsert
+    runs without no-data micro-batches; other streams keep them, because
+    an append-mode window closes in one.
     """
     from etl_load_spark.sources.registry import STREAM_FORMATS, file_format
     t = type_name.upper()
@@ -445,6 +469,8 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
                          f"{sorted(_STREAM_SINK_FORMATS)})")
     mode = streaming.get("output_mode",
                          streaming.get("outputMode", "append"))
+    df = df.observe(STREAM_WRITTEN, F.count(F.lit(1)).alias("n"))
+    confs = {}
     if mode == "update" and fmt in ("csv", "json"):
         # the upsert merge reads the materialization back each batch;
         # a non-self-describing format cannot round-trip the rollup
@@ -505,6 +531,10 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
         w = (df.writeStream.outputMode("update")
              .foreachBatch(rollup_upsert_writer(d["path"], fmt, part,
                                                 list(keys))))
+        # an update-mode eviction emits nothing, and the next data batch
+        # evicts by the persisted watermark anyway: the no-data batch
+        # after every AvailableNow run would only plan and commit state
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     else:
         opts = _dialect_options(d, fmt)
         if t == "KAFKA":
@@ -523,4 +553,4 @@ def write_stream_sink(df: DataFrame, type_name: str, d: dict,
         w = w.trigger(availableNow=True)
     else:
         w = w.trigger(processingTime=trigger)
-    return start_stream(w, df.sparkSession)
+    return start_stream(w, df.sparkSession, confs)

@@ -150,3 +150,63 @@ def test_compact_partitioned_keeps_null_partition_rows(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 300
     assert back.filter("day IS NULL").count() == 100
+
+
+def _files(path):
+    """Every data file under path → its mtime in nanoseconds."""
+    import os
+    return {f: os.stat(f).st_mtime_ns
+            for f in glob.glob(f"{path}/**/part-*", recursive=True)}
+
+
+def test_compact_table_is_left_without_a_spark_job(spark, tmp_path):
+    """A partitioned table with one file per partition, each under the
+    target, is already compact: compact_files runs no Spark job and
+    leaves every file as it was, and says so in its metrics."""
+    path = str(tmp_path / "compact")
+    (spark.createDataFrame([(d, i) for d in ("a", "b", "c")
+                            for i in range(50)], "day string, n int")
+     .repartition("day").write.partitionBy("day").parquet(path))
+    before = _files(path)
+    assert len(before) == 3
+    sc = spark.sparkContext
+    sc.setJobGroup("compact_noop", "compact_files on a compact table")
+    try:
+        m = compact_files(spark, path, target_file_mb=1, partition_by=["day"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("compact_noop") == []
+    assert _files(path) == before
+    assert m == {"files_before": 3, "files_after": 3,
+                 "bytes": m["bytes"], "rows": None, "partitions": ["day"]}
+
+
+def test_compact_rewrites_two_files_in_one_partition(spark, tmp_path):
+    """One partition directory with two files is not compact: it is
+    rewritten to one, the others are rewritten too, and no row is lost."""
+    path = str(tmp_path / "two")
+    df = spark.createDataFrame([(d, i) for d in ("a", "b") for i in range(50)],
+                               "day string, n int")
+    df.repartition("day").write.partitionBy("day").parquet(path)
+    df.where("day = 'a'").coalesce(1).write.mode("append") \
+      .partitionBy("day").parquet(path)
+    before = _files(path)
+    m = compact_files(spark, path, target_file_mb=1, partition_by=["day"])
+    assert (m["files_before"], m["files_after"], m["rows"]) == (3, 2, 150)
+    assert not set(_files(path)) & set(before)
+    assert spark.read.parquet(path).count() == 150
+
+
+def test_compact_rewrites_a_file_above_the_target(spark, tmp_path):
+    """One file larger than the target is not compact, even alone in its
+    directory: the rewrite splits it."""
+    path = str(tmp_path / "big")
+    (spark.range(40_000).selectExpr("repeat(md5(cast(id AS string)), 8) AS p")
+     .coalesce(1).write.parquet(path))
+    import os
+    before = _files(path)
+    assert [os.path.getsize(f) > 1024 * 1024 for f in before] == [True]
+    m = compact_files(spark, path, target_file_mb=1)
+    assert m["files_before"] == 1 and m["files_after"] > 1
+    assert m["rows"] == 40_000
+    assert not set(_files(path)) & set(before)

@@ -734,6 +734,7 @@ def test_streaming_csv_source_parses_like_batch(spark, tmp_path):
 
 
 _PARTITIONS = "spark.sql.shuffle.partitions"
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
 _TREND_SCHEMA = ("event_id bigint, user_id bigint, ts timestamp,"
                  " value double")
 _TREND_COLS = ["user_id", "bucket_ts", "n_samples", "slope_per_sec"]
@@ -853,8 +854,9 @@ def test_concurrent_stream_starts_restore_session_partitions(spark,
                                                             tmp_path):
     """Two threads start stateful streams at the same moment: each new
     checkpoint gets one partition per core, and afterwards the session
-    reads its original value (the lock keeps one start from restoring
-    the other's lowered value). A failing start restores it too."""
+    reads its original values — the partition count and the start-time
+    confs the caller passed (the lock keeps one start from restoring the
+    other's changed values). A failing start restores them too."""
     import threading
     import uuid
 
@@ -865,6 +867,7 @@ def test_concurrent_stream_starts_restore_session_partitions(spark,
          .write.parquet(str(tmp_path / "in"))
     cores = spark.sparkContext.defaultParallelism
     before = spark.conf.get(_PARTITIONS)
+    no_data_before = spark.conf.get(_NO_DATA)
     barrier = threading.Barrier(2)
     queries, errors = [], []
 
@@ -878,7 +881,7 @@ def test_concurrent_stream_starts_restore_session_partitions(spark,
              .trigger(availableNow=True))
         barrier.wait()
         try:
-            queries.append(start_stream(w, spark))
+            queries.append(start_stream(w, spark, {_NO_DATA: "false"}))
         except Exception as e:  # noqa: BLE001 — reported below
             errors.append(e)
 
@@ -891,6 +894,7 @@ def test_concurrent_stream_starts_restore_session_partitions(spark,
         q.awaitTermination(120)
     assert not errors, errors
     assert spark.conf.get(_PARTITIONS) == before
+    assert spark.conf.get(_NO_DATA) == no_data_before
     for i in range(2):
         assert _recorded_partitions(tmp_path / f"chk{i}") \
             == {str(min(int(before), cores))}
@@ -900,8 +904,9 @@ def test_concurrent_stream_starts_restore_session_partitions(spark,
            .parquet(str(tmp_path / "in")).writeStream.format("parquet")
            .option("checkpointLocation", str(tmp_path / "chk_bad")))
     with pytest.raises(Exception):
-        start_stream(bad, spark)
+        start_stream(bad, spark, {_NO_DATA: "false"})
     assert spark.conf.get(_PARTITIONS) == before
+    assert spark.conf.get(_NO_DATA) == no_data_before
 
 
 def test_path_exists_asks_the_filesystem(spark, tmp_path):
@@ -1005,3 +1010,106 @@ def test_one_stream_reader_and_one_stream_writer():
                       if isinstance(n, ast.Attribute) and n.attr in allowed
                       and owner not in allowed[n.attr]]
     assert not stray, stray
+
+def _six_trend_groups(spark, tmp_path):
+    """48 rows in 6 TREND groups (3 users × 2 day buckets), one file per
+    day under tmp_path/in; returns the rows."""
+    rows = []
+    for day in (0, 1):
+        rows += _trend_rows(day, 24)
+        spark.createDataFrame(_trend_rows(day, 24), _TREND_SCHEMA) \
+             .coalesce(1).write.mode("append").parquet(str(tmp_path / "in"))
+    return rows
+
+
+def test_rollup_micro_batch_runs_its_stateful_plan_once(spark, tmp_path):
+    """The update-mode upsert runs each micro-batch's stateful plan once:
+    6 groups update 6 state rows (12 when the plan ran twice), the
+    observation counts the 6 rows written, and no empty no-data batch
+    follows the data batch."""
+    from etl_load_spark.plans.builder import build_plan, streaming_merge_keys
+    from etl_load_spark.sources.readers import read_stream_source
+    from etl_load_spark.sources.writers import (STREAM_WRITTEN,
+                                                write_stream_sink)
+
+    _six_trend_groups(spark, tmp_path)
+    spec = JobSpec.from_dict(_trend_spec(tmp_path))
+    df = build_plan(spark, spec, source_df=read_stream_source(
+        spark, "PARQUET", spec.source.details))
+    q = write_stream_sink(df, "PARQUET", spec.destination.details,
+                          spec.streaming, spec.job_id,
+                          merge_keys=streaming_merge_keys(spec))
+    q.awaitTermination(120)
+    progress = q.recentProgress
+    assert [p["numInputRows"] for p in progress] == [48]
+    assert progress[0]["stateOperators"][0]["numRowsUpdated"] == 6
+    assert progress[0]["observedMetrics"][STREAM_WRITTEN]["n"] == 6
+
+
+def test_rollup_writes_one_file_per_bucket_partition(spark, tmp_path):
+    """Each micro-batch writes every touched bucket partition as one file,
+    also when a later batch merges into it, so the table needs no
+    compaction; the rollup still equals the batch TREND."""
+    import datetime as dt
+    from etl_load_spark.operators.timeseries import trend
+
+    rows = _six_trend_groups(spark, tmp_path)
+    # a third batch updates two of day 1's three groups, within the
+    # watermark: it merges into that bucket's partition
+    more = [(900 + i, i, dt.datetime(2024, 5, 2, 23, 40 + 10 * i), 5.0)
+            for i in range(2)]
+    spark.createDataFrame(more, _TREND_SCHEMA).coalesce(1) \
+         .write.mode("append").parquet(str(tmp_path / "in"))
+    spec = _trend_spec(tmp_path)
+    spec["source"]["details"]["max_files_per_trigger"] = 1
+    spec["steps"] = ["LOAD"]
+    r = run_job(spark, JobSpec.from_dict(spec))
+    assert r.status == "COMPLETED", r.error
+    assert r.records_read == 50
+    buckets = sorted((tmp_path / "out").glob("bucket_ts=*"))
+    assert len(buckets) == 2
+    for b in buckets:
+        data = [f.name for f in b.iterdir()
+                if not f.name.startswith(("_", "."))]
+        assert len(data) == 1, (b.name, data)
+    assert _sorted_trend(spark.read.parquet(str(tmp_path / "out"))) \
+        == _sorted_trend(trend(spark.createDataFrame(rows + more,
+                                                     _TREND_SCHEMA)))
+
+
+def test_streaming_jobs_report_records_written(spark, tmp_path):
+    """A streaming job's records_written counts the rows its sink took:
+    one per emitted group for a rollup, one per row read for an append
+    parquet → parquet stream."""
+    _six_trend_groups(spark, tmp_path)
+    r = run_job(spark, JobSpec.from_dict(_trend_spec(tmp_path)))
+    assert r.status == "COMPLETED", r.error
+    assert (r.records_read, r.records_written) == (48, 6)
+
+    src = str(tmp_path / "src")
+    spec = _spec(src, str(tmp_path / "dest"), str(tmp_path / "chk_append"))
+    _write_batch(spark, src, [[1, "a"], [2, "b"], [3, "c"]])
+    r1 = run_job(spark, spec)
+    _write_batch(spark, src, [[4, "d"]])
+    r2 = run_job(spark, spec)
+    assert [(x.status, x.records_read, x.records_written)
+            for x in (r1, r2)] == [("COMPLETED", 3, 3), ("COMPLETED", 1, 1)]
+
+
+def test_streaming_job_reuses_validate_source_schema(spark, tmp_path,
+                                                     monkeypatch):
+    """A streaming job that opens its source in VALIDATE_SOURCE streams
+    under that read's schema and infers it no second time."""
+    from etl_load_spark.sources import readers
+
+    def no_second_read(*_a, **_k):
+        raise AssertionError("the stream source inferred its schema again")
+
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, [[1, "a"], [2, "b"]])
+    spec = _spec(src, str(tmp_path / "dest"), str(tmp_path / "chk"))
+    spec.steps = ["VALIDATE_SOURCE", "LOAD"]
+    monkeypatch.setattr(readers, "read_file", no_second_read)
+    r = run_job(spark, spec)
+    assert r.status == "COMPLETED", r.error
+    assert r.records_read == 2
