@@ -28,6 +28,10 @@ from etl_load_spark.runner import run_job
 from etl_load_spark.spec import JobSpec
 
 API_PREFIX = "/api/etl/v1/jobs"
+#: finished (COMPLETED, FAILED, DEFERRED) entries a JobRegistry keeps for
+#: status reads; the oldest go first, active ones are never dropped
+MAX_FINISHED_JOBS = 1000
+_ACTIVE = ("SUBMITTED", "RUNNING")
 
 
 class AdmissionControl:
@@ -93,7 +97,9 @@ class AdmissionControl:
 
 
 class JobRegistry:
-    """In-memory status/result maps (the reference's WorkflowManager maps)."""
+    """In-memory status/result maps (the reference's WorkflowManager maps).
+    Every active job is kept; of the finished ones, the newest
+    ``MAX_FINISHED_JOBS``, so a long-lived process holds a bounded map."""
 
     def __init__(self, spark, admission: AdmissionControl | None = None):
         self.spark = spark
@@ -112,12 +118,12 @@ class JobRegistry:
         job_id = spec.job_id or f"job-{uuid.uuid4().hex[:8]}"
         with self._lock:
             cur = self._status.get(job_id, {}).get("status")
-            if cur in ("SUBMITTED", "RUNNING"):
+            if cur in _ACTIVE:
                 return None, None, (409, {"jobId": job_id,
                                           "error": "job already running"})
             if self.admission is not None:
                 n_active = sum(1 for st in self._status.values()
-                               if st.get("status") in ("SUBMITTED", "RUNNING"))
+                               if st.get("status") in _ACTIVE)
                 reason = self.admission.deferral_reason(self.spark, n_active)
                 if reason is not None:
                     payload = {"jobId": job_id, "status": "DEFERRED",
@@ -127,7 +133,7 @@ class JobRegistry:
                     # entry per queue redelivery — unbounded growth in a
                     # long-running listener under sustained pressure.
                     if spec.job_id:
-                        self._status[job_id] = payload
+                        self._finish(job_id, payload)
                     return None, None, (503, payload)
             self._status[job_id] = {"jobId": job_id, "status": "SUBMITTED"}
         return job_id, spec, None
@@ -140,7 +146,18 @@ class JobRegistry:
         t.start()
         return 202, {"jobId": job_id, "status": "SUBMITTED"}
 
-    def _run(self, job_id: str, spec: JobSpec) -> None:
+    def _finish(self, job_id: str, payload: dict) -> None:
+        """Record a finished job's status as the newest entry, then drop
+        the oldest finished entries beyond ``MAX_FINISHED_JOBS``. The
+        caller holds the lock."""
+        self._status.pop(job_id, None)
+        self._status[job_id] = payload
+        done = [j for j, st in self._status.items()
+                if st["status"] not in _ACTIVE]
+        for j in done[:max(0, len(done) - MAX_FINISHED_JOBS)]:
+            del self._status[j]
+
+    def _run(self, job_id: str, spec: JobSpec) -> dict:
         with self._lock:
             self._status[job_id]["status"] = "RUNNING"
         try:
@@ -155,7 +172,8 @@ class JobRegistry:
         except Exception as e:
             payload = {"jobId": job_id, "status": "FAILED", "error": str(e)}
         with self._lock:
-            self._status[job_id] = payload
+            self._finish(job_id, payload)
+        return payload
 
     def run_sync(self, spec_dict: dict) -> tuple[int, dict]:
         """Validate + admission-dedupe like ``submit``, but execute the job
@@ -165,8 +183,7 @@ class JobRegistry:
         job_id, spec, refusal = self._admit(spec_dict)
         if refusal is not None:
             return refusal
-        self._run(job_id, spec)
-        return 200, self._status[job_id]
+        return 200, self._run(job_id, spec)
 
     def status(self, job_id: str) -> tuple[int, dict]:
         with self._lock:

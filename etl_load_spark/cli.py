@@ -78,15 +78,13 @@ def cmd_explain(path: str) -> dict:
             "columns": df.columns}
 
 
-def cmd_compact(path: str, target_mb: int, fmt: str,
-                partition_by: str | None) -> dict:
+def cmd_compact(path: str, target_mb: int, fmt: str) -> dict:
     """Small-file compaction as an ops command (see
-    operators/maintenance.py for the swap-safe protocol)."""
+    operators/maintenance.py for the swap-safe protocol); the hive layout
+    is read from the table's directories."""
     from etl_load_spark.operators.maintenance import compact_files
     spark = _build_spark("etl_load_spark_compact")
-    cols = [c for c in (partition_by or "").split(",") if c] or None
-    return compact_files(spark, path, target_file_mb=target_mb, fmt=fmt,
-                         partition_by=cols)
+    return compact_files(spark, path, target_file_mb=target_mb, fmt=fmt)
 
 
 def cmd_serve(host: str, port: int,
@@ -157,8 +155,6 @@ def main(argv: list[str] | None = None) -> int:
     cp.add_argument("path")
     cp.add_argument("--target-mb", type=int, default=128)
     cp.add_argument("--format", default="parquet", choices=["parquet", "orc"])
-    cp.add_argument("--partition-by", default=None,
-                    help="comma-separated hive partition columns")
     cp.add_argument("--json", action="store_true")
     ln = sub.add_parser("listen")
     ln.add_argument("queue_dir")
@@ -178,8 +174,7 @@ def main(argv: list[str] | None = None) -> int:
                          args.drain, args.max_heap_pct, args.max_cpu_pct,
                          args.max_running)
     elif args.cmd == "compact":
-        out = cmd_compact(args.path, args.target_mb, args.format,
-                          args.partition_by)
+        out = cmd_compact(args.path, args.target_mb, args.format)
     else:
         out = {"run": cmd_run, "validate": cmd_validate,
                "explain": cmd_explain}[args.cmd](args.spec_path)

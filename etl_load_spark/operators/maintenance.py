@@ -5,8 +5,8 @@ long-running ingestion at scale: streaming micro-batches and incremental
 loads each commit a few files, and after months a 100 TB table is millions
 of kilobyte-files whose listing + open overhead dwarfs the scan itself.
 ``compact_files`` rewrites a dataset to approximately ``target_file_mb``
-files, preserving content exactly and (optionally) the hive partition
-layout.
+files, preserving content exactly and the hive partition layout, which it
+reads from the ``col=value`` directories its data files sit under.
 
 Safety protocol (LOCAL filesystems — os.rename is atomic within one
 filesystem; an object-store port would swap via the Hadoop FileSystem API
@@ -23,7 +23,7 @@ Callers never see a half state across crash + re-run.
 Scale: one read + one write of the data (none when every directory
 already holds one file within the target), no driver materialization; the
 repartition count is computed from on-disk bytes, so output files land
-near the target regardless of row width. With ``partition_by`` the
+near the target regardless of row width. On a partitioned table the
 shuffle keys on (partition columns, content-hash salt) where each
 partition's salt range is sized from ITS estimated bytes — a huge
 partition spreads over ~bytes/target parallel tasks and splits near the
@@ -43,9 +43,13 @@ from pyspark.sql import SparkSession
 
 def _dir_stats(path: str) -> dict[str, list[int]]:
     """The data files (parquet/orc parts) under a local path: each
-    directory's path relative to ``path`` → its files' sizes in bytes."""
+    directory's path relative to ``path`` → its files' sizes in bytes.
+    Hidden directories (``.x``, and ``_x`` without ``=``, such as a file
+    sink's ``_spark_metadata``) hold no data, as for Spark's reader."""
     dirs = {}
-    for dirpath, _dirs, files in os.walk(path):
+    for dirpath, subdirs, files in os.walk(path):
+        subdirs[:] = [d for d in subdirs if not d.startswith(".")
+                      and not (d.startswith("_") and "=" not in d)]
         sizes = [os.path.getsize(os.path.join(dirpath, fn)) for fn in files
                  if not fn.startswith(("_", "."))]
         if sizes:
@@ -53,32 +57,34 @@ def _dir_stats(path: str) -> dict[str, list[int]]:
     return dirs
 
 
-def _is_compact(dirs: dict[str, list[int]], target_bytes: int,
-                partition_by: list[str] | None) -> bool:
-    """Whether a rewrite could change nothing: every data file sits alone
-    in the directory the rewrite would put it in (the root, or one
-    ``col=value`` level per ``partition_by`` column), within the target."""
-    levels = [f"{c}=" for c in partition_by or []]
-    for rel, sizes in dirs.items():
-        parts = [] if rel == "." else rel.split(os.sep)
-        if (len(sizes) > 1 or sizes[0] > target_bytes
-                or len(parts) != len(levels)
-                or not all(p.startswith(c) for p, c in zip(parts, levels))):
-            return False
-    return True
+def _partition_columns(path: str, dirs: dict[str, list[int]]) -> list[str]:
+    """The hive partition columns of the table at ``path``, outermost
+    first, from the ``col=value`` directory names of its data files
+    (``dirs`` as ``_dir_stats`` lists them). Raises ValueError unless
+    every data file sits at the same depth under the same column names."""
+    layouts = {tuple(p.split("=")[0] + "=" if "=" in p else p
+                     for p in ([] if rel == "." else rel.split(os.sep)))
+               for rel in dirs}
+    if len(layouts) > 1 or any(not c.endswith("=") for lay in layouts
+                               for c in lay):
+        raise ValueError(
+            f"compact_files: the data files under {path} sit at different "
+            "partition depths or under different column names "
+            f"({sorted('/'.join(lay) or '.' for lay in layouts)}); only a "
+            "flat table or one hive layout can be compacted")
+    return [c[:-1] for c in next(iter(layouts), ())]
 
 
 def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
-                  fmt: str = "parquet",
-                  partition_by: list[str] | None = None) -> dict:
-    """Rewrite ``path`` to ~``target_file_mb`` files; returns metrics
-    {files_before, files_after, bytes, rows, partitions}.
+                  fmt: str = "parquet") -> dict:
+    """Rewrite ``path`` to ~``target_file_mb`` files in the hive layout it
+    has; returns metrics {files_before, files_after, bytes, rows,
+    partitions}, where ``partitions`` are the layout's columns.
 
-    A dataset that is already compact (see ``_is_compact``: after crash
-    recovery, no directory holds more than one data file and no file
-    exceeds the target) is left as it is, without a Spark read: then
-    ``files_after == files_before`` and ``rows`` is None, since nothing
-    was counted."""
+    A dataset that is already compact (after crash recovery, no directory
+    holds more than one data file and no file exceeds the target) is left
+    as it is, without a Spark read: then ``files_after == files_before``
+    and ``rows`` is None, since nothing was counted."""
     from pyspark.sql import functions as F
 
     tmp = path.rstrip("/") + ".compact_tmp"
@@ -92,13 +98,16 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
     if os.path.exists(tmp):
         shutil.rmtree(tmp)          # stale partial rewrite
     dirs = _dir_stats(path)
+    partition_by = _partition_columns(path, dirs)
     files_before = sum(len(sizes) for sizes in dirs.values())
     total_bytes = sum(sum(sizes) for sizes in dirs.values())
     target_bytes = target_file_mb * 1024 * 1024
-    if os.path.isdir(path) and _is_compact(dirs, target_bytes, partition_by):
+    compact = all(len(sizes) == 1 and sizes[0] <= target_bytes
+                  for sizes in dirs.values())
+    if os.path.isdir(path) and compact:
         return {"files_before": files_before, "files_after": files_before,
                 "bytes": total_bytes, "rows": None,
-                "partitions": list(partition_by or [])}
+                "partitions": partition_by}
     df = getattr(spark.read, fmt)(path)
     rows = df.count()
     n_out = max(1, math.ceil(total_bytes / target_bytes))
@@ -156,4 +165,4 @@ def compact_files(spark: SparkSession, path: str, target_file_mb: int = 128,
     files_after = sum(len(sizes) for sizes in _dir_stats(path).values())
     return {"files_before": files_before, "files_after": files_after,
             "bytes": total_bytes, "rows": rows,
-            "partitions": list(partition_by or [])}
+            "partitions": partition_by}

@@ -588,6 +588,53 @@ def time_weighted_avg(events: DataFrame, key_col: str = "user_id",
             .orderBy(key_col, "bucket_ts"))
 
 
+def time_weighted_avg_rollup(events: DataFrame, key_col: str = "user_id",
+                             ts_col: str = "ts", value_col: str = "value",
+                             order_col: str = "event_id",
+                             bucket: str = "1 day") -> DataFrame:
+    """The self-contained (carry_in=False) :func:`time_weighted_avg`
+    in stream-safe form, via the collect_list recipe of
+    :func:`state_durations_rollup`: each sample's weight is the gap to
+    its in-array successor (or the bucket end), folded into the same
+    Σ(c·dt)/Σdt fixed-point quotient. The carry form stays batch-only
+    (the carried sample is watermark-evicted state). State: the open
+    buckets' sample lists."""
+    validate_bucket(bucket)
+    width_ms = bucket_width_seconds(bucket) * 1000
+    e = events.filter(F.col(ts_col).isNotNull()
+                      & F.col(value_col).isNotNull())
+    c = (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint")
+    tms = F.unix_millis(F.col(ts_col).cast("timestamp_ltz"))
+    agg = (e.groupBy(F.col(key_col),
+                     F.window(ts_col, bucket).start.alias("bucket_ts"))
+           .agg(F.sort_array(F.collect_list(F.struct(
+               F.col(ts_col).alias("t"), F.col(order_col).alias("o"),
+               c.alias("c"), tms.alias("tm")))).alias("_vv")))
+    end_ms = (f"unix_millis(CAST(bucket_ts AS TIMESTAMP_LTZ)) "
+              f"+ {width_ms}")
+    sums = F.expr(f"""
+        aggregate(
+            transform(_vv, (x, i) -> named_struct(
+                'num', x.c * ((CASE WHEN i < size(_vv) - 1
+                                    THEN element_at(_vv, i + 2).tm
+                                    ELSE {end_ms} END) - x.tm),
+                'den', (CASE WHEN i < size(_vv) - 1
+                             THEN element_at(_vv, i + 2).tm
+                             ELSE {end_ms} END) - x.tm)),
+            named_struct('num', 0L, 'den', 0L),
+            (acc, x) -> named_struct('num', acc.num + x.num,
+                                     'den', acc.den + x.den))""")
+    twa4 = F.expr("(200 * _num + _den) DIV (2 * _den)")
+    return (agg.select(key_col, "bucket_ts",
+                       F.size("_vv").cast("bigint").alias("n_samples"),
+                       sums.alias("_s"))
+            .select(key_col, "bucket_ts", "n_samples",
+                    F.col("_s.num").alias("_num"),
+                    F.col("_s.den").alias("_den"))
+            .select(key_col, "bucket_ts", "n_samples",
+                    (twa4.cast("double") / 10000.0).alias("twa")))
+
+
 def time_weighted_avg_sql(table: str = "events", key_col: str = "user_id",
                           ts_col: str = "ts", value_col: str = "value",
                           order_col: str = "event_id",
@@ -824,6 +871,91 @@ def state_durations(events: DataFrame, key_col: str = "user_id",
                     "n_samples"))
 
 
+def state_durations_rollup(events: DataFrame, key_col: str = "user_id",
+                           ts_col: str = "ts",
+                           state_col: str = "event_type",
+                           order_col: str = "event_id",
+                           bucket: str = "1 day") -> DataFrame:
+    """The self-contained (carry_in=False) :func:`state_durations` in
+    stream-safe form. The batch operator's in-bucket lead/lag windows
+    are not streamable, but the SAME semantics are: ONE
+    watermark-evictable aggregation collects the bucket's samples
+    (sort_array ∘ collect_list over the (ts, order) total order —
+    collect_list is a declarative aggregate, so this runs as a plain
+    streaming agg, no transformWithState needed), then a stateless
+    projection folds the sorted array into per-state (held_ms,
+    n_entries, n_samples) and explodes — hold finalization against
+    the NEXT sample happens inside the array, where the future is
+    already visible.
+
+    State bound: the open (key, bucket) groups' sample lists — exactly
+    the rows a bucket must see before it can close, evicted at the
+    watermark. The per-element HOF fold is interpreted (not codegen'd)
+    but touches only each group's own array; for batch backfills use
+    :func:`state_durations` (window lag, whole-stage codegen).
+
+    ``carry_in`` is deliberately absent: the carried state is the
+    previous bucket's LAST sample, which the watermark has already
+    evicted when the next bucket opens — interpolate carries on the
+    landed table downstream (the batch operator's carry_in=True).
+
+    Update-mode materialization merge key: (key, bucket_ts, state) —
+    a state's row never disappears as its bucket accumulates samples,
+    so the group-key upsert is complete."""
+    validate_bucket(bucket)
+    if dict(events.dtypes).get(state_col) != "string":
+        raise ValueError(
+            f"state_durations_rollup: state column {state_col!r} must "
+            "be string (the per-bucket fold keys a map on it); cast "
+            "upstream")
+    width_ms = bucket_width_seconds(bucket) * 1000
+    e = events.filter(F.col(ts_col).isNotNull()
+                      & F.col(state_col).isNotNull())
+    tms = F.unix_millis(F.col(ts_col).cast("timestamp_ltz"))
+    agg = (e.groupBy(F.col(key_col),
+                     F.window(ts_col, bucket).start.alias("bucket_ts"))
+           .agg(F.sort_array(F.collect_list(F.struct(
+               F.col(ts_col).alias("t"), F.col(order_col).alias("o"),
+               tms.alias("tm"), F.col(state_col).alias("st"))))
+               .alias("_ss")))
+    end_ms = (f"unix_millis(CAST(bucket_ts AS TIMESTAMP_LTZ)) "
+              f"+ {width_ms}")
+    # durations + transition flags per element (the lead/lag of the
+    # batch form, replayed inside the sorted array; element_at is
+    # 1-based and the CASE guards evaluation order)
+    elems = F.expr(f"""
+        transform(_ss, (x, i) -> named_struct(
+            'st', x.st,
+            'dt', (CASE WHEN i < size(_ss) - 1
+                        THEN element_at(_ss, i + 2).tm
+                        ELSE {end_ms} END) - x.tm,
+            'en', CASE WHEN i = 0 THEN 1
+                       WHEN element_at(_ss, i).st <> x.st THEN 1
+                       ELSE 0 END))""")
+    folded = F.aggregate(
+        elems,
+        F.expr("cast(map() as map<string, "
+               "struct<held: bigint, en: bigint, n: bigint>>)"),
+        lambda acc, x: F.map_concat(
+            F.map_filter(acc, lambda k, _v: k != x["st"]),
+            F.create_map(
+                x["st"],
+                F.struct(
+                    (F.coalesce(F.try_element_at(acc, x["st"])["held"],
+                                F.lit(0)) + x["dt"]).alias("held"),
+                    (F.coalesce(F.try_element_at(acc, x["st"])["en"],
+                                F.lit(0)) + x["en"]).alias("en"),
+                    (F.coalesce(F.try_element_at(acc, x["st"])["n"],
+                                F.lit(0)) + F.lit(1)).alias("n")))))
+    return (agg.select(key_col, "bucket_ts", folded.alias("_m"))
+            .select(key_col, "bucket_ts",
+                    F.explode("_m").alias(state_col, "_v"))
+            .select(key_col, "bucket_ts", state_col,
+                    F.col("_v.held").alias("held_ms"),
+                    F.col("_v.en").alias("n_entries"),
+                    F.col("_v.n").alias("n_samples")))
+
+
 def state_durations_sql(table: str = "events", key_col: str = "user_id",
                         ts_col: str = "ts", state_col: str = "event_type",
                         order_col: str = "event_id",
@@ -1045,6 +1177,62 @@ def heartbeat_uptime(events: DataFrame, key_col: str = "user_id",
                     *(["downtime_ms"] if emit_downtime else [])))
 
 
+def heartbeat_uptime_rollup(events: DataFrame, key_col: str = "user_id",
+                            ts_col: str = "ts",
+                            order_col: str = "event_id",
+                            bucket: str = "1 day",
+                            tolerance: str = "15 minutes",
+                            emit_downtime: bool = False) -> DataFrame:
+    """The self-contained (carry_in=False) :func:`heartbeat_uptime` in
+    stream-safe form, via the recipe of :func:`state_durations_rollup`:
+    one collect_list aggregation over the (ts, order) total order,
+    then a stateless fold clips each beat against its in-array
+    successor (or the bucket end) at the tolerance — the batch form's
+    lead window, replayed where the future is visible. carry_in is
+    deliberately absent (the carried beat is watermark-evicted state;
+    interpolate downstream on the landed table). Update-mode merge
+    key: (key, bucket_ts)."""
+    validate_bucket(bucket)
+    width_ms = bucket_width_seconds(bucket) * 1000
+    tol_us = validate_bucket(tolerance)
+    if tol_us % 1000:
+        raise ValueError(
+            f"tolerance {tolerance!r} is not a whole number of "
+            "milliseconds (liveness is measured in ms)")
+    tol_ms = tol_us // 1000
+    e = events.filter(F.col(ts_col).isNotNull())
+    tms = F.unix_millis(F.col(ts_col).cast("timestamp_ltz"))
+    agg = (e.groupBy(F.col(key_col),
+                     F.window(ts_col, bucket).start.alias("bucket_ts"))
+           .agg(F.sort_array(F.collect_list(F.struct(
+               F.col(ts_col).alias("t"), F.col(order_col).alias("o"),
+               tms.alias("tm")))).alias("_bb")))
+    end_ms = (f"unix_millis(CAST(bucket_ts AS TIMESTAMP_LTZ)) "
+              f"+ {width_ms}")
+    stats = F.expr(f"""
+        aggregate(
+            transform(_bb, (x, i) -> named_struct(
+                'lv', least((CASE WHEN i < size(_bb) - 1
+                                  THEN element_at(_bb, i + 2).tm
+                                  ELSE {end_ms} END) - x.tm,
+                            {tol_ms}L),
+                'gp', CASE WHEN i < size(_bb) - 1
+                            AND element_at(_bb, i + 2).tm - x.tm
+                                > {tol_ms} THEN 1 ELSE 0 END)),
+            named_struct('lv', 0L, 'gp', 0L),
+            (acc, x) -> named_struct('lv', acc.lv + x.lv,
+                                     'gp', acc.gp + x.gp))""")
+    cols = [F.col(key_col), F.col("bucket_ts"),
+            F.size("_bb").cast("bigint").alias("n_beats"),
+            F.col("_s.lv").alias("uptime_ms"),
+            F.col("_s.gp").alias("n_gaps")]
+    if emit_downtime:
+        cols.append((F.lit(width_ms) - F.col("_s.lv"))
+                    .alias("downtime_ms"))
+    return agg.select(key_col, "bucket_ts", stats.alias("_s"), "_bb") \
+              .select(*cols)
+
+
 def heartbeat_uptime_sql(table: str = "events", key_col: str = "user_id",
                          ts_col: str = "ts", order_col: str = "event_id",
                          bucket: str = "1 day",
@@ -1169,6 +1357,53 @@ def instant_rate(events: DataFrame, key_col: str = "user_id",
             .orderBy(F.col(key_col).asc_nulls_last(), "bucket_ts"))
 
 
+def instant_rate_rollup(events: DataFrame, key_col: str = "user_id",
+                        ts_col: str = "ts", value_col: str = "value",
+                        order_col: str = "event_id",
+                        bucket: str = "1 day") -> DataFrame:
+    """:func:`instant_rate` in stream-safe form, via the collect_list
+    recipe of :func:`state_durations_rollup`: the batch form's
+    in-bucket lag is replayed on the sorted array's last two elements
+    (Prometheus reset rule on the final step, the same unsigned
+    half-up fixed-point quotient rendered in SQL so both engines
+    bit-agree). The negative-counter guard raises inside the fold
+    exactly like the batch raise_error. State: the open buckets'
+    sample lists, watermark-evicted."""
+    validate_bucket(bucket)
+    e = events.filter(F.col(ts_col).isNotNull()
+                      & F.col(value_col).isNotNull())
+    c = (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint")
+    cg = F.when(c < 0, F.raise_error(F.format_string(
+        "instant_rate: negative counter value (%s cents): irate's "
+        "unsigned half-up quotient needs non-negative counters",
+        c))).otherwise(c)
+    tms = F.unix_millis(F.col(ts_col).cast("timestamp_ltz"))
+    agg = (e.groupBy(F.col(key_col),
+                     F.window(ts_col, bucket).start.alias("bucket_ts"))
+           .agg(F.sort_array(F.collect_list(F.struct(
+               F.col(ts_col).alias("t"), F.col(order_col).alias("o"),
+               cg.alias("c"), tms.alias("tm")))).alias("_vv")))
+    n = F.size("_vv")
+    rate4 = F.expr("(2 * _inc * 10 * 10000 + _dms) DIV (2 * _dms)")
+    picked = (agg.select(
+        key_col, "bucket_ts", n.cast("bigint").alias("n_samples"),
+        # ANSI element_at(-2) raises on a 1-element array — the when()
+        # guards evaluation (CASE branches are conditional)
+        F.element_at("_vv", -1).alias("_last"),
+        F.when(n >= 2, F.element_at("_vv", -2)).alias("_prev")))
+    last, prev = F.col("_last"), F.col("_prev")
+    inc = F.when(last["c"] >= prev["c"], last["c"] - prev["c"]) \
+        .otherwise(last["c"])
+    return (picked
+            .select(key_col, "bucket_ts", "n_samples",
+                    inc.alias("_inc"),
+                    (last["tm"] - prev["tm"]).alias("_dms"))
+            .select(key_col, "bucket_ts", "n_samples",
+                    F.when(F.col("_dms") > 0,
+                           rate4.cast("double") / 10000.0)
+                    .alias("irate_per_sec")))
+
+
 def instant_rate_sql(table: str = "events", key_col: str = "user_id",
                      ts_col: str = "ts", value_col: str = "value",
                      order_col: str = "event_id",
@@ -1258,8 +1493,8 @@ def value_histogram_rollup(events: DataFrame, key_col: str = "user_id",
     """The :func:`value_histogram` aggregation WITHOUT the output sort
     — one COUNT per watermark-evictable (key, window, bin) group, so
     this form runs UNCHANGED as a Structured Streaming incremental
-    rollup (streaming.windows.streaming_value_histogram; equivalence
-    pinned in tests/test_streaming.py). Batch callers want
+    rollup over a watermarked frame (plans/builder.Rollup.stream;
+    equivalence pinned in tests/test_streaming.py). Batch callers want
     :func:`value_histogram`."""
     validate_bucket(bucket)
     if nbins < 1:
@@ -1428,6 +1663,34 @@ def changes(events: DataFrame, key_col: str = "user_id",
             .agg(F.count(F.lit(1)).alias("n_samples"),
                  F.sum("_ch").alias("n_changes"))
             .orderBy(F.col(key_col).asc_nulls_last(), "bucket_ts"))
+
+
+def changes_rollup(events: DataFrame, key_col: str = "user_id",
+                   ts_col: str = "ts", value_col: str = "value",
+                   order_col: str = "event_id",
+                   bucket: str = "1 day") -> DataFrame:
+    """:func:`changes` in stream-safe form, via the collect_list recipe
+    of :func:`state_durations_rollup`: one aggregation collects the
+    bucket's (ts, order, cents) samples, a stateless fold counts
+    adjacent differing cents in the sorted array. State: the open
+    buckets' sample lists, watermark-evicted."""
+    validate_bucket(bucket)
+    e = events.filter(F.col(ts_col).isNotNull()
+                      & F.col(value_col).isNotNull())
+    c = (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint")
+    agg = (e.groupBy(F.col(key_col),
+                     F.window(ts_col, bucket).start.alias("bucket_ts"))
+           .agg(F.sort_array(F.collect_list(F.struct(
+               F.col(ts_col).alias("t"), F.col(order_col).alias("o"),
+               c.alias("c")))).alias("_vv")))
+    n_changes = F.expr("""
+        aggregate(
+            transform(_vv, (x, i) -> CASE WHEN i > 0
+                 AND element_at(_vv, i).c <> x.c THEN 1L ELSE 0L END),
+            0L, (acc, x) -> acc + x)""")
+    return (agg.select(key_col, "bucket_ts",
+                       F.size("_vv").cast("bigint").alias("n_samples"),
+                       n_changes.alias("n_changes")))
 
 
 def changes_sql(table: str = "events", key_col: str = "user_id",
@@ -1672,9 +1935,9 @@ def trend_rollup(events: DataFrame, key_col: str = "user_id",
     """The :func:`trend` aggregation WITHOUT the output sort — five
     declarative integer sums over one watermark-evictable window
     group, so this form runs UNCHANGED as a Structured Streaming
-    incremental rollup (streaming.windows.streaming_trend; equivalence
-    pinned in tests/test_streaming.py). Batch callers want
-    :func:`trend`."""
+    incremental rollup over a watermarked frame (plans/builder.Rollup.
+    stream; equivalence pinned in tests/test_streaming.py). Batch
+    callers want :func:`trend`."""
     validate_bucket(bucket)
     e = events.filter(F.col(ts_col).isNotNull()
                       & F.col(value_col).isNotNull())
@@ -2049,8 +2312,8 @@ def ohlc_rollup(events: DataFrame, type_col: str = "event_type",
     """The :func:`ohlc` aggregation WITHOUT the output sort — every
     expression is a declarative aggregate over one watermark-evictable
     window group, so this form runs UNCHANGED as a Structured
-    Streaming incremental rollup (streaming.windows.streaming_ohlc
-    wraps it with the watermark; equivalence pinned in
+    Streaming incremental rollup (plans/builder.Rollup.stream
+    watermarks the stream and calls it; equivalence pinned in
     tests/test_streaming.py). Batch callers want :func:`ohlc` (adds
     the deterministic output order); streams cannot sort."""
     validate_bucket(bucket)

@@ -1059,13 +1059,15 @@ def _asof_join_transform(df: DataFrame, spark: SparkSession,
 class Rollup:
     """A time-bucketed rollup stage with a streaming twin. One parameter
     reader (``params``: spec parameters → operator keywords) feeds the
-    batch operator ``operators.timeseries.<op>``, its twin
-    ``streaming.windows.streaming_<op>`` (plus ``watermark``) and the
-    merge keys of the update-mode upsert. Both operators are looked up
-    by name when the stage runs. The twin drops the batch output sort
-    (streams cannot sort) and keeps its state bounded by the watermark;
-    a file destination materializes it through the update-mode
-    continuous-aggregate upsert (sources/writers.write_stream_sink)."""
+    batch operator ``operators.timeseries.<op>``, its stream-safe twin
+    ``operators.timeseries.<op>_rollup`` and the merge keys of the
+    update-mode upsert. Both operators are looked up by name when the
+    stage runs. ``stream`` watermarks the stream on its ``ts_col``
+    (parameter ``watermark``) and hands it to the twin, which drops the
+    batch output sort (streams cannot sort) and keeps its state bounded
+    by that watermark; a file destination materializes it through the
+    update-mode continuous-aggregate upsert
+    (sources/writers.write_stream_sink)."""
     op: str
     params: Callable[[dict], dict]
     #: merge-key columns after (key, bucket_ts): an operator keyword
@@ -1085,7 +1087,7 @@ class Rollup:
         return getattr(timeseries, self.op)(df, **kw)
 
     def stream(self, df: DataFrame, p: dict, t: str) -> DataFrame:
-        from etl_load_spark.streaming import windows
+        from etl_load_spark.operators import timeseries
         if self.carried and p.get("carryIn"):
             raise ValueError(
                 f"{t} carryIn=true is batch-only on a stream: "
@@ -1098,8 +1100,10 @@ class Rollup:
                 f"{t} hotSplit only applies to the batch carry form (there "
                 "is no per-key window to split on a stream — the streaming "
                 "twin is already per-bucket-parallel)")
-        return getattr(windows, f"streaming_{self.op}")(
-            df, **self.params(p), watermark=p.get("watermark", "30 minutes"))
+        kw = self.params(p)
+        return getattr(timeseries, f"{self.op}_rollup")(
+            df.withWatermark(kw["ts_col"], p.get("watermark", "30 minutes")),
+            **kw)
 
     def merge_keys(self, p: dict) -> list[str]:
         kw = self.params(p)

@@ -107,3 +107,30 @@ def test_error_paths(server):
     assert code == 202
     st = _wait_done(server, "api_bad_src")
     assert st["status"] == "FAILED"
+
+
+def test_registry_keeps_a_bounded_number_of_finished_jobs(monkeypatch):
+    """A long-lived registry keeps every active job but only the newest
+    MAX_FINISHED_JOBS finished ones, and still refuses a RUNNING id."""
+    from etl_load_spark import api
+    from etl_load_spark.runner import JobResult
+    monkeypatch.setattr(api, "run_job", lambda spark, spec: JobResult(
+        spec.job_id, status="COMPLETED", records_written=7))
+    reg = api.JobRegistry(spark=None)
+    with reg._lock:
+        reg._status["live"] = {"jobId": "live", "status": "RUNNING"}
+
+    def spec(job_id):
+        return {"jobId": job_id,
+                "source": {"type": "PARQUET", "details": {"path": "unused"}}}
+
+    n = api.MAX_FINISHED_JOBS + 5
+    for i in range(n):
+        code, st = reg.run_sync(spec(f"j{i}"))
+        assert (code, st["status"]) == (200, "COMPLETED"), st
+    assert len(reg._status) == api.MAX_FINISHED_JOBS + 1
+    assert reg.status(f"j{n - 1}") == (200, st)
+    assert st["recordsWritten"] == 7
+    assert reg.status("j4")[0] == 404 and reg.status("j5")[0] == 200
+    code, st = reg.run_sync(spec("live"))
+    assert (code, st["error"]) == (409, "job already running")

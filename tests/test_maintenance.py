@@ -28,7 +28,7 @@ def test_compaction_preserves_partition_layout(spark, tmp_path):
         [(d, i) for d in ("2024-01-01", "2024-01-02") for i in range(100)],
         "day string, n int")
      .repartition(20).write.partitionBy("day").parquet(path))
-    m = compact_files(spark, path, partition_by=["day"])
+    m = compact_files(spark, path)
     assert m["files_before"] > m["files_after"]
     got = spark.read.parquet(path)
     assert got.count() == 200
@@ -114,7 +114,7 @@ def test_compaction_recovers_from_interrupted_swap(spark, tmp_path):
 
 
 def test_compaction_splits_large_partition(spark, tmp_path):
-    """With partition_by, a hive partition larger than the target must be
+    """On a partitioned table, a hive partition larger than the target must be
     written as MULTIPLE files (salt + maxRecordsPerFile), not one oversized
     file per partition."""
     path = str(tmp_path / "skewed")
@@ -127,7 +127,7 @@ def test_compaction_splits_large_partition(spark, tmp_path):
         "md5(cast(id AS string)) AS payload")
     (big.union(small)
      .repartition(30).write.partitionBy("part").parquet(path))
-    compact_files(spark, path, target_file_mb=1, partition_by=["part"])
+    compact_files(spark, path, target_file_mb=1)
     big_files = glob.glob(str(tmp_path / "skewed" / "part=big" / "*.parquet"))
     small_files = glob.glob(str(tmp_path / "skewed" / "part=small" / "*.parquet"))
     assert len(big_files) > 1, "large partition must split near the target"
@@ -145,7 +145,7 @@ def test_compact_partitioned_keeps_null_partition_rows(spark, tmp_path):
     rows = [(i, None if i % 3 == 0 else f"d{i % 2}") for i in range(300)]
     df = spark.createDataFrame(rows, "id bigint, day string")
     df.repartition(8).write.partitionBy("day").parquet(path)
-    m = compact_files(spark, path, target_file_mb=64, partition_by=["day"])
+    m = compact_files(spark, path, target_file_mb=64)
     assert m["rows"] == 300
     back = spark.read.parquet(path)
     assert back.count() == 300
@@ -172,7 +172,7 @@ def test_compact_table_is_left_without_a_spark_job(spark, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("compact_noop", "compact_files on a compact table")
     try:
-        m = compact_files(spark, path, target_file_mb=1, partition_by=["day"])
+        m = compact_files(spark, path, target_file_mb=1)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("compact_noop") == []
@@ -191,7 +191,7 @@ def test_compact_rewrites_two_files_in_one_partition(spark, tmp_path):
     df.where("day = 'a'").coalesce(1).write.mode("append") \
       .partitionBy("day").parquet(path)
     before = _files(path)
-    m = compact_files(spark, path, target_file_mb=1, partition_by=["day"])
+    m = compact_files(spark, path, target_file_mb=1)
     assert (m["files_before"], m["files_after"], m["rows"]) == (3, 2, 150)
     assert not set(_files(path)) & set(before)
     assert spark.read.parquet(path).count() == 150
@@ -210,3 +210,61 @@ def test_compact_rewrites_a_file_above_the_target(spark, tmp_path):
     assert m["files_before"] == 1 and m["files_after"] > 1
     assert m["rows"] == 40_000
     assert not set(_files(path)) & set(before)
+
+
+def test_compact_infers_hive_layout(spark, tmp_path):
+    """Without being told the layout, compaction keeps a hive table's
+    ``day=`` directories: two files each become one, with the same rows."""
+    import os
+    path = str(tmp_path / "inferred")
+    df = spark.createDataFrame([(d, i) for d in ("a", "b") for i in range(40)],
+                               "day string, n int")
+    for _ in range(2):
+        df.repartition("day").write.mode("append").partitionBy("day") \
+          .parquet(path)
+    before = sorted(spark.read.parquet(path).collect())
+    m = compact_files(spark, path, target_file_mb=1)
+    assert m["partitions"] == ["day"]
+    assert sorted(d for d in os.listdir(path)
+                  if os.path.isdir(f"{path}/{d}")) == ["day=a", "day=b"]
+    assert not glob.glob(f"{path}/part-*")
+    for day in ("a", "b"):
+        assert len(glob.glob(f"{path}/day={day}/part-*")) == 1, day
+    assert sorted(spark.read.parquet(path).collect()) == before
+
+
+def test_compact_refuses_mixed_layouts_before_reading(spark, tmp_path):
+    """Data files at different partition depths, or under different
+    column names, are refused before any Spark job, and left as they are."""
+    import pytest
+    for name, dirs in (("depths", ["", "/day=a"]),
+                       ("names", ["/day=a", "/month=b"])):
+        path = str(tmp_path / name)
+        for d in dirs:
+            spark.range(3).write.parquet(path + d)
+        before = _files(path)
+        sc = spark.sparkContext
+        sc.setJobGroup("compact_mixed", "compact_files on a mixed layout")
+        try:
+            with pytest.raises(ValueError, match="different partition depths"):
+                compact_files(spark, path, target_file_mb=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("compact_mixed") == []
+        assert _files(path) == before, name
+
+
+def test_compact_ignores_hidden_directories(spark, tmp_path):
+    """A file sink's ``_spark_metadata`` log (and any ``.``/``_`` directory
+    without ``=``) holds no data: it neither counts as a file nor breaks
+    the layout, so a compact table is still left without a read."""
+    import os
+    path = str(tmp_path / "sunk")
+    spark.range(10).coalesce(1).write.parquet(path)
+    for hidden in ("_spark_metadata", ".staging"):
+        os.makedirs(f"{path}/{hidden}")
+        with open(f"{path}/{hidden}/0", "w") as f:
+            f.write("v1\n")
+    m = compact_files(spark, path, target_file_mb=1)
+    assert (m["files_before"], m["files_after"], m["rows"]) == (1, 1, None)
+    assert m["partitions"] == []

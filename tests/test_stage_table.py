@@ -72,3 +72,46 @@ def test_carry_rollups_refuse_carry_parameters_on_a_stream(spark, stream):
         with pytest.raises(ValueError, match="per-bucket-parallel"):
             apply_transformation(stream, spark,
                                  _spec(name, {"hotSplit": "1 day"}))
+
+
+@pytest.mark.parametrize("ts_param", [None, "at"])
+def test_rollup_stream_is_watermarked_once_on_its_ts_column(spark, stream,
+                                                            ts_param):
+    """Each rollup stage watermarks its stream once, on its tsColumn,
+    with the stage's ``watermark`` delay."""
+    import re
+
+    from pyspark.sql import functions as F
+    src = stream.withColumn("at", F.col("ts"))
+    params = {"watermark": "10 minutes"}
+    if ts_param:
+        params["tsColumn"] = ts_param
+    twins = [n for n, s in STAGES.items() if s.twin]
+    assert len(twins) == 10, twins
+    for name in twins:
+        out = apply_transformation(src, spark, _spec(name, params))
+        plan = out._jdf.queryExecution().analyzed().toString()
+        marks = re.findall(r"EventTimeWatermark [^,]+, (\w+)#\d+: "
+                           r"\w+, (.+)", plan)
+        assert marks == [(ts_param or "ts", "10 minutes")], (name, marks)
+
+
+def test_rollups_live_beside_their_batch_operators():
+    """Every rollup stage streams through ``operators.timeseries.
+    <op>_rollup``, which takes an already-watermarked frame: the
+    operators module never watermarks or asks whether a frame streams,
+    and ``streaming.windows`` holds no rollup twin."""
+    import ast
+    import pathlib
+
+    from etl_load_spark.operators import timeseries
+    from etl_load_spark.streaming import windows
+    ops = [s.twin.op for s in STAGES.values() if s.twin]
+    assert all(callable(getattr(timeseries, f"{op}_rollup", None))
+               for op in ops), ops
+    tree = ast.parse(pathlib.Path(timeseries.__file__).read_text())
+    used = {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+    assert not used & {"isStreaming", "withWatermark"}
+    tree = ast.parse(pathlib.Path(windows.__file__).read_text())
+    defined = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+    assert not defined & {f"streaming_{op}" for op in ops}

@@ -49,15 +49,15 @@ def test_session_stream_equals_batch(batch_events, stream_events):
 
 
 def test_ohlc_stream_equals_batch(batch_events, stream_events):
-    """The q174 candlestick rollup run INCREMENTALLY (streaming_ohlc,
+    """The q174 candlestick rollup run INCREMENTALLY (ohlc_rollup,
     watermark + availableNow) equals the batch operator exactly —
     min_by/max_by over the guarded padded key are declarative
     aggregates, so the same plan streams (round 11: the r10 batch-only
     'finalize downstream' recipe, shipped)."""
-    from etl_load_spark.operators.timeseries import ohlc
-    from etl_load_spark.streaming.windows import streaming_ohlc
+    from etl_load_spark.operators.timeseries import ohlc, ohlc_rollup
     batch = ohlc(batch_events)
-    stream = run_available_now(streaming_ohlc(stream_events))
+    stream = run_available_now(ohlc_rollup(
+        stream_events.withWatermark("ts", "30 minutes")))
     cols = ["event_type", "bucket_ts", "open", "high", "low", "close",
             "n_events"]
     assert _rows(stream, cols) == _rows(batch, cols)
@@ -65,27 +65,27 @@ def test_ohlc_stream_equals_batch(batch_events, stream_events):
 
 def test_trend_stream_equals_batch(batch_events, stream_events):
     """q183's five-integer-sum OLS trend streams unchanged
-    (streaming_trend): the fixed-point slope per emitted row equals
+    (trend_rollup): the fixed-point slope per emitted row equals
     the batch operator bit-for-bit."""
-    from etl_load_spark.operators.timeseries import trend
-    from etl_load_spark.streaming.windows import streaming_trend
+    from etl_load_spark.operators.timeseries import trend, trend_rollup
     batch = trend(batch_events)
-    stream = run_available_now(streaming_trend(stream_events))
+    stream = run_available_now(trend_rollup(
+        stream_events.withWatermark("ts", "30 minutes")))
     cols = ["user_id", "bucket_ts", "n_samples", "slope_per_sec"]
     assert _rows(stream, cols) == _rows(batch, cols)
 
 
 def test_value_histogram_stream_equals_batch(batch_events, stream_events):
     """q185's per-bin counts stream unchanged
-    (streaming_value_histogram) — bin assignment is map-side integer
+    (value_histogram_rollup) — bin assignment is map-side integer
     arithmetic, the state is nbins+2 counters per open (key, window)."""
-    from etl_load_spark.operators.timeseries import value_histogram
-    from etl_load_spark.streaming.windows import (
-        streaming_value_histogram,
+    from etl_load_spark.operators.timeseries import (
+        value_histogram, value_histogram_rollup,
     )
     batch = value_histogram(batch_events, lo=0.0, hi=500.0, nbins=10)
-    stream = run_available_now(streaming_value_histogram(
-        stream_events, lo=0.0, hi=500.0, nbins=10))
+    stream = run_available_now(value_histogram_rollup(
+        stream_events.withWatermark("ts", "30 minutes"), lo=0.0, hi=500.0,
+        nbins=10))
     cols = ["user_id", "bucket_ts", "bin", "n_samples"]
     assert _rows(stream, cols) == _rows(batch, cols)
 
@@ -93,27 +93,26 @@ def test_value_histogram_stream_equals_batch(batch_events, stream_events):
 def test_delta_stats_changes_stream_equal_batch(batch_events,
                                                 stream_events):
     """Round-12 operators stream: delta and value_stats are pure
-    aggregates (streaming_delta / streaming_value_stats run the
+    aggregates (delta_rollup / value_stats_rollup run the
     identical rollup under a watermark); changes streams via the
     collect_list fold twin. Each must equal its batch operator
     exactly."""
     from etl_load_spark.operators.timeseries import (
-        changes, delta, value_stats,
-    )
-    from etl_load_spark.streaming.windows import (
-        streaming_changes, streaming_delta, streaming_value_stats,
+        changes, changes_rollup, delta, delta_rollup, value_stats,
+        value_stats_rollup,
     )
     cases = [
-        (delta, streaming_delta,
+        (delta, delta_rollup,
          ["user_id", "bucket_ts", "n_samples", "delta"]),
-        (value_stats, streaming_value_stats,
+        (value_stats, value_stats_rollup,
          ["user_id", "bucket_ts", "n_samples", "mean", "variance"]),
-        (changes, streaming_changes,
+        (changes, changes_rollup,
          ["user_id", "bucket_ts", "n_samples", "n_changes"]),
     ]
     for batch_fn, stream_fn, cols in cases:
         batch = batch_fn(batch_events)
-        stream = run_available_now(stream_fn(stream_events))
+        stream = run_available_now(stream_fn(
+            stream_events.withWatermark("ts", "30 minutes")))
         got, want = _rows(stream, cols), _rows(batch, cols)
         assert got == want and len(got) > 0, batch_fn.__name__
 
@@ -123,20 +122,19 @@ def test_irate_twa_stream_equal_batch(batch_events, stream_events):
     the round-12 collect_list fold twins and must equal their batch
     operators exactly (the carry TWA stays batch-only by design)."""
     from etl_load_spark.operators.timeseries import (
-        instant_rate, time_weighted_avg,
-    )
-    from etl_load_spark.streaming.windows import (
-        streaming_instant_rate, streaming_time_weighted_avg,
+        instant_rate, instant_rate_rollup, time_weighted_avg,
+        time_weighted_avg_rollup,
     )
     cases = [
-        (instant_rate, streaming_instant_rate,
+        (instant_rate, instant_rate_rollup,
          ["user_id", "bucket_ts", "n_samples", "irate_per_sec"]),
-        (time_weighted_avg, streaming_time_weighted_avg,
+        (time_weighted_avg, time_weighted_avg_rollup,
          ["user_id", "bucket_ts", "n_samples", "twa"]),
     ]
     for batch_fn, stream_fn, cols in cases:
         batch = batch_fn(batch_events)
-        stream = run_available_now(stream_fn(stream_events))
+        stream = run_available_now(stream_fn(
+            stream_events.withWatermark("ts", "30 minutes")))
         got, want = _rows(stream, cols), _rows(batch, cols)
         assert got == want and len(got) > 0, batch_fn.__name__
 
@@ -270,11 +268,11 @@ def test_streaming_state_durations_equals_batch(spark, batch_events,
     watermarked collect_list aggregation + a stateless per-bucket fold
     — the batch lead/lag replayed inside the sorted sample array) must
     equal the batch operator exactly."""
-    from etl_load_spark.operators.timeseries import state_durations
-    from etl_load_spark.streaming.windows import (
-        run_available_now, streaming_state_durations,
+    from etl_load_spark.operators.timeseries import (
+        state_durations, state_durations_rollup,
     )
-    stream = run_available_now(streaming_state_durations(stream_events))
+    stream = run_available_now(state_durations_rollup(
+        stream_events.withWatermark("ts", "30 minutes")))
     batch = state_durations(batch_events)
     cols = ["user_id", "bucket_ts", "event_type", "held_ms", "n_entries",
             "n_samples"]
@@ -287,12 +285,11 @@ def test_streaming_heartbeat_uptime_equals_batch(spark, batch_events,
     """The q178 liveness rollup (+ downtime complement) run
     INCREMENTALLY via the round-12 collect_list twin must equal the
     batch operator exactly."""
-    from etl_load_spark.operators.timeseries import heartbeat_uptime
-    from etl_load_spark.streaming.windows import (
-        run_available_now, streaming_heartbeat_uptime,
+    from etl_load_spark.operators.timeseries import (
+        heartbeat_uptime, heartbeat_uptime_rollup,
     )
-    stream = run_available_now(
-        streaming_heartbeat_uptime(stream_events, emit_downtime=True))
+    stream = run_available_now(heartbeat_uptime_rollup(
+        stream_events.withWatermark("ts", "30 minutes"), emit_downtime=True))
     batch = heartbeat_uptime(batch_events, emit_downtime=True)
     cols = ["user_id", "bucket_ts", "n_beats", "uptime_ms", "n_gaps",
             "downtime_ms"]
